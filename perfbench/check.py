@@ -59,10 +59,13 @@ def compare(spark_cols, spark_rows, duck_cols, duck_rows) -> str:
     return ""
 
 
+def _parquet_src(path: Path) -> str:
+    return f"{path}/*.parquet" if path.is_dir() else str(path)
+
+
 def duck_views(con, table_dir: Path, names) -> None:
     for name in names:
-        path = table_dir / f"{name}.parquet"
-        src = f"{path}/*.parquet" if path.is_dir() else str(path)
+        src = _parquet_src(table_dir / f"{name}.parquet")
         con.execute(f"CREATE OR REPLACE VIEW {name} AS SELECT * FROM read_parquet('{src}')")
 
 
@@ -73,10 +76,6 @@ def check_catalog_op(spark_df, rows, oracle: tuple[list, list] | None) -> str:
     if oracle is None:
         return "" if rows else "no rows"
     return compare(spark_df.columns, rows, *oracle)
-
-
-def _parquet_src(path: Path) -> str:
-    return f"{path}/*.parquet" if path.is_dir() else str(path)
 
 
 def snapshot(con, path: Path):

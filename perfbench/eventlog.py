@@ -31,7 +31,6 @@ class GroupStats:
     run_s: float = 0.0
     cpu_s: float = 0.0
     gc_s: float = 0.0
-    input_bytes: int = 0
     input_rows: int = 0
     shuffle_write_bytes: int = 0
     shuffle_read_bytes: int = 0
@@ -49,7 +48,7 @@ class GroupStats:
         for k, v in other.task_durs.items():
             self.task_durs[k] += v
         for name in (
-            "run_s", "cpu_s", "gc_s", "input_bytes", "input_rows",
+            "run_s", "cpu_s", "gc_s", "input_rows",
             "shuffle_write_bytes", "shuffle_read_bytes", "fetch_wait_s", "spill_bytes",
         ):
             setattr(self, name, getattr(self, name) + getattr(other, name))
@@ -129,7 +128,6 @@ def _task_end(ev: dict, st: GroupStats) -> None:
     st.cpu_s += m.get("Executor CPU Time", 0) / 1e9
     st.gc_s += m.get("JVM GC Time", 0) / 1e3
     inp = m.get("Input Metrics") or {}
-    st.input_bytes += inp.get("Bytes Read", 0)
     st.input_rows += inp.get("Records Read", 0)
     sr = m.get("Shuffle Read Metrics") or {}
     st.shuffle_read_bytes += sr.get("Local Bytes Read", 0) + sr.get("Remote Bytes Read", 0)

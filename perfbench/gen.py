@@ -11,22 +11,19 @@ The same seed gives byte-identical files.
 * ``refresh_tables`` writes the raw tables of the stocks and oura model
   families (fixed content, so the marts built from them can be pinned) plus
   seeded upsert batches, one per table per refresh cycle.
-
-    python3 perfbench/gen.py --seed 1 --out .perfbench_run/inputs --sf 0.1
 """
 
 from __future__ import annotations
 
-import argparse
 import datetime as dt
 import hashlib
-import json
-import sys
 from pathlib import Path
 
 import numpy as np
 import pyarrow as pa
 import pyarrow.parquet as pq
+
+CATALOG_SF = 0.1  # the catalog workload's scale factor
 
 # row counts at sf 1; every fact and dimension scales linearly
 _SF1_ROWS = {
@@ -226,13 +223,14 @@ def catalog_tables(seed: int, out: Path, sf: float) -> dict[str, int]:
 # ---------------------------------------------------------------- refresh
 
 REFRESH_TABLES = {
-    # raw key in models.full_dag -> (schema.RAW_SCHEMAS key, merged each cycle)
-    "stock_prices": ("stocks.raw_prices", True),
-    "oura_sleep": ("oura.raw_sleep", True),
-    "oura_readiness": ("oura.raw_daily_readiness", True),
-    "oura_activity": ("oura.raw_daily_activity", False),
-    "oura_sessions": ("oura.raw_sleep_sessions", False),
+    # raw key in models.full_dag -> schema.RAW_SCHEMAS key
+    "stock_prices": "stocks.raw_prices",
+    "oura_sleep": "oura.raw_sleep",
+    "oura_readiness": "oura.raw_daily_readiness",
+    "oura_activity": "oura.raw_daily_activity",
+    "oura_sessions": "oura.raw_sleep_sessions",
 }
+MERGED = ["stock_prices", "oura_sleep", "oura_readiness"]  # upserted each cycle
 _TICKERS = [
     ("AAA", "Technology"),
     ("BBB", "Technology"),
@@ -404,7 +402,7 @@ def refresh_tables(
     }
     rows = {}
     for name, cols in raw.items():
-        table = _table(cols, REFRESH_TABLES[name][0])
+        table = _table(cols, REFRESH_TABLES[name])
         _write(table, out / "raw" / name / "part-0.parquet")
         rows[name] = table.num_rows
 
@@ -414,9 +412,7 @@ def refresh_tables(
         # it produces can be pinned
         rng = np.random.default_rng(0) if cycle == 0 else seeded
         new_day = n_days + cycle
-        for name, (raw_key, merged) in REFRESH_TABLES.items():
-            if not merged:
-                continue
+        for name in MERGED:
             ids = raw[name]["id"]
             upd = sorted(set(rng.choice(len(ids), n_updates, replace=False).tolist()))
             if name == "stock_prices":
@@ -433,7 +429,7 @@ def refresh_tables(
                 kind = name.split("_")[1]
                 idx = [int(ids[i][2:]) for i in upd] + [new_day]
                 batch = _daily_rows(rng, kind, idx)
-            _write(_table(batch, raw_key), out / "batch" / str(cycle) / f"{name}.parquet")
+            _write(_table(batch, REFRESH_TABLES[name]), out / "batch" / str(cycle) / f"{name}.parquet")
     return rows
 
 
@@ -445,22 +441,3 @@ def digest(out: Path) -> str:
         h.update(f.read_bytes())
     return h.hexdigest()
 
-
-def main() -> int:
-    ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
-    ap.add_argument("--seed", type=int, required=True)
-    ap.add_argument("--out", required=True)
-    ap.add_argument("--sf", type=float, default=0.1)
-    args = ap.parse_args()
-    sys.path.insert(0, str(Path(__file__).resolve().parents[1]))  # the engine's schemas
-    out = Path(args.out)
-    rows = catalog_tables(args.seed, out / "catalog", args.sf)
-    rows.update(
-        refresh_tables(args.seed, out / "refresh", REFRESH_DAYS, REFRESH_CYCLES, REFRESH_UPDATES)
-    )
-    print(json.dumps({"rows": rows, "sha256": digest(out)}))
-    return 0
-
-
-if __name__ == "__main__":
-    raise SystemExit(main())

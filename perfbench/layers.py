@@ -12,10 +12,9 @@ from __future__ import annotations
 import statistics
 
 from eventlog import GroupStats, straggler_ratio
+from gen import MERGED
 from spans import Span, self_times, subtree, union_length
-
-MERGED = ["stock_prices", "oura_sleep", "oura_readiness"]
-FAMILIES = ["staging", "stocks", "oura"]
+from workloads import FAMILIES
 
 # name -> unit, in report order
 PER_LAYER = {
@@ -138,7 +137,9 @@ def compute(
         "spark.task_run_s": total.run_s * per,
         "spark.task_cpu_s": total.cpu_s * per,
         "spark.gc_s": total.gc_s * per,
-        "spark.scan_bytes": total.input_bytes * per,
+        # the scan node's file bytes: task input metrics count little more
+        # than parquet footers in local mode
+        "spark.scan_bytes": driver("Scan", "size of files read") * per,
         "spark.scan_rows": total.input_rows * per,
         "spark.scan_files": driver("Scan", "number of files read") * per,
         "spark.shuffle_write_bytes": total.shuffle_write_bytes * per,

@@ -1,6 +1,6 @@
 """Benchmark entry point.
 
-    python3 perfbench/run.py --workload catalog_sf01 --seed 1 --seconds 15 --trace 0
+    python3 perfbench/run.py --workload catalog_sf01 --seed 1 --seconds 5 --trace 0
 
 Run from the repository root. Generates the workload's inputs from the seed
 under ``.perfbench_run/``, starts the engine's Spark session, checks the
@@ -25,7 +25,7 @@ from pathlib import Path
 
 HERE = Path(__file__).resolve().parent
 ROOT = HERE.parent
-SETUPS = 3  # set-ups per run; setup_s is their median
+SETUPS = 2  # cold set-ups per run; setup_s is their median
 
 
 def log(msg: str) -> None:
@@ -179,10 +179,6 @@ def run(args, work: Path, env: dict, trace: bool) -> int:
     from workloads import WORKLOADS, Context, storage_bytes
 
     wl = WORKLOADS[args.workload]()
-    t_gen = time.perf_counter()
-    rows = wl.generate(args.seed, work / "inputs")
-    gen_s = time.perf_counter() - t_gen
-
     from etl_for_dumdums_spark.session import get_spark
 
     def set_group(span_id):
@@ -194,20 +190,26 @@ def run(args, work: Path, env: dict, trace: bool) -> int:
     tracer = Tracer(trace, set_group if trace else None, restore_group if trace else None)
     ctx = Context(None, tracer, log)
 
-    # set-up: session start, registration and one warm-up op, several times
-    setup_times, starts = [], []
+    # set-up, several times and each from cold: generate the inputs, launch
+    # the JVM and start the session, register, one warm-up op. The JVMs of
+    # all but the last set-up are shut down (untimed) before the next one.
+    setup_times, starts, gen_times = [], [], []
     for i in range(SETUPS):
+        if i:
+            shutdown_spark(ctx.spark)
+        shutil.rmtree(work / "inputs", ignore_errors=True)
         t0 = time.perf_counter()
+        rows = wl.generate(args.seed, work / "inputs")
+        t_session = time.perf_counter()
+        gen_times.append(t_session - t0)
         ctx.spark = get_spark("perfbench")
-        starts.append(time.perf_counter() - t0)
         t_reg = time.perf_counter()
+        starts.append(t_reg - t_session)
         wl.register(ctx)
         if i == 0:
             ctx.counters["register_s"] = time.perf_counter() - t_reg
         wl.warmup(ctx)
         setup_times.append(time.perf_counter() - t0)
-        if i < SETUPS - 1:
-            ctx.spark.stop()
     ctx.counters["session_start"] = starts
     app_id = ctx.spark.sparkContext.applicationId
 
@@ -275,8 +277,9 @@ def run(args, work: Path, env: dict, trace: bool) -> int:
         "seed": args.seed,
         "env": env,
         "input_rows": rows,
-        "generate_s": round(gen_s, 3),
+        "generate_s": [round(t, 3) for t in gen_times],
         "setup_times_s": [round(t, 3) for t in setup_times],
+        "session_start_s": [round(t, 3) for t in starts],
         "check_s": round(check_s, 3),
         "check_failures": failures,
         "timed_s": round(timed_s, 3),

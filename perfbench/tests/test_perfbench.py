@@ -34,6 +34,9 @@ def test_parser_on_recorded_log():
     assert st.task_sql["duration"] == 1757.0  # SQL metrics arrive as strings
     assert st.driver_sql[("AQEShuffleRead", "number of partitions")] == 2.0
     assert st.driver_sql[("Scan parquet ", "number of files read")] == 1.0
+    # the scan's file bytes, which spark.scan_bytes reports; the tasks'
+    # input metrics count only a few kB of footers for the same scan
+    assert st.driver_sql[("Scan parquet ", "size of files read")] == 10_889_351
     assert all(b >= a for a, b in st.job_intervals)
 
 
@@ -160,7 +163,7 @@ def test_upsert_batches_are_unique_on_key(tmp_path):
 
     gen.refresh_tables(3, tmp_path, 60, 2, 5)
     for cycle in ("0", "1"):
-        for name in ("stock_prices", "oura_sleep", "oura_readiness"):
+        for name in gen.MERGED:
             ids = pq.read_table(tmp_path / "batch" / cycle / f"{name}.parquet").column("id").to_pylist()
             assert len(ids) == len(set(ids)) > 5
 
