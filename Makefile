@@ -55,12 +55,8 @@ oracle-100x-sampled:
 # - events_sequence_pattern was already sampled-only at 1000x (the full
 #   oracle's serial window over 600M rows OOMs at ~94GB, ROUND4_NOTES).
 ORACLE_1000X_EXCLUDE = $(ORACLE_100X_EXCLUDE),text_winnow_sketch,text_winnow_neardup,join_cooccurrence_pairs,events_sequence_pattern
-# SPARK_GRAFT_MM_MOD=500 keeps the mm_* kernels' deterministic doc_id
-# sample at the same ABSOLUTE count as the green 100x sweep (the rate-
-# fixed default would be ~100k pure-Python payload synths per query per
-# engine); both engines read the same mod, so parity stays strict.
 oracle-1000x:
-	SPARK_GRAFT_MM_MOD=500 python tools/run_oracle_chunked.py --sf /tmp/sfscale1000 \
+	python tools/run_oracle_chunked.py --sf /tmp/sfscale1000 \
 	  --exclude $(ORACLE_1000X_EXCLUDE) --chunk-size 25
 
 oracle-1000x-sampled:

@@ -8,8 +8,6 @@ scalable way — a single ordered window per key, never a range self-join.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
@@ -168,9 +166,9 @@ def stream_tumbling_daily(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------------
-# Multimodal plumbing under the oracle gate: opaque binary payloads (text
-# bytes as the stand-in) with byte-length + digest metadata — the
-# metadata-path of operators/multimodal.py expressed as a query.
+# Binary-column metadata under the oracle gate: opaque binary payloads
+# (text bytes as the stand-in) summarized by byte length and digest in pure
+# Spark built-ins — payloads are never decoded.
 # ---------------------------------------------------------------------------
 @register(
     "mm_binary_stats",
@@ -969,869 +967,4 @@ def win_rank_distributions(spark, sf_dir):
             .alias("median_cume_ppm"),
         )
         .orderBy("segment")
-    )
-
-
-# ---------------------------------------------------------------------------
-# mm_audio_stats — the audio flavor of the multimodal family, with the REAL
-# numpy kernels under the full value oracle. The testdata ships no audio, so
-# each document deterministically synthesizes a raw PCM16 clip (rate 8 kHz,
-# 200 + doc_id % 57 samples, x_i = ((doc_id*31 + i*17) % 4001 - 2000) * 8 —
-# pure integer arithmetic); the Spark side then runs the honest production
-# path: encode_pcm16 → binary Arrow batches → decode_pcm16 + integer clip
-# stats (operators/multimodal.py pcm_stats) → per-language rollup. The
-# oracle restates the same integers in closed form (lateral generate_series
-# + window lead for zero crossings), so the Python kernel's every output
-# value is hash-checked — the strongest claim we can make for a multimodal
-# kernel without codecs in the container.
-#
-# Scale design (100 TB): payloads never leave the executors; stats reduce
-# each clip to 8 integers inside the Arrow batch; the only shuffle is the
-# per-language hash aggregate. floor(sqrt(k)) == isqrt(k) holds exactly for
-# k <= mean-square bound 2.56e8 (double sqrt is correctly rounded and √k is
-# never within an ulp of an integer below 2^52).
-# ---------------------------------------------------------------------------
-_PCM_RATE = 8000
-_PCM_CLIP = 15000
-
-
-@register(
-    "mm_audio_stats",
-    extra=True,
-    sql=f"""
-    WITH docs AS (SELECT doc_id, lang, 200 + doc_id % 57 AS n FROM documents),
-    -- the successor sample nx is stated in closed form instead of
-    -- lead() OVER: the signal is x_i = f(doc_id, i), so x_(i+1) needs no
-    -- window. The lead form sorted the ~1.14B-row explode AND referenced
-    -- it twice (pairs + per), re-running the explode per reference —
-    -- 15GiB spill-cap death at the r8 1000x sweep. Now the explode streams
-    -- through ONE grouped aggregate. lead's partition-end NULL is matched
-    -- by the CASE (x * NULL < 0 is NULL -> count_if false, same as before).
-    samples AS (
-      SELECT d.doc_id, d.lang, d.n, t.i,
-             CAST(((d.doc_id * 31 + t.i * 17) % 4001 - 2000) * 8 AS BIGINT) AS x,
-             CASE WHEN t.i < d.n - 1 THEN
-               CAST(((d.doc_id * 31 + (t.i + 1) * 17) % 4001 - 2000) * 8 AS BIGINT)
-             END AS nx
-      FROM docs d, unnest(generate_series(0, d.n - 1)) AS t(i)),
-    perd AS (
-      SELECT any_value(lang) AS lang, any_value(n) AS n,
-             CAST(any_value(n) * 1000 // {_PCM_RATE} AS BIGINT) AS duration_ms,
-             CAST(max(abs(x)) AS BIGINT) AS peak,
-             CAST(count_if(abs(x) >= {_PCM_CLIP}) AS BIGINT) AS n_clipped,
-             CAST(floor(sqrt(CAST(CAST(sum(x * x) AS BIGINT) // any_value(n)
-                                  AS DOUBLE))) AS BIGINT) AS rms_int,
-             CAST(count_if(x * nx < 0) AS BIGINT) AS zero_cross
-      FROM samples GROUP BY doc_id)
-    SELECT lang,
-           CAST(count(*) AS BIGINT) AS n_clips,
-           CAST(sum(n) AS BIGINT) AS total_samples,
-           CAST(sum(duration_ms) AS BIGINT) AS total_ms,
-           CAST(sum(rms_int) // count(*) AS BIGINT) AS avg_rms_int,
-           CAST(sum(zero_cross) AS BIGINT) AS total_zero_cross,
-           CAST(sum(n_clipped) AS BIGINT) AS total_clipped,
-           CAST(max(peak) AS BIGINT) AS max_peak
-    FROM perd GROUP BY lang ORDER BY lang
-    """,
-)
-def mm_audio_stats(spark, sf_dir):
-    import pandas as pd  # noqa: F811
-
-    from pyspark.sql import types as T2
-
-    from ..operators.multimodal import encode_pcm16, pcm_stats
-
-    t = Tables(spark, sf_dir)
-    docs = t.documents.select("doc_id", "lang")
-
-    def synth(batches):
-        import numpy as np
-
-        for pdf in batches:
-            payloads = []
-            for d in pdf["doc_id"]:
-                n = 200 + int(d) % 57
-                i = np.arange(n, dtype=np.int64)
-                x = ((int(d) * 31 + i * 17) % 4001 - 2000) * 8
-                payloads.append(encode_pcm16(x.astype("<i2"), _PCM_RATE))
-            yield pd.DataFrame({"media_id": pdf["doc_id"], "payload": payloads})
-
-    media = docs.select("doc_id").mapInPandas(
-        synth,
-        schema=T2.StructType(
-            [
-                T2.StructField("media_id", T2.LongType(), False),
-                T2.StructField("payload", T2.BinaryType(), True),
-            ]
-        ),
-    )
-    stats = pcm_stats(media, clip_abs=_PCM_CLIP)
-    joined = stats.join(docs, stats["media_id"] == docs["doc_id"])
-    return (
-        joined.groupBy("lang")
-        .agg(
-            F.count("*").cast("long").alias("n_clips"),
-            F.sum("n_samples").cast("long").alias("total_samples"),
-            F.sum("duration_ms").cast("long").alias("total_ms"),
-            F.expr("CAST(sum(rms_int) div count(*) AS BIGINT)").alias("avg_rms_int"),
-            F.sum("zero_cross").cast("long").alias("total_zero_cross"),
-            F.sum("n_clipped").cast("long").alias("total_clipped"),
-            F.max("peak").cast("long").alias("max_peak"),
-        )
-        .orderBy("lang")
-    )
-
-
-# ---------------------------------------------------------------------------
-# mm_codec_roundtrip — the REAL codec layer (operators/codecs.py) under the
-# full value oracle. Each sampled document deterministically synthesizes a
-# 16x16 RGB image (pixel i = (doc_id*31 + i*7) % 256) and a 256-sample
-# int16 clip (sample i = (doc_id*13 + i*11) % 65536 - 32768), pushes them
-# through the HONEST production path — encode_png → PNG bytes → decode_png
-# (zlib inflate + un-filtering), encode_wav → RIFF bytes → decode_wav — and
-# reduces each decoded asset to exact integer sums. A third leg covers the
-# LOSSY codec (operators/jpeg.py): a 16x16 image of four flat 8x8 quadrants
-# (value_q = (doc_id*7 + q*50) % 256) is encoded at quality 95 and decoded
-# back — a flat block is DC-only, and at q95 the worst-case reconstruction
-# error (0.5 * q_step/8 through the YCbCr matrix, <= 0.347 in the blue
-# channel) rounds away, so the JPEG roundtrip is EXACT by analysis and the
-# oracle can state sum = 192 * sum(value_q) in closed form. The oracle
-# restates all the integers, so a single flipped byte anywhere in any of
-# the three codecs breaks the hash: the roundtrips are PROVEN on every
-# sampled doc, per run, in both engines' eyes.
-#
-# Scale design (100 TB): payload bytes never leave the executors (each
-# asset reduces to two integers inside the Arrow batch); the deterministic
-# doc_id % 50 sample bounds per-task Python work; the only shuffle is the
-# one-row global aggregate.
-# ---------------------------------------------------------------------------
-# The mm_* kernels sample documents at a fixed RATE (doc_id % MOD), so
-# their per-engine Python decode work scales linearly with the corpus. At
-# the 1000x replica that rate-fixed sample is ~100k payload synths per
-# query per engine — hours of pure-Python codec work in the DuckDB-side
-# restatement alone. SPARK_GRAFT_MM_MOD raises the mod for at-scale
-# sweeps (Makefile oracle-1000x uses 500 → the same absolute sample count
-# as the green 100x sweep); BOTH engines read the same value at import
-# time, so the comparison stays strict value parity on the same
-# deterministic key subset — the sampled-tier philosophy. Default 50
-# keeps every driver-facing and sf0.001-0.1 artifact byte-stable.
-_MM_MOD = int(os.environ.get("SPARK_GRAFT_MM_MOD", "50"))
-_CODEC_MOD = _MM_MOD
-_CODEC_PX = 16 * 16 * 3
-_CODEC_SAMP = 256
-
-
-@register(
-    "mm_codec_roundtrip",
-    extra=True,
-    sql=f"""
-    WITH ids AS (SELECT doc_id FROM documents WHERE doc_id % {_CODEC_MOD} = 0),
-    per AS (
-      SELECT doc_id,
-             CAST(sum((doc_id * 31 + t.i * 7) % 256) AS BIGINT) AS px_sum
-      FROM ids, unnest(generate_series(0, {_CODEC_PX} - 1)) AS t(i)
-      GROUP BY doc_id),
-    pera AS (
-      SELECT doc_id,
-             CAST(sum((doc_id * 13 + t.i * 11) % 65536 - 32768) AS BIGINT)
-               AS samp_sum
-      FROM ids, unnest(generate_series(0, {_CODEC_SAMP} - 1)) AS t(i)
-      GROUP BY doc_id),
-    perj AS (
-      SELECT doc_id,
-             CAST(sum(192 * ((doc_id * 7 + t.q * 50) % 256)) AS BIGINT) AS jpx_sum
-      FROM ids, unnest(generate_series(0, 3)) AS t(q)
-      GROUP BY doc_id)
-    SELECT CAST(count(*) AS BIGINT)       AS n_assets,
-           CAST(sum(px_sum) AS BIGINT)    AS total_px_sum,
-           CAST(min(px_sum) AS BIGINT)    AS min_px_sum,
-           CAST(max(px_sum) AS BIGINT)    AS max_px_sum,
-           CAST(sum(samp_sum) AS BIGINT)  AS total_samp_sum,
-           CAST(min(samp_sum) AS BIGINT)  AS min_samp_sum,
-           CAST(max(samp_sum) AS BIGINT)  AS max_samp_sum,
-           CAST(sum(jpx_sum) AS BIGINT)   AS total_jpx_sum,
-           CAST(min(jpx_sum) AS BIGINT)   AS min_jpx_sum,
-           CAST(max(jpx_sum) AS BIGINT)   AS max_jpx_sum
-    FROM per JOIN pera USING (doc_id) JOIN perj USING (doc_id)
-    """,
-)
-def mm_codec_roundtrip(spark, sf_dir):
-    import pandas as pd  # noqa: F811
-
-    t = Tables(spark, sf_dir)
-    ids = t.documents.select("doc_id").filter(F.col("doc_id") % _CODEC_MOD == 0)
-
-    def roundtrip(batches):
-        import numpy as np
-
-        from ..operators.codecs import (
-            decode_png,
-            decode_wav,
-            encode_png,
-            encode_wav,
-        )
-        from ..operators.jpeg import decode_jpeg, encode_jpeg
-
-        for pdf in batches:
-            out_ids, px_sums, samp_sums, jpx_sums = [], [], [], []
-            for d in pdf["doc_id"]:
-                d = int(d)
-                i = np.arange(_CODEC_PX, dtype=np.int64)
-                px = ((d * 31 + i * 7) % 256).astype(np.uint8).reshape(16, 16, 3)
-                back = decode_png(encode_png(px))
-                j = np.arange(_CODEC_SAMP, dtype=np.int64)
-                samples = ((d * 13 + j * 11) % 65536 - 32768).astype("<i2")
-                _rate, _ch, aback = decode_wav(encode_wav(samples, 16000))
-                # JPEG leg: four flat 8x8 quadrants — DC-only, exact at q95
-                jimg = np.zeros((16, 16, 3), dtype=np.uint8)
-                for q, (y0, x0) in enumerate(((0, 0), (0, 8), (8, 0), (8, 8))):
-                    jimg[y0 : y0 + 8, x0 : x0 + 8, :] = (d * 7 + q * 50) % 256
-                jback = decode_jpeg(encode_jpeg(jimg, quality=95))
-                out_ids.append(d)
-                px_sums.append(int(back.astype(np.int64).sum()))
-                samp_sums.append(int(aback.astype(np.int64).sum()))
-                jpx_sums.append(int(jback.astype(np.int64).sum()))
-            yield pd.DataFrame(
-                {
-                    "doc_id": out_ids,
-                    "px_sum": px_sums,
-                    "samp_sum": samp_sums,
-                    "jpx_sum": jpx_sums,
-                }
-            )
-
-    per = ids.mapInPandas(
-        roundtrip, schema="doc_id long, px_sum long, samp_sum long, jpx_sum long"
-    )
-    return per.agg(
-        F.count("*").cast("long").alias("n_assets"),
-        F.sum("px_sum").cast("long").alias("total_px_sum"),
-        F.min("px_sum").cast("long").alias("min_px_sum"),
-        F.max("px_sum").cast("long").alias("max_px_sum"),
-        F.sum("samp_sum").cast("long").alias("total_samp_sum"),
-        F.min("samp_sum").cast("long").alias("min_samp_sum"),
-        F.max("samp_sum").cast("long").alias("max_samp_sum"),
-        F.sum("jpx_sum").cast("long").alias("total_jpx_sum"),
-        F.min("jpx_sum").cast("long").alias("min_jpx_sum"),
-        F.max("jpx_sum").cast("long").alias("max_jpx_sum"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# mm_video_frame_stats — the VIDEO layer (operators/video.py) under the
-# full value oracle. Each sampled document synthesizes an 8-frame 16x16
-# MJPEG AVI (frame f = four flat 8x8 quadrants, value_q(f) =
-# (doc_id*7 + f*29 + q*50) % 256 — DC-only blocks, exact at quality 95 by
-# the mm_codec_roundtrip analysis), then the production path runs:
-# probe_avi reads header-only metadata, decode_avi INDEX-SEEKS frames
-# 0/3/6 through the idx1 index (unsampled frames are never
-# entropy-decoded), and each decoded frame reduces to an exact integer
-# sum = 192 * sum_q value_q. The oracle restates the sums in closed form,
-# so a flipped byte anywhere in the RIFF muxer, the idx1 seek, or the
-# JPEG codec breaks the hash.
-#
-# Scale design (100 TB): payload bytes never leave the executors (the
-# synthesize->mux->probe->seek->decode chain is two chained mapInPandas
-# in ONE stage — no shuffle carries video bytes); the deterministic
-# doc_id % _VID_MOD sample bounds per-task Python work; the only shuffle
-# is the one-row global aggregate. Frame sampling cost is O(sampled),
-# not O(n_frames) — the idx1 seek is the point.
-# ---------------------------------------------------------------------------
-_VID_MOD = _MM_MOD
-_VID_FRAMES = 8
-_VID_EVERY = 3  # sampled frame indices: 0, 3, 6
-
-
-@register(
-    "mm_video_frame_stats",
-    extra=True,
-    sql=f"""
-    WITH ids AS (SELECT doc_id FROM documents WHERE doc_id % {_VID_MOD} = 0),
-    per_frame AS (
-      SELECT doc_id, t.f,
-             CAST(sum(192 * ((doc_id * 7 + t.f * 29 + q.q * 50) % 256))
-                  AS BIGINT) AS fsum
-      FROM ids,
-           unnest(generate_series(0, {_VID_FRAMES - 1}, {_VID_EVERY})) AS t(f),
-           unnest(generate_series(0, 3)) AS q(q)
-      GROUP BY doc_id, t.f),
-    per AS (
-      SELECT doc_id,
-             CAST(sum(fsum) AS BIGINT) AS px_sum,
-             CAST(max(fsum) AS BIGINT) AS frame_max
-      FROM per_frame GROUP BY doc_id)
-    SELECT CAST(count(*) AS BIGINT)                          AS n_videos,
-           CAST(count(*) * {_VID_FRAMES} AS BIGINT)          AS total_frames,
-           CAST(count(*) * {(_VID_FRAMES + _VID_EVERY - 1) // _VID_EVERY}
-                AS BIGINT)                                   AS total_sampled,
-           CAST(sum(px_sum) AS BIGINT)                       AS total_px_sum,
-           CAST(min(px_sum) AS BIGINT)                       AS min_px_sum,
-           CAST(max(px_sum) AS BIGINT)                       AS max_px_sum,
-           CAST(max(frame_max) AS BIGINT)                    AS max_frame_sum,
-           CAST(16 AS BIGINT)                                AS width,
-           CAST(16 AS BIGINT)                                AS height,
-           CAST(30 AS BIGINT)                                AS fps
-    FROM per
-    """,
-)
-def mm_video_frame_stats(spark, sf_dir):
-    import pandas as pd
-
-    t = Tables(spark, sf_dir)
-    ids = t.documents.select("doc_id").filter(F.col("doc_id") % _VID_MOD == 0)
-
-    def synth(batches):
-        import numpy as np
-
-        from ..operators.video import encode_avi
-
-        for pdf in batches:
-            payloads = []
-            for d in pdf["doc_id"]:
-                d = int(d)
-                frames = []
-                for f in range(_VID_FRAMES):
-                    img = np.zeros((16, 16, 3), dtype=np.uint8)
-                    for q, (y0, x0) in enumerate(((0, 0), (0, 8), (8, 0), (8, 8))):
-                        img[y0 : y0 + 8, x0 : x0 + 8, :] = (d * 7 + f * 29 + q * 50) % 256
-                    frames.append(img)
-                payloads.append(encode_avi(frames, fps=30, codec="MJPG", quality=95))
-            yield pd.DataFrame({"media_id": pdf["doc_id"], "payload": payloads})
-
-    from ..operators.video import video_stats
-
-    media = ids.mapInPandas(synth, schema="media_id long, payload binary")
-    stats = video_stats(media, every_k=_VID_EVERY)
-    return stats.agg(
-        F.count("*").cast("long").alias("n_videos"),
-        F.sum("n_frames").cast("long").alias("total_frames"),
-        F.sum("n_sampled").cast("long").alias("total_sampled"),
-        F.sum("sampled_px_sum").cast("long").alias("total_px_sum"),
-        F.min("sampled_px_sum").cast("long").alias("min_px_sum"),
-        F.max("sampled_px_sum").cast("long").alias("max_px_sum"),
-        F.max("sampled_px_max").cast("long").alias("max_frame_sum"),
-        F.max("width").cast("long").alias("width"),
-        F.max("height").cast("long").alias("height"),
-        F.max("fps").cast("long").alias("fps"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# mm_image_formats — GIF + BMP (operators/gif.py) + TIFF (operators/
-# tiff.py) under the full value oracle, completing the image-codec set's
-# oracle coverage (PNG/WAV/JPEG: mm_codec_roundtrip; AVI:
-# mm_video_frame_stats). Each sampled document synthesizes (a) a 12x12
-# four-color image (palette index of pixel i = (doc_id*3 + i) % 4,
-# color c = gray level (doc_id*11 + c*71) % 256), pushed through
-# encode_gif -> LZW-compressed GIF89a -> decode_gif, (b) a 12x12
-# truecolor image (channel ch of pixel i = (doc_id*13 + i*5 + ch*17)
-# % 256) through encode_bmp -> BI_RGB BMP -> decode_bmp, and (c) a 12x12
-# truecolor image ((doc_id*19 + i*7 + ch*29) % 256) through encode_tiff
-# with TIFF-variant LZW (MSB-first, early change) + horizontal predictor
-# -> decode_tiff. All three formats are lossless, so the oracle restates
-# every decoded sum in closed form: a flipped bit anywhere in either LZW
-# coder, the palette builder, the predictor, or the raster logic breaks
-# the hash.
-#
-# Scale design (100 TB): identical to the codec/video legs — payload
-# bytes never leave the executors, each asset reduces to one integer in
-# the Arrow batch, doc_id % _IMG_MOD bounds per-task Python work, one
-# single-row aggregate shuffle.
-# ---------------------------------------------------------------------------
-_IMG_MOD = _MM_MOD
-_IMG_PX = 12 * 12
-
-
-@register(
-    "mm_image_formats",
-    extra=True,
-    sql=f"""
-    WITH ids AS (SELECT doc_id FROM documents WHERE doc_id % {_IMG_MOD} = 0),
-    g AS (
-      SELECT doc_id,
-             CAST(sum(3 * ((doc_id * 11 + ((doc_id * 3 + t.i) % 4) * 71) % 256))
-                  AS BIGINT) AS gif_sum
-      FROM ids, unnest(generate_series(0, {_IMG_PX - 1})) AS t(i)
-      GROUP BY doc_id),
-    b AS (
-      SELECT doc_id,
-             CAST(sum((doc_id * 13 + t.i * 5 + c.c * 17) % 256) AS BIGINT)
-               AS bmp_sum
-      FROM ids,
-           unnest(generate_series(0, {_IMG_PX - 1})) AS t(i),
-           unnest(generate_series(0, 2)) AS c(c)
-      GROUP BY doc_id),
-    tf AS (
-      SELECT doc_id,
-             CAST(sum((doc_id * 19 + t.i * 7 + c.c * 29) % 256) AS BIGINT)
-               AS tiff_sum
-      FROM ids,
-           unnest(generate_series(0, {_IMG_PX - 1})) AS t(i),
-           unnest(generate_series(0, 2)) AS c(c)
-      GROUP BY doc_id)
-    SELECT CAST(count(*) AS BIGINT)      AS n_images,
-           CAST(sum(gif_sum) AS BIGINT)  AS total_gif_sum,
-           CAST(min(gif_sum) AS BIGINT)  AS min_gif_sum,
-           CAST(max(gif_sum) AS BIGINT)  AS max_gif_sum,
-           CAST(sum(bmp_sum) AS BIGINT)  AS total_bmp_sum,
-           CAST(min(bmp_sum) AS BIGINT)  AS min_bmp_sum,
-           CAST(max(bmp_sum) AS BIGINT)  AS max_bmp_sum,
-           CAST(sum(tiff_sum) AS BIGINT) AS total_tiff_sum,
-           CAST(min(tiff_sum) AS BIGINT) AS min_tiff_sum,
-           CAST(max(tiff_sum) AS BIGINT) AS max_tiff_sum
-    FROM g JOIN b USING (doc_id) JOIN tf USING (doc_id)
-    """,
-)
-def mm_image_formats(spark, sf_dir):
-    import pandas as pd
-
-    t = Tables(spark, sf_dir)
-    ids = t.documents.select("doc_id").filter(F.col("doc_id") % _IMG_MOD == 0)
-
-    def roundtrip(batches):
-        import numpy as np
-
-        from ..operators.gif import decode_bmp, decode_gif, encode_bmp, encode_gif
-        from ..operators.tiff import decode_tiff, encode_tiff
-
-        for pdf in batches:
-            out_ids, gif_sums, bmp_sums, tiff_sums = [], [], [], []
-            for d in pdf["doc_id"]:
-                d = int(d)
-                i = np.arange(_IMG_PX, dtype=np.int64)
-                gray = ((d * 11 + ((d * 3 + i) % 4) * 71) % 256).astype(np.uint8)
-                gimg = np.repeat(gray, 3).reshape(12, 12, 3)
-                frames, _delays = decode_gif(encode_gif(gimg))
-                gif_sums.append(int(frames[0][:, :, :3].astype(np.int64).sum()))
-                ch = np.arange(3, dtype=np.int64)
-                bimg = ((d * 13 + i[:, None] * 5 + ch[None, :] * 17) % 256).astype(
-                    np.uint8
-                ).reshape(12, 12, 3)
-                bmp_sums.append(int(decode_bmp(encode_bmp(bimg)).astype(np.int64).sum()))
-                timg = ((d * 19 + i[:, None] * 7 + ch[None, :] * 29) % 256).astype(
-                    np.uint8
-                ).reshape(12, 12, 3)
-                tback = decode_tiff(encode_tiff(timg, compression="lzw", predictor=True))
-                tiff_sums.append(int(tback.astype(np.int64).sum()))
-                out_ids.append(d)
-            yield pd.DataFrame(
-                {
-                    "doc_id": out_ids,
-                    "gif_sum": gif_sums,
-                    "bmp_sum": bmp_sums,
-                    "tiff_sum": tiff_sums,
-                }
-            )
-
-    per = ids.mapInPandas(
-        roundtrip, schema="doc_id long, gif_sum long, bmp_sum long, tiff_sum long"
-    )
-    return per.agg(
-        F.count("*").cast("long").alias("n_images"),
-        F.sum("gif_sum").cast("long").alias("total_gif_sum"),
-        F.min("gif_sum").cast("long").alias("min_gif_sum"),
-        F.max("gif_sum").cast("long").alias("max_gif_sum"),
-        F.sum("bmp_sum").cast("long").alias("total_bmp_sum"),
-        F.min("bmp_sum").cast("long").alias("min_bmp_sum"),
-        F.max("bmp_sum").cast("long").alias("max_bmp_sum"),
-        F.sum("tiff_sum").cast("long").alias("total_tiff_sum"),
-        F.min("tiff_sum").cast("long").alias("min_tiff_sum"),
-        F.max("tiff_sum").cast("long").alias("max_tiff_sum"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# mm_image_formats_2 — the late-r6 codec paths (ICO favicons, BMP
-# BI_RLE8/BI_RLE4, tiled TIFF, new-style JPEG-in-TIFF) under the full
-# value oracle, completing oracle coverage for every image decoder family
-# (r6 verdict item #2: these were pytest-only). Per sampled doc_id d:
-#   (a) ICO: a 12x12 RGBA image (ch of pixel i = (d*17 + i*3 + ch*23)
-#       % 256, alpha 255) through encode_ico -> 32-bit ICO-DIB ->
-#       decode_ico; sum of the RGB planes.
-#   (b) BMP RLE8: 12x12 indices idx(i) = (d*5 + i) % 97 over a 97-entry
-#       gray palette g(j) = (d*13 + j*37) % 256, through encode_bmp_rle
-#       -> BI_RLE8 -> decode_bmp; sum = 3 * sum g(idx(i)).
-#   (c) BMP RLE4: idx4(i) = (d*3 + i) % 16, g4(j) = (d*11 + j*29) % 256,
-#       the 4-bit nibble-packed twin.
-#   (d) tiled TIFF: a 20x28 RGB image (ch of pixel i = (d*19 + i*7 +
-#       ch*29) % 256) — NOT multiples of 16, so right/bottom edge tiles
-#       are padded and cropped — through encode_tiff(tiled, LZW,
-#       predictor) -> decode_tiff.
-#   (e) JPEG-in-TIFF: the mm_codec_roundtrip flat-quadrant argument
-#       (four 8x8 quadrants value_q = (d*9 + q*47) % 256 are DC-only at
-#       q95, reconstruction error < 0.5 rounds away → EXACT), wrapped as
-#       compression-7 TIFF; sum = 192 * sum value_q.
-# Legs a-d are lossless and leg e exact-by-analysis, so the oracle
-# restates every decoded sum in closed form: one flipped bit in the RLE
-# coder, the ICO mask layout, the tile padding/cropping, the per-tile
-# predictor, or the TIFF<->JPEG splice breaks the hash.
-#
-# Scale design (100 TB): identical to the other mm_* legs — payload
-# bytes never leave the executors, each asset reduces to one integer per
-# leg inside the Arrow batch, doc_id % _IMG_MOD bounds per-task Python
-# work, one single-row aggregate shuffle.
-# ---------------------------------------------------------------------------
-_IMG2_PX = 12 * 12
-_TT_H, _TT_W = 20, 28
-
-
-@register(
-    "mm_image_formats_2",
-    extra=True,
-    sql=f"""
-    WITH ids AS (SELECT doc_id FROM documents WHERE doc_id % {_IMG_MOD} = 0),
-    ico AS (
-      SELECT doc_id,
-             CAST(sum((doc_id * 17 + t.i * 3 + c.c * 23) % 256) AS BIGINT)
-               AS ico_sum
-      FROM ids,
-           unnest(generate_series(0, {_IMG2_PX - 1})) AS t(i),
-           unnest(generate_series(0, 2)) AS c(c)
-      GROUP BY doc_id),
-    r8 AS (
-      SELECT doc_id,
-             CAST(sum(3 * ((doc_id * 13 + ((doc_id * 5 + t.i) % 97) * 37) % 256))
-                  AS BIGINT) AS rle8_sum
-      FROM ids, unnest(generate_series(0, {_IMG2_PX - 1})) AS t(i)
-      GROUP BY doc_id),
-    r4 AS (
-      SELECT doc_id,
-             CAST(sum(3 * ((doc_id * 11 + ((doc_id * 3 + t.i) % 16) * 29) % 256))
-                  AS BIGINT) AS rle4_sum
-      FROM ids, unnest(generate_series(0, {_IMG2_PX - 1})) AS t(i)
-      GROUP BY doc_id),
-    tt AS (
-      SELECT doc_id,
-             CAST(sum((doc_id * 19 + t.i * 7 + c.c * 29) % 256) AS BIGINT)
-               AS ttiff_sum
-      FROM ids,
-           unnest(generate_series(0, {_TT_H * _TT_W - 1})) AS t(i),
-           unnest(generate_series(0, 2)) AS c(c)
-      GROUP BY doc_id),
-    jt AS (
-      SELECT doc_id,
-             CAST(sum(192 * ((doc_id * 9 + t.q * 47) % 256)) AS BIGINT)
-               AS jtiff_sum
-      FROM ids, unnest(generate_series(0, 3)) AS t(q)
-      GROUP BY doc_id)
-    SELECT CAST(count(*) AS BIGINT)        AS n_images,
-           CAST(sum(ico_sum) AS BIGINT)    AS total_ico_sum,
-           CAST(min(ico_sum) AS BIGINT)    AS min_ico_sum,
-           CAST(max(ico_sum) AS BIGINT)    AS max_ico_sum,
-           CAST(sum(rle8_sum) AS BIGINT)   AS total_rle8_sum,
-           CAST(min(rle8_sum) AS BIGINT)   AS min_rle8_sum,
-           CAST(max(rle8_sum) AS BIGINT)   AS max_rle8_sum,
-           CAST(sum(rle4_sum) AS BIGINT)   AS total_rle4_sum,
-           CAST(min(rle4_sum) AS BIGINT)   AS min_rle4_sum,
-           CAST(max(rle4_sum) AS BIGINT)   AS max_rle4_sum,
-           CAST(sum(ttiff_sum) AS BIGINT)  AS total_ttiff_sum,
-           CAST(min(ttiff_sum) AS BIGINT)  AS min_ttiff_sum,
-           CAST(max(ttiff_sum) AS BIGINT)  AS max_ttiff_sum,
-           CAST(sum(jtiff_sum) AS BIGINT)  AS total_jtiff_sum,
-           CAST(min(jtiff_sum) AS BIGINT)  AS min_jtiff_sum,
-           CAST(max(jtiff_sum) AS BIGINT)  AS max_jtiff_sum
-    FROM ico JOIN r8 USING (doc_id) JOIN r4 USING (doc_id)
-             JOIN tt USING (doc_id) JOIN jt USING (doc_id)
-    """,
-)
-def mm_image_formats_2(spark, sf_dir):
-    import pandas as pd
-
-    t = Tables(spark, sf_dir)
-    ids = t.documents.select("doc_id").filter(F.col("doc_id") % _IMG_MOD == 0)
-
-    def roundtrip(batches):
-        import numpy as np
-
-        from ..operators.gif import (
-            decode_bmp,
-            decode_ico,
-            encode_bmp_rle,
-            encode_ico,
-        )
-        from ..operators.tiff import decode_tiff, encode_tiff
-
-        for pdf in batches:
-            out = {
-                "doc_id": [],
-                "ico_sum": [],
-                "rle8_sum": [],
-                "rle4_sum": [],
-                "ttiff_sum": [],
-                "jtiff_sum": [],
-            }
-            for d in pdf["doc_id"]:
-                d = int(d)
-                i = np.arange(_IMG2_PX, dtype=np.int64)
-                ch = np.arange(3, dtype=np.int64)
-                # (a) ICO
-                rgba = np.full((_IMG2_PX, 4), 255, dtype=np.uint8)
-                rgba[:, :3] = (d * 17 + i[:, None] * 3 + ch[None, :] * 23) % 256
-                back = decode_ico(encode_ico(rgba.reshape(12, 12, 4)))
-                ico_sum = int(back[:, :, :3].astype(np.int64).sum())
-                # (b) BMP RLE8
-                idx8 = ((d * 5 + i) % 97).astype(np.uint8).reshape(12, 12)
-                pal8 = np.repeat(
-                    ((d * 13 + np.arange(97, dtype=np.int64) * 37) % 256).astype(
-                        np.uint8
-                    ),
-                    3,
-                ).reshape(97, 3)
-                rle8_sum = int(
-                    decode_bmp(encode_bmp_rle(idx8, pal8)).astype(np.int64).sum()
-                )
-                # (c) BMP RLE4
-                idx4 = ((d * 3 + i) % 16).astype(np.uint8).reshape(12, 12)
-                pal4 = np.repeat(
-                    ((d * 11 + np.arange(16, dtype=np.int64) * 29) % 256).astype(
-                        np.uint8
-                    ),
-                    3,
-                ).reshape(16, 3)
-                rle4_sum = int(
-                    decode_bmp(encode_bmp_rle(idx4, pal4, four_bit=True))
-                    .astype(np.int64)
-                    .sum()
-                )
-                # (d) tiled TIFF, padded edge tiles
-                it = np.arange(_TT_H * _TT_W, dtype=np.int64)
-                timg = (
-                    ((d * 19 + it[:, None] * 7 + ch[None, :] * 29) % 256)
-                    .astype(np.uint8)
-                    .reshape(_TT_H, _TT_W, 3)
-                )
-                tback = decode_tiff(
-                    encode_tiff(timg, tiled=True, compression="lzw", predictor=True)
-                )
-                ttiff_sum = int(tback.astype(np.int64).sum())
-                # (e) JPEG-in-TIFF, flat quadrants → exact at q95
-                jimg = np.zeros((16, 16, 3), dtype=np.uint8)
-                for q, (y0, x0) in enumerate(((0, 0), (0, 8), (8, 0), (8, 8))):
-                    jimg[y0 : y0 + 8, x0 : x0 + 8, :] = (d * 9 + q * 47) % 256
-                jback = decode_tiff(encode_tiff(jimg, compression="jpeg"))
-                jtiff_sum = int(jback.astype(np.int64).sum())
-                out["doc_id"].append(d)
-                out["ico_sum"].append(ico_sum)
-                out["rle8_sum"].append(rle8_sum)
-                out["rle4_sum"].append(rle4_sum)
-                out["ttiff_sum"].append(ttiff_sum)
-                out["jtiff_sum"].append(jtiff_sum)
-            yield pd.DataFrame(out)
-
-    per = ids.mapInPandas(
-        roundtrip,
-        schema=(
-            "doc_id long, ico_sum long, rle8_sum long, rle4_sum long, "
-            "ttiff_sum long, jtiff_sum long"
-        ),
-    )
-    aggs = [F.count("*").cast("long").alias("n_images")]
-    for leg in ("ico", "rle8", "rle4", "ttiff", "jtiff"):
-        aggs += [
-            F.sum(f"{leg}_sum").cast("long").alias(f"total_{leg}_sum"),
-            F.min(f"{leg}_sum").cast("long").alias(f"min_{leg}_sum"),
-            F.max(f"{leg}_sum").cast("long").alias(f"max_{leg}_sum"),
-        ]
-    return per.agg(*aggs)
-
-
-# ---------------------------------------------------------------------------
-# mm_webp_probe — the WebP container layer (operators/webp.py) under the
-# full value oracle. Pixel decode is honestly gated (no VP8L stream in
-# the container to verify a decoder against — webp.py docstring), but
-# the metadata path a crawl pipeline actually runs FIRST — identify,
-# dimensions, alpha/animation flags, frame counts, all without touching
-# pixels — is real and provable: per sampled doc_id d the kernel muxes
-# (a) a VP8L-headered RIFF (w = 1 + d*7 % 2000, h = 1 + d*11 % 1500,
-# alpha iff d % 3 == 0) and (b) an animated VP8X container (canvas
-# 1 + d*13 % 4000 x 1 + d*17 % 3000 with 1 + d % 5 ANMF frames), probes
-# both, and the oracle restates every extracted field in closed form —
-# a flipped bit in the 14-bit dim unpacking, the minus-one encodings,
-# the flag masks, or ANMF counting breaks the hash.
-#
-# Scale design (100 TB): header-only parsing, payloads never leave the
-# executors, one single-row aggregate shuffle.
-# ---------------------------------------------------------------------------
-@register(
-    "mm_webp_probe",
-    extra=True,
-    sql=f"""
-    WITH ids AS (SELECT doc_id FROM documents WHERE doc_id % {_MM_MOD} = 0),
-    per AS (
-      SELECT doc_id,
-             1 + doc_id * 7 % 2000   AS l_w,
-             1 + doc_id * 11 % 1500  AS l_h,
-             CASE WHEN doc_id % 3 = 0 THEN 1 ELSE 0 END AS l_alpha,
-             1 + doc_id * 13 % 4000  AS x_w,
-             1 + doc_id * 17 % 3000  AS x_h,
-             1 + doc_id % 5          AS x_frames
-      FROM ids)
-    SELECT CAST(count(*) AS BIGINT)        AS n_probes,
-           CAST(sum(l_w) AS BIGINT)        AS total_l_width,
-           CAST(sum(l_h) AS BIGINT)        AS total_l_height,
-           CAST(sum(l_alpha) AS BIGINT)    AS n_l_alpha,
-           CAST(sum(x_w) AS BIGINT)        AS total_x_width,
-           CAST(sum(x_h) AS BIGINT)        AS total_x_height,
-           CAST(sum(x_frames) AS BIGINT)   AS total_x_frames
-    FROM per
-    """,
-)
-def mm_webp_probe(spark, sf_dir):
-    import pandas as pd
-
-    t = Tables(spark, sf_dir)
-    ids = t.documents.select("doc_id").filter(F.col("doc_id") % _MM_MOD == 0)
-
-    def probe(batches):
-        import struct as _s
-
-        from ..operators.webp import probe_webp
-
-        def riff(chunks):
-            body = b"WEBP"
-            for tag, data in chunks:
-                body += tag + _s.pack("<I", len(data)) + data
-                if len(data) & 1:
-                    body += b"\x00"
-            return b"RIFF" + _s.pack("<I", len(body)) + body
-
-        for pdf in batches:
-            out = {k: [] for k in (
-                "doc_id", "l_w", "l_h", "l_alpha", "x_w", "x_h", "x_frames"
-            )}
-            for d in pdf["doc_id"]:
-                d = int(d)
-                lw, lh = 1 + d * 7 % 2000, 1 + d * 11 % 1500
-                alpha = d % 3 == 0
-                bits = (lw - 1) | ((lh - 1) << 14) | (int(alpha) << 28)
-                pl = probe_webp(riff([(b"VP8L", b"\x2f" + _s.pack("<I", bits))]))
-                xw, xh, nf = 1 + d * 13 % 4000, 1 + d * 17 % 3000, 1 + d % 5
-                vp8x = bytes([0x02, 0, 0, 0]) + (xw - 1).to_bytes(3, "little") + (
-                    xh - 1
-                ).to_bytes(3, "little")
-                px = probe_webp(
-                    riff([(b"VP8X", vp8x)] + [(b"ANMF", b"\x00" * 16)] * nf)
-                )
-                out["doc_id"].append(d)
-                out["l_w"].append(pl["width"])
-                out["l_h"].append(pl["height"])
-                out["l_alpha"].append(int(pl["has_alpha"] and pl["lossless"]))
-                out["x_w"].append(px["width"])
-                out["x_h"].append(px["height"])
-                out["x_frames"].append(px["n_frames"] if px["is_animated"] else -1)
-            yield pd.DataFrame(out)
-
-    per = ids.mapInPandas(
-        probe,
-        schema="doc_id long, l_w long, l_h long, l_alpha long, x_w long, x_h long, x_frames long",
-    )
-    return per.agg(
-        F.count("*").cast("long").alias("n_probes"),
-        F.sum("l_w").cast("long").alias("total_l_width"),
-        F.sum("l_h").cast("long").alias("total_l_height"),
-        F.sum("l_alpha").cast("long").alias("n_l_alpha"),
-        F.sum("x_w").cast("long").alias("total_x_width"),
-        F.sum("x_h").cast("long").alias("total_x_height"),
-        F.sum("x_frames").cast("long").alias("total_x_frames"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# mm_audio_containers — the WAV/AIFF/AU container layer (operators/
-# codecs.py + aiff.py) under the full value oracle. Each sampled document
-# synthesizes one stereo int16 clip (sample i, channel c =
-# ((doc_id*23 + i*13 + c*7) % 4001 - 2000) * 8), wraps the SAME samples
-# as RIFF/WAV, FORM/AIFF (big-endian, 80-bit extended rate) and Sun AU
-# (encoding 3), decodes all three through audio_payload_to_pcm (integer
-# mixdown), and reduces each to an exact integer sum plus a
-# containers_agree flag. The oracle restates the mixdown sum in closed
-# form ONCE — the three container paths must all hash to it, so a flipped
-# byte in any mux/demux path or a drift between the three decoders breaks
-# the gate.
-#
-# Scale design (100 TB): identical to the other mm legs — payloads are
-# built and reduced inside the Arrow batch, doc_id % _AUD_MOD bounds
-# per-task work, one single-row aggregate shuffle.
-# ---------------------------------------------------------------------------
-_AUD_MOD = _MM_MOD
-_AUD_N = 240  # frames per channel
-
-
-@register(
-    "mm_audio_containers",
-    extra=True,
-    sql=f"""
-    WITH ids AS (SELECT doc_id FROM documents WHERE doc_id % {_AUD_MOD} = 0),
-    frames AS (
-      SELECT doc_id, t.i,
-             CAST(((doc_id * 23 + t.i * 13) % 4001 - 2000) * 8 AS BIGINT) AS c0,
-             CAST(((doc_id * 23 + t.i * 13 + 7) % 4001 - 2000) * 8 AS BIGINT) AS c1
-      FROM ids, unnest(generate_series(0, {_AUD_N - 1})) AS t(i)),
-    per AS (
-      SELECT doc_id,
-             -- integer mixdown: (c0 + c1) // 2 with floor semantics
-             CAST(sum((c0 + c1 - ((c0 + c1) % 2 + 2) % 2) // 2) AS BIGINT)
-               AS mono_sum
-      FROM frames GROUP BY doc_id)
-    SELECT CAST(count(*) AS BIGINT)       AS n_clips,
-           CAST(count(*) AS BIGINT)       AS n_clips_agree,
-           CAST(sum(mono_sum) AS BIGINT)  AS total_wav_sum,
-           CAST(sum(mono_sum) AS BIGINT)  AS total_aiff_sum,
-           CAST(sum(mono_sum) AS BIGINT)  AS total_au_sum,
-           CAST(min(mono_sum) AS BIGINT)  AS min_mono_sum,
-           CAST(max(mono_sum) AS BIGINT)  AS max_mono_sum
-    FROM per
-    """,
-)
-def mm_audio_containers(spark, sf_dir):
-    import pandas as pd
-
-    t = Tables(spark, sf_dir)
-    ids = t.documents.select("doc_id").filter(F.col("doc_id") % _AUD_MOD == 0)
-
-    def roundtrip(batches):
-        import numpy as np
-
-        from ..operators.aiff import encode_aiff, encode_au
-        from ..operators.codecs import encode_wav
-        from ..operators.multimodal import audio_payload_to_pcm
-
-        for pdf in batches:
-            rows = {k: [] for k in ("doc_id", "wav_sum", "aiff_sum", "au_sum", "agree")}
-            for d in pdf["doc_id"]:
-                d = int(d)
-                i = np.arange(_AUD_N, dtype=np.int64)
-                c0 = ((d * 23 + i * 13) % 4001 - 2000) * 8
-                c1 = ((d * 23 + i * 13 + 7) % 4001 - 2000) * 8
-                inter = np.empty(2 * _AUD_N, dtype=np.int16)
-                inter[0::2] = c0
-                inter[1::2] = c1
-                payloads = (
-                    encode_wav(inter, 16000, channels=2),
-                    encode_aiff(inter, 16000, channels=2),
-                    encode_au(inter, 16000, channels=2),
-                )
-                sums = []
-                for p in payloads:
-                    _rate, mono = audio_payload_to_pcm(p)
-                    sums.append(int(np.asarray(mono, dtype=np.int64).sum()))
-                rows["doc_id"].append(d)
-                rows["wav_sum"].append(sums[0])
-                rows["aiff_sum"].append(sums[1])
-                rows["au_sum"].append(sums[2])
-                rows["agree"].append(int(sums[0] == sums[1] == sums[2]))
-            yield pd.DataFrame(rows)
-
-    per = ids.mapInPandas(
-        roundtrip,
-        schema="doc_id long, wav_sum long, aiff_sum long, au_sum long, agree long",
-    )
-    return per.agg(
-        F.count("*").cast("long").alias("n_clips"),
-        F.sum("agree").cast("long").alias("n_clips_agree"),
-        F.sum("wav_sum").cast("long").alias("total_wav_sum"),
-        F.sum("aiff_sum").cast("long").alias("total_aiff_sum"),
-        F.sum("au_sum").cast("long").alias("total_au_sum"),
-        F.min("wav_sum").cast("long").alias("min_mono_sum"),
-        F.max("wav_sum").cast("long").alias("max_mono_sum"),
     )

@@ -710,12 +710,13 @@ def dedup_simhash64(spark, sf_dir):
 # Transitive dedup groups: EXACT connected components over the MinHash
 # candidate-pair graph — the "union-find" semantics every near-dup operator
 # above approximates with the single-pass smaller-id reduction. Spark side:
-# Pregel-style iterative min-label propagation (one key-shuffle join per
-# iteration, iteration count = graph diameter; lineage truncated per step
-# with localCheckpoint — the canonical iterative-algorithm pattern, NOT a
-# driver-side row loop). Oracle side: the same fixpoint as a DuckDB
-# recursive CTE (min reachable node id per node). Both engines provably
-# converge to min-node-id-per-component, so results are bit-identical.
+# iterative large-star/small-star contraction (O(log n) rounds; lineage
+# truncated per round with localCheckpoint, whose storage is released as
+# soon as the next round supersedes it — the canonical iterative-algorithm
+# pattern, NOT a driver-side row loop). Oracle side: the same fixpoint as a
+# DuckDB recursive CTE (min reachable node id per node). Both engines
+# provably converge to min-node-id-per-component, so results are
+# bit-identical.
 #
 # The result also demonstrates WHY production dedup uses the single-pass
 # smaller-id reduction instead of transitive merges: on a shared-vocabulary
@@ -799,43 +800,24 @@ def dedup_cc_groups(spark, sf_dir):
     return _cc_groups(t.documents)
 
 
-def _cc_labels_minlabel(cand):
-    """Min-label propagation over the candidate pair graph — the r9 form,
-    kept as the pin-test twin of ``_cc_labels_star`` (identical fixpoint:
-    every node labelled with its component's minimum doc_id). Converges in
-    O(graph diameter) full-edge-join rounds, which is exactly why the
-    query itself now uses the star contraction instead (r10 opt)."""
-    cand = cand.cache()
-    nodes = cand.select(F.col("da").alias("node")).union(cand.select("db")).distinct()
-    edges = cand.select(F.col("da").alias("src"), F.col("db").alias("dst"))
-    edges = edges.union(
-        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).cache()
+class _Checkpoint:
+    """``df.localCheckpoint(eager=True)`` as ``.df``, plus a handle on its
+    storage. Neither ``DataFrame.unpersist`` nor
+    ``spark.catalog.clearCache()`` drops a local checkpoint's blocks; this
+    ``unpersist`` does, so the handle can go in a ``pins`` list next to
+    cached frames (the operators/ranked.py contract)."""
 
-    labels = nodes.withColumn("lbl", F.col("node")).localCheckpoint(eager=True)
-    # convergence via the label-sum invariant: labels are per-node monotone
-    # nonincreasing, so sum(lbl) strictly decreases iff ANY label changed
-    prev_sum = labels.agg(F.sum("lbl")).collect()[0][0]
-    for _ in range(_CC_MAX_ITERS):
-        prop = edges.join(labels, edges["src"] == labels["node"]).select(
-            F.col("dst").alias("node"), "lbl"
-        )
-        new_labels = (
-            labels.select("node", "lbl")
-            .union(prop)
-            .groupBy("node")
-            .agg(F.min("lbl").alias("lbl"))
-            .localCheckpoint(eager=True)  # truncate per-iteration lineage
-        )
-        new_sum = new_labels.agg(F.sum("lbl")).collect()[0][0]
-        labels = new_labels
-        if new_sum == prev_sum:
-            break
-        prev_sum = new_sum
-    return labels.select("node", "lbl")
+    def __init__(self, df):
+        self.df = df.localCheckpoint(eager=True)
+        # the checkpointed frame's plan is a LogicalRDD over the RDD whose
+        # blocks the checkpoint persisted
+        self._rdd = self.df._jdf.queryExecution().logical().rdd()
+
+    def unpersist(self, blocking=False):
+        self._rdd.unpersist(blocking)
 
 
-def _cc_labels_star(cand, iters_out: list | None = None):
+def _cc_labels_star(cand, pins: list, iters_out: list | None = None):
     """Connected-component labels via alternating large-star/small-star
     contraction (Kiveris et al., "Connected Components in MapReduce and
     Beyond", SoCC'14) — O(log n) rounds instead of min-label propagation's
@@ -855,8 +837,12 @@ def _cc_labels_star(cand, iters_out: list | None = None):
     one-sided difference.
 
     Returns (node, lbl) with lbl = the component's minimum doc_id — the
-    same fixpoint as ``_cc_labels_minlabel`` (pinned on real data plus
-    synthetic chain/star graphs in tests/test_optimization_r10.py).
+    same fixpoint as min-label propagation (the reference
+    ``_cc_labels_minlabel`` in tests/test_optimization_r10.py, pinned on
+    real data plus synthetic chain/star graphs). The result is lazy over
+    the last round's local checkpoint, which is appended to ``pins``:
+    ``.unpersist()`` it after the terminal action. Each earlier round's
+    checkpoint is released as soon as the next one supersedes it.
     ``iters_out`` (optional list) receives the round count — on a length-n
     chain it is ~log2(n), pinned by test."""
     from pyspark.sql import Window as _W
@@ -864,9 +850,8 @@ def _cc_labels_star(cand, iters_out: list | None = None):
     wu = _W.partitionBy("u")
     # cand is already DISTINCT (da < db), so the canonical u>v orientation
     # needs no re-dedup
-    E = cand.select(F.col("db").alias("u"), F.col("da").alias("v")).localCheckpoint(
-        eager=True
-    )
+    cp = _Checkpoint(cand.select(F.col("db").alias("u"), F.col("da").alias("v")))
+    E = cp.df
     e_cnt = E.count()
     n_iter = 0
     for _ in range(_CC_MAX_ITERS):
@@ -881,18 +866,20 @@ def _cc_labels_star(cand, iters_out: list | None = None):
         # after large-star every edge satisfies u > v, so min(v) over u IS
         # the minimum of the closed smaller-neighborhood
         sm = large.withColumn("m", F.min("v").over(wu))
-        new_e = (
+        new_cp = _Checkpoint(  # truncate per-round lineage
             sm.select(F.col("v").alias("u"), F.col("m").alias("v"))
             .union(sm.select("u", F.col("m").alias("v")))
             .filter(F.col("u") != F.col("v"))
             .distinct()
-            .localCheckpoint(eager=True)  # truncate per-round lineage
         )
+        new_e = new_cp.df
         new_cnt = new_e.count()
         done = new_cnt == e_cnt and new_e.subtract(E).isEmpty()
-        E, e_cnt = new_e, new_cnt
+        cp.unpersist(blocking=True)  # superseded; new_e no longer reads it
+        cp, E, e_cnt = new_cp, new_e, new_cnt
         if done:
             break
+    pins.append(cp)
     if iters_out is not None:
         iters_out.append(n_iter)
     # star forest -> labels; the groupBy-min is defensive (at the fixpoint
@@ -908,15 +895,24 @@ def _cc_labels_star(cand, iters_out: list | None = None):
 def _cc_groups(documents):
     """CC stats over the MinHash candidate graph of ``documents`` — factored
     out so the sampled 100x tier (catalog/sampled.py) can run the identical
-    plan on a deterministic corpus subset."""
-    labels = _cc_labels_star(_minhash_candidates(documents))
+    plan on a deterministic corpus subset. The one-row result is collected
+    here so the last label checkpoint can be released before returning;
+    the returned frame holds no storage."""
+    pins = []
+    labels = _cc_labels_star(_minhash_candidates(documents), pins)
     groups = labels.groupBy("lbl").agg(F.count("*").alias("group_size"))
-    return groups.agg(
+    stats = groups.agg(
         F.count("*").alias("n_components"),
         F.sum("group_size").alias("n_docs_in_groups"),
         F.max("group_size").alias("max_group_size"),
         F.round(F.sum("group_size") * 1.0 / F.count("*"), _DP_CC).alias("avg_group_size"),
     )
+    try:
+        rows = stats.collect()
+    finally:
+        for p in pins:
+            p.unpersist(blocking=True)
+    return documents.sparkSession.createDataFrame(rows, stats.schema)
 
 
 # ---------------------------------------------------------------------------

@@ -1,11 +1,10 @@
 """GIF (87a/89a) and BMP codecs with zero external dependencies.
 
-Extends the real-codec set (codecs.py: PNG/WAV; jpeg.py: JPEG;
-video.py: AVI) with the two remaining image formats a web crawl yields
-in volume whose specs are implementable from first principles
-in-container: GIF's compression is LZW — pure variable-width bit
-arithmetic — and BMP is the same BI_RGB DIB raster AVI's '00db' frames
-use, behind a 14-byte file header.
+Extends the real-codec set (codecs.py: PNG/WAV) with two more image
+formats a web crawl yields in volume whose specs are implementable from
+first principles in-container: GIF's compression is LZW — pure
+variable-width bit arithmetic — and BMP is a BI_RGB DIB raster behind a
+14-byte file header.
 
 Scope (stated, not hidden):
 
@@ -39,8 +38,7 @@ Scope (stated, not hidden):
   favicons the container ships.
 
 Everything is deterministic byte arithmetic, so the kernels stay
-oracle-checkable (mm_image_formats restates the roundtrip sums in
-closed form).
+oracle-checkable.
 
 Reference behavior being reproduced: the reference treats media as
 opaque payload + typed metadata (SURVEY.md §2 multimodal plumbing);

@@ -9,30 +9,15 @@ Decode support comes in three honest tiers:
   ``pcm_stats`` route these to full decodes.
 * REAL raw kernels: the self-describing RGB8/PCM1 formats below (what a
   production decode stage emits) — numpy only.
-* REAL JPEG (operators/jpeg.py): baseline SOF0 and progressive SOF2,
-  first-principles DCT + Huffman, interop-verified against libjpeg files.
-* REAL video (operators/video.py): the AVI/RIFF container with MJPEG
-  (via the in-repo JPEG codec) and raw BI_RGB DIB frames — header-only
-  probe, idx1 index-seeked frame sampling, ``video_stats`` kernel.
 * REAL GIF + BMP (operators/gif.py): full LZW (variable width, dict
   reset, interlace), multi-frame animations with transparency and
   disposal; BI_RGB BMP at 8 (paletted) / 24 / 32 bits, both rasters.
 * REAL TIFF (operators/tiff.py): baseline 6.0, both byte orders —
   none/LZW (MSB-first early-change variant)/deflate/PackBits,
   horizontal predictor, gray/RGB/RGBA/palette, multi-strip.
-* REAL AIFF/AIFC + Sun AU (operators/aiff.py): big-endian PCM at
-  8/16/24/32 bits, 80-bit extended sample rates, 'sowt', and AU's
-  G.711 mu-law/A-law via the codecs.py tables — the same payload
-  wrapped as WAV, AIFF, or AU yields identical pcm_stats rows.
-* REAL WebP container probe (operators/webp.py): is_webp +
-  probe_webp parse VP8X/VP8/VP8L headers (dims, alpha, animation,
-  losslessness) without touching pixels, interop-verified against the
-  real CPython .webp asset; pixel decode stays gated (no VP8L stream
-  exists in-container to verify a from-scratch decoder against).
-* STUBS behind NotImplementedError: everything else (WebP pixel
-  decode/mp3, inter-frame video codecs — these need PIL/opencv/ffmpeg,
-  absent here); ``fake=True`` gives a deterministic digest-derived
-  stand-in so pipelines and tests exercise the full Spark path with
+* STUBS behind NotImplementedError: everything else (JPEG, WebP,
+  AIFF, mp3, video codecs); ``fake=True`` gives a deterministic
+  digest-derived stand-in so pipelines and tests exercise the full Spark path with
   realistic shapes.
 
 Everything Spark-side is real and tested regardless of tier: schemas,
@@ -80,29 +65,22 @@ FEATURE_SCHEMA = T.StructType(
 
 def image_payload_to_array(payload: bytes):
     """Route an image payload to a REAL decode: PNG (operators/codecs.py),
-    JPEG — baseline AND progressive (operators/jpeg.py), GIF (first
-    coalesced frame) / BMP / ICO favicons (operators/gif.py), TIFF
-    (operators/tiff.py),
+    GIF (first coalesced frame) / BMP / ICO favicons (operators/gif.py),
+    TIFF (operators/tiff.py),
     or self-describing RGB8 raw. Returns (h, w, ch) uint8 with ch >= 3:
     single-channel decodes (grayscale TIFF) are replicated to RGB here so
     every downstream ``[:, :, :3]`` reduction sees the same contract the
-    PNG/JPEG decoders honor natively. Raises NotImplementedError for codec
-    formats without an in-container decoder (WebP/arithmetic-JPEG/...) —
-    the honest gate."""
+    PNG decoder honors natively. Raises NotImplementedError for codec
+    formats without an in-container decoder (JPEG/WebP/...) — the honest
+    gate."""
     import numpy as np
 
     from .codecs import decode_png, is_png
     from .gif import decode_bmp, decode_gif, decode_ico, is_bmp, is_gif, is_ico
-    from .jpeg import decode_jpeg, is_jpeg
     from .tiff import decode_tiff, is_tiff
-    from .webp import decode_webp, is_webp
 
-    if is_webp(payload):
-        return decode_webp(bytes(payload))  # raises the documented gate
     if is_png(payload):
         a = decode_png(bytes(payload))
-    elif is_jpeg(payload):
-        a = decode_jpeg(bytes(payload))
     elif is_gif(payload):
         a = decode_gif(bytes(payload))[0][0]
     elif is_bmp(payload):
@@ -123,13 +101,12 @@ def image_payload_to_array(payload: bytes):
 def decode_image(payload: bytes, fake: bool = False) -> list[float]:
     """Decode an image payload to an 8-dim feature vector.
 
-    REAL for every decodable format (PNG, JPEG baseline + progressive,
-    GIF, BMP, TIFF, ICO, RGB8-raw): per-channel means + brightness +
-    normalized dimensions, all deterministic byte arithmetic. With
-    ``fake=True`` returns a digest-derived stand-in instead (the
-    pre-codec behavior, kept for pipeline-shape tests). Formats without
-    an in-container decoder (WebP, arithmetic JPEG) raise
-    NotImplementedError.
+    REAL for every decodable format (PNG, GIF, BMP, TIFF, ICO,
+    RGB8-raw): per-channel means + brightness + normalized dimensions,
+    all deterministic byte arithmetic. With ``fake=True`` returns a
+    digest-derived stand-in instead (the pre-codec behavior, kept for
+    pipeline-shape tests). Formats without an in-container decoder
+    (JPEG, WebP) raise NotImplementedError.
     """
     if fake:
         digest = hashlib.sha256(payload or b"").digest()
@@ -222,7 +199,7 @@ def resize_payload(payload: bytes, width: int, height: int, fake: bool = False) 
     """Resize an image payload.
 
     REAL for every decodable format (decode → nearest-neighbor →
-    re-encode, format family preserved: PNG→PNG, JPEG→JPEG, GIF→GIF
+    re-encode, format family preserved: PNG→PNG, GIF→GIF
     — first coalesced frame of an animation, still ≤256 colors under
     nearest-neighbor so the palette re-encode is exact — BMP→24/32-bit
     BMP, TIFF→TIFF, ICO→PNG-entry ICO) and RGB8-raw payloads;
@@ -238,12 +215,10 @@ def resize_payload(payload: bytes, width: int, height: int, fake: bool = False) 
         return (seed * reps)[:target_len]
     from .codecs import encode_png, is_png
     from .gif import encode_bmp, encode_gif, encode_ico, is_bmp, is_gif, is_ico
-    from .jpeg import encode_jpeg, is_jpeg
     from .tiff import encode_tiff, is_tiff
 
     encoders = (
         (is_png, encode_png),
-        (is_jpeg, lambda a: encode_jpeg(a[:, :, :3])),
         (is_gif, encode_gif),
         (is_bmp, encode_bmp),
         (is_tiff, encode_tiff),
@@ -294,11 +269,11 @@ def resize_images(
 # ---------------------------------------------------------------------------
 # REAL kernels for RAW payloads (no codec needed): a self-describing
 # uncompressed RGB format — b"RGB8" magic + uint32-BE width + uint32-BE
-# height + w·h·3 interleaved RGB bytes. Compressed formats (JPEG/PNG/…)
-# stay behind the honest NotImplementedError gates above; for raw frames
-# (exactly what a production video-decode stage emits) decode, feature
-# extraction, and resize below are the real thing, in numpy, over Arrow
-# batches — proving the "swap the kernel in production" claim end-to-end.
+# height + w·h·3 interleaved RGB bytes. Formats without a decoder
+# (JPEG/WebP/…) stay behind the honest NotImplementedError gates above;
+# for raw frames (exactly what a production video-decode stage emits)
+# decode, feature extraction, and resize below are the real thing, in
+# numpy, over Arrow batches — proving the "swap the kernel in production" claim end-to-end.
 # ---------------------------------------------------------------------------
 RAW_RGB_MAGIC = b"RGB8"
 _HDR = len(RAW_RGB_MAGIC) + 8
@@ -346,16 +321,14 @@ def resize_rgb_raw(payload: bytes, width: int, height: int) -> bytes:
 
 def rgb_stats(media: DataFrame) -> DataFrame:
     """mapInPandas REAL feature extraction for every decodable image
-    format (RGB8-raw, PNG, JPEG baseline+progressive, GIF, BMP, TIFF,
-    ICO): decoded dimensions + per-channel means + brightness, one
-    vectorized numpy reduction per image. Payloads without an
-    in-container decoder (WebP, arithmetic-coded JPEG) pass through
-    with NULLs — the honest gate."""
+    format (RGB8-raw, PNG, GIF, BMP, TIFF, ICO): decoded dimensions +
+    per-channel means + brightness, one vectorized numpy reduction per
+    image. Payloads without an in-container decoder (JPEG, WebP) pass
+    through with NULLs — the honest gate."""
     import numpy as np
 
     from .codecs import is_png
     from .gif import is_bmp, is_gif, is_ico
-    from .jpeg import is_jpeg
     from .tiff import is_tiff
 
     schema = T.StructType(
@@ -378,7 +351,6 @@ def rgb_stats(media: DataFrame) -> DataFrame:
                 if p is None or not (
                     head[:4] == RAW_RGB_MAGIC
                     or is_png(head)
-                    or is_jpeg(head[:2])
                     or is_gif(head)
                     or is_bmp(head)
                     or is_tiff(head)
@@ -390,7 +362,7 @@ def rgb_stats(media: DataFrame) -> DataFrame:
                     a = image_payload_to_array(bytes(p))[:, :, :3]
                 except (NotImplementedError, ValueError, struct.error):
                     # NotImplementedError: no in-container decoder (e.g.
-                    # unsupported JPEG mode); ValueError: valid magic but
+                    # an unsupported TIFF mode); ValueError: valid magic but
                     # malformed body — both pass through as NULLs instead
                     # of killing the task (r4 advice findings #1/#2)
                     rows.append((mid, None, None, None, None, None, None))
@@ -420,8 +392,8 @@ def rgb_stats(media: DataFrame) -> DataFrame:
 # (what a production audio-decode stage emits) encode, decode, clip-level
 # stats, and downsampling below are the real thing, in numpy, over Arrow
 # batches. Every statistic is integer-exact (sum of squares, isqrt RMS,
-# sign-change zero crossings), so the catalog query over these kernels is
-# fully value-checkable by the DuckDB oracle's closed-form restatement.
+# sign-change zero crossings), so every output can be restated in closed
+# form and checked exactly.
 # ---------------------------------------------------------------------------
 RAW_PCM_MAGIC = b"PCM1"
 _PCM_HDR = len(RAW_PCM_MAGIC) + 8
@@ -477,24 +449,16 @@ def downsample_pcm16(payload: bytes, factor: int) -> bytes:
 
 def audio_payload_to_pcm(payload: bytes):
     """Route an audio payload to a REAL decode → (rate, mono int16 array):
-    PCM1 raw as-is; WAV (operators/codecs.py), AIFF/AIFC and Sun AU
-    (operators/aiff.py) with multi-channel frames mixed down by exact
-    integer average (sum // channels — deterministic, identical across
-    containers). Other formats (mp3/ogg/...) raise NotImplementedError."""
-    from .aiff import decode_aiff, decode_au, is_aiff, is_au
+    PCM1 raw as-is; WAV (operators/codecs.py) with multi-channel frames
+    mixed down by exact integer average (sum // channels —
+    deterministic). Other formats (AIFF/mp3/ogg/...) raise
+    NotImplementedError."""
     from .codecs import decode_wav, is_wav
 
-    decoder = None
     if is_wav(payload):
-        decoder = decode_wav
-    elif is_aiff(payload):
-        decoder = decode_aiff
-    elif is_au(payload):
-        decoder = decode_au
-    if decoder is not None:
         import numpy as np
 
-        rate, ch, frames = decoder(bytes(payload))
+        rate, ch, frames = decode_wav(bytes(payload))
         if ch == 1:
             return rate, frames.reshape(-1)
         mono = frames.astype(np.int64).sum(axis=1) // ch
@@ -503,13 +467,11 @@ def audio_payload_to_pcm(payload: bytes):
 
 
 def pcm_stats(media: DataFrame, clip_abs: int = 15000) -> DataFrame:
-    """mapInPandas REAL per-clip stats for raw-PCM16, WAV, AIFF/AIFC and
-    Sun AU rows: duration (exact integer ms), RMS (isqrt of the mean
+    """mapInPandas REAL per-clip stats for raw-PCM16 and WAV rows: duration (exact integer ms), RMS (isqrt of the mean
     square — integer), zero crossings (strict sign products < 0), peak
     amplitude, and samples at/above the clipping threshold.
     Multi-channel clips are integer-mixed to mono first
-    (audio_payload_to_pcm), so the same PCM in any container yields the
-    same row. Payloads without an in-container decoder pass through
+    (audio_payload_to_pcm). Payloads without an in-container decoder pass through
     with NULLs."""
     import math
 
@@ -528,7 +490,6 @@ def pcm_stats(media: DataFrame, clip_abs: int = 15000) -> DataFrame:
         ]
     )
 
-    from .aiff import is_aiff, is_au
     from .codecs import is_wav
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -539,8 +500,6 @@ def pcm_stats(media: DataFrame, clip_abs: int = 15000) -> DataFrame:
                 if p is None or not (
                     head[:4] == RAW_PCM_MAGIC
                     or is_wav(head[:12])
-                    or is_aiff(head)
-                    or is_au(head)
                 ):
                     rows.append((mid, None, None, None, None, None, None, None))
                     continue

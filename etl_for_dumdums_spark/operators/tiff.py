@@ -1,7 +1,7 @@
 """Baseline TIFF 6.0 codec with zero external dependencies.
 
-Completes the crawl-image-format set (codecs.py: PNG; jpeg.py: JPEG;
-gif.py: GIF/BMP) with the remaining first-principles-implementable
+Completes the crawl-image-format set (codecs.py: PNG; gif.py: GIF/BMP)
+with the remaining first-principles-implementable
 format: TIFF is an IFD tag directory around strip rasters whose three
 baseline compressions — none, PackBits, and LZW — are all pure byte/bit
 arithmetic.
@@ -20,21 +20,15 @@ Scope (stated, not hidden):
   Both strip AND tile organization decode (TileWidth/TileLength grids
   with full-size edge tiles cropped on assembly; the predictor is
   undone per tile since differencing restarts at each tile's left
-  edge). New-style JPEG-in-TIFF (compression 7, TechNote 2) decodes
-  via the in-repo JPEG codec — complete streams per strip, or the
-  abbreviated form splicing the JPEGTables tag (347) into each strip.
-  PlanarConfiguration 2, 16-bit samples, tiled palette images, tiled
-  JPEG, and old-style JPEG (compression 6) raise
-  ``NotImplementedError`` — the honest gate; malformed structures
-  raise ``ValueError``.
+  edge). PlanarConfiguration 2, 16-bit samples, tiled palette images,
+  and JPEG compression (6 and 7) raise ``NotImplementedError`` — the
+  honest gate; malformed structures raise ``ValueError``.
 * ``encode_tiff`` — little-endian baseline: 8-bit gray/RGB/RGBA,
   compression none, LZW, or deflate (+ optional horizontal predictor),
   configurable RowsPerStrip, with dimension tags promoted to LONG past
   65535 rows/cols. ``tiled=True`` writes a tile organization (16x16
-  tiles, padded edge tiles, per-tile predictor); ``compression="jpeg"``
-  writes new-style JPEG-in-TIFF (comp 7, one complete interchange
-  stream per strip — RGB only, lossy, strip-mode only like the
-  decoder). All non-JPEG modes are lossless: decode(encode(x)) == x.
+  tiles, padded edge tiles, per-tile predictor). Every mode is
+  lossless: decode(encode(x)) == x.
 
 Reference behavior being reproduced: the reference treats media as
 opaque payload + typed metadata (SURVEY.md §2 multimodal plumbing);
@@ -251,36 +245,8 @@ def decode_tiff(payload: bytes):
         raise NotImplementedError(f"TIFF: only 8-bit samples supported (got {bps})")
     if photo == 3 and any(b not in (4, 8) for b in bps):
         raise NotImplementedError("TIFF: palette bit depth must be 4 or 8")
-    if comp not in (1, 5, 7, 8, 32773, 32946):
+    if comp not in (1, 5, 8, 32773, 32946):
         raise NotImplementedError(f"TIFF: compression {comp} unsupported")
-    if comp == 7:
-        # new-style JPEG-in-TIFF (TechNote 2): each strip/tile is a JPEG
-        # stream — complete, or abbreviated with the shared table segments
-        # in the JPEGTables tag (347): splice tables-interior before the
-        # strip's own interior to form one interchange stream.
-        from .jpeg import decode_jpeg
-
-        jt = bytes(t[347][0]) if 347 in t and isinstance(t[347][0], (bytes, bytearray)) else (
-            bytes(t[347]) if 347 in t else b""
-        )
-        if tiled:
-            raise NotImplementedError("TIFF: tiled JPEG-in-TIFF unsupported")
-        parts = []
-        for soff, scount in zip(offsets, counts):
-            stream = buf[soff : soff + scount]
-            if stream[:2] != b"\xff\xd8":
-                raise ValueError("TIFF JPEG strip missing SOI")
-            if jt:
-                if jt[:2] != b"\xff\xd8" or jt[-2:] != b"\xff\xd9":
-                    raise ValueError("TIFF JPEGTables malformed")
-                stream = b"\xff\xd8" + jt[2:-2] + stream[2:]
-            parts.append(decode_jpeg(stream))
-        a = np.concatenate(parts, axis=0) if len(parts) > 1 else parts[0]
-        if a.ndim == 2:
-            a = a[:, :, None]
-        if a.shape[0] < h or a.shape[1] < w:
-            raise ValueError("TIFF JPEG strips smaller than the declared raster")
-        return np.ascontiguousarray(a[:h, :w])
     if photo not in (0, 1, 2, 3):
         raise NotImplementedError(f"TIFF: photometric {photo} unsupported")
 
@@ -385,14 +351,11 @@ def decode_tiff(payload: bytes):
 # encode
 # ---------------------------------------------------------------------------
 def encode_tiff(arr, compression: str = "lzw", predictor: bool = False,
-                rows_per_strip: int | None = None, tiled: bool = False,
-                quality: int = 95) -> bytes:
+                rows_per_strip: int | None = None, tiled: bool = False) -> bytes:
     """(h, w, 1|3|4) uint8 (or (h, w) gray) → little-endian TIFF.
-    compression: 'none' | 'lzw' | 'deflate' | 'jpeg' (new-style comp 7,
-    each strip a complete JPEG interchange stream — RGB only, lossy).
+    compression: 'none' | 'lzw' | 'deflate'.
     ``tiled=True`` emits a tile organization (tags 322-325, 16x16 tiles,
-    edge tiles padded per spec §15, predictor applied per tile); JPEG is
-    strip-only, matching the decoder's scope."""
+    edge tiles padded per spec §15, predictor applied per tile)."""
     import numpy as np
 
     a = np.ascontiguousarray(arr, dtype=np.uint8)
@@ -401,13 +364,8 @@ def encode_tiff(arr, compression: str = "lzw", predictor: bool = False,
     if a.ndim != 3 or a.shape[2] not in (1, 3, 4):
         raise ValueError("encode_tiff expects (h, w[, 1|3|4]) uint8")
     h, w, spp = a.shape
-    if compression not in ("none", "lzw", "deflate", "jpeg"):
+    if compression not in ("none", "lzw", "deflate"):
         raise NotImplementedError(f"encode_tiff: compression {compression!r}")
-    if compression == "jpeg":
-        if tiled:
-            raise NotImplementedError("encode_tiff: tiled JPEG-in-TIFF unsupported")
-        if spp != 3 or predictor:
-            raise ValueError("encode_tiff: JPEG strips need RGB input, no predictor")
     photo = 1 if spp == 1 else 2
 
     def pack_block(block):
@@ -435,11 +393,6 @@ def encode_tiff(arr, compression: str = "lzw", predictor: bool = False,
                 tile[: part.shape[0], : part.shape[1]] = part
                 blocks.append(pack_block(tile))
         rps = None
-    elif compression == "jpeg":
-        from .jpeg import encode_jpeg
-
-        blocks.append(encode_jpeg(a, quality=quality))
-        rps = h
     else:
         rps = rows_per_strip or h
         for r0 in range(0, h, rps):
@@ -450,14 +403,14 @@ def encode_tiff(arr, compression: str = "lzw", predictor: bool = False,
     def dim_type(v):
         return 3 if v <= 0xFFFF else 4
 
-    comp_code = {"lzw": 5, "deflate": 8, "none": 1, "jpeg": 7}[compression]
+    comp_code = {"lzw": 5, "deflate": 8, "none": 1}[compression]
     off_tag, cnt_tag = (324, 325) if tiled else (273, 279)
     tags = [
         (256, dim_type(w), 1, w),
         (257, dim_type(h), 1, h),
         (258, 3, spp, None),  # BitsPerSample
         (259, 3, 1, comp_code),
-        (262, 3, 1, 6 if compression == "jpeg" else photo),
+        (262, 3, 1, photo),
         (off_tag, 4, len(blocks), None),  # Strip/TileOffsets
         (277, 3, 1, spp),
         (cnt_tag, 4, len(blocks), None),  # Strip/TileByteCounts

@@ -2,17 +2,15 @@
 
 1. (high) grayscale TIFF through image_payload_to_array / rgb_stats:
    decode_tiff returns (h, w, 1); the routing layer must replicate to RGB
-   so ``[:, :, :3].reshape(-1, 3)`` reductions see the PNG/JPEG contract.
+   so ``[:, :, :3].reshape(-1, 3)`` reductions see the PNG contract.
 2. (medium) malformed payloads with valid magic must raise ValueError (not
    IndexError / struct.error) so the mapInPandas kernels' except clause
    emits NULL rows instead of dying: GIF frame rect beyond the logical
-   screen, truncated TIFF IFD, truncated AIFF COMM/SSND.
+   screen, truncated TIFF IFD.
 3. (low) encode_gif with 256 opaque colors + a transparent index must fit
    (transparent pixels' RGB never renders, so it leaves the palette).
 4. (low) encode_tiff for images taller than 65535 rows promotes the
    ImageLength / RowsPerStrip tags from SHORT to LONG.
-5. (low) AVI idx1 filtering takes stream-0 chunks only — a second video
-   stream must not interleave into the sampled frame sequence.
 """
 
 import struct
@@ -20,7 +18,6 @@ import struct
 import numpy as np
 import pytest
 
-from etl_for_dumdums_spark.operators.aiff import decode_aiff
 from etl_for_dumdums_spark.operators.gif import decode_gif, encode_gif
 from etl_for_dumdums_spark.operators.multimodal import image_payload_to_array
 from etl_for_dumdums_spark.operators.tiff import decode_tiff, encode_tiff
@@ -72,21 +69,6 @@ def test_truncated_tiff_ifd_raises_valueerror():
         decode_tiff(buf)
 
 
-def test_truncated_aiff_chunks_raise_valueerror():
-    comm_short = (
-        b"FORM" + struct.pack(">I", 16) + b"AIFF"
-        + b"COMM" + struct.pack(">I", 4) + b"\x00" * 4
-    )
-    with pytest.raises(ValueError):
-        decode_aiff(comm_short)
-    ssnd_short = (
-        b"FORM" + struct.pack(">I", 16) + b"AIFF"
-        + b"SSND" + struct.pack(">I", 4) + b"\x00" * 4
-    )
-    with pytest.raises(ValueError):
-        decode_aiff(ssnd_short)
-
-
 def test_gif_256_colors_plus_transparency_encodes():
     f = np.zeros((16, 16, 4), dtype=np.uint8)
     f[:, :, 0] = np.arange(256, dtype=np.uint8).reshape(16, 16)
@@ -112,37 +94,3 @@ def test_tall_tiff_rowsperstrip_long():
     back = decode_tiff(encode_tiff(gray))
     assert back.shape == (h, 1, 1)
     assert (back[:, 0, 0] == gray[:, 0]).all()
-
-
-def test_avi_idx1_ignores_second_stream():
-    """Build an AVI whose idx1 interleaves stream-0 and stream-1 video
-    chunks; frame sampling must see only stream 0's frames."""
-    from etl_for_dumdums_spark.operators.video import decode_avi, encode_avi, probe_avi
-
-    frames = [
-        np.full((4, 4, 3), v, dtype=np.uint8) for v in (10, 20, 30)
-    ]
-    avi = bytearray(encode_avi(frames, fps=5, codec="DIB "))
-    # clone the movi chunks as a fake stream 1: rewrite a copy of idx1
-    # appending 01dc entries pointing at the same offsets
-    tail = avi.rindex(b"idx1")
-    (isz,) = struct.unpack_from("<I", avi, tail + 4)
-    entries = [
-        struct.unpack_from("<4sIII", avi, tail + 8 + 16 * i)
-        for i in range(isz // 16)
-    ]
-    extra = b"".join(
-        struct.pack("<4sIII", b"01dc", flags, off, ln)
-        for eid, flags, off, ln in entries
-        if eid in (b"00dc", b"00db")
-    )
-    new_idx = b"idx1" + struct.pack("<I", isz + len(extra)) + bytes(avi[tail + 8 : tail + 8 + isz]) + extra
-    avi = bytes(avi[:tail]) + new_idx
-    # RIFF size field: grow by the appended entries
-    avi = avi[:4] + struct.pack("<I", len(avi) - 8) + avi[8:]
-    info = probe_avi(avi)
-    assert info["n_frames"] == 3
-    _fps, got = decode_avi(avi, indices=[0, 1, 2])
-    assert len(got) == 3
-    for f, v in zip(got, (10, 20, 30)):
-        assert (f == v).all()

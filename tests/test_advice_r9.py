@@ -10,8 +10,6 @@
    collapse identity would silently undercount.
 4. The sequence-pattern oracle's char-form patterns are DERIVED from the
    same _SEQ_ADJ/_SEQ_SUB constants the Spark side scans.
-5. build_scale_r08 applies ROUND precedence before pass-beats-fail: an r8
-   FAIL is not masked by an r7 PASS.
 """
 
 import os
@@ -153,28 +151,6 @@ def test_sequence_char_patterns_derive_from_constants():
     sql = _sequence_pattern_sql()
     for pat in ("'cp'", "'ee'", "'s.*p'", "'v.*c.*p'"):
         assert pat in sql
-
-
-def test_build_scale_round_precedence_r8_fail_not_masked_by_r7_pass(tmp_path):
-    """Simulate a query that PASSed in the r7 logs but FAILed in the r8
-    logs: the consolidated accounting must report it as a FAIL."""
-    import build_scale_r08 as bsr
-
-    r7_log = tmp_path / "r7.log"
-    r8_log = tmp_path / "r8.log"
-    r7_log.write_text("PASS some_query (10 rows) [1.0s]\n")
-    r8_log.write_text("FAIL some_query: value mismatch at 1000x\n")
-
-    p7, f7, _ = bsr.parse([r7_log])
-    p8, f8, _ = bsr.parse([r8_log])
-    # replicate main()'s precedence: round first, then pass-beats-fail
-    f8 = {k: v for k, v in f8.items() if k not in p8}
-    r8_seen = set(p8) | set(f8)
-    passed = {k: v for k, v in p7.items() if k not in r8_seen}
-    passed.update(p8)
-    failed = {k: v for k, v in f7.items() if k not in r8_seen}
-    failed.update(f8)
-    assert "some_query" in failed and "some_query" not in passed
 
 
 _RANGE_JOIN_FORM = """

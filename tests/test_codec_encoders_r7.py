@@ -1,8 +1,6 @@
 """Round-7 encoder additions: encode_ico, encode_bmp_rle (RLE8/RLE4),
-encode_tiff(tiled=...), encode_tiff(compression="jpeg") — each verified
-by roundtripping through the independently-tested decoders, so the
-mm_image_formats_2 oracle query sits on production encode→decode paths
-rather than hand-assembled containers."""
+encode_tiff(tiled=...) — each verified by roundtripping through the
+independently-tested decoders."""
 
 import numpy as np
 import pytest
@@ -94,21 +92,6 @@ def test_tiled_tiff_gray_and_rgba():
     assert (decode_tiff(encode_tiff(g, tiled=True))[:, :, 0] == g).all()
     rgba = rng.randint(0, 256, (17, 33, 4)).astype(np.uint8)
     assert (decode_tiff(encode_tiff(rgba, tiled=True)) == rgba).all()
-
-
-def test_jpeg_in_tiff_flat_quadrants_exact():
-    img = np.zeros((16, 16, 3), dtype=np.uint8)
-    for q, (y0, x0) in enumerate(((0, 0), (0, 8), (8, 0), (8, 8))):
-        img[y0 : y0 + 8, x0 : x0 + 8, :] = 40 + q * 50
-    back = decode_tiff(encode_tiff(img, compression="jpeg"))
-    assert back.shape == (16, 16, 3) and (back == img).all()
-
-
-def test_jpeg_in_tiff_guards():
-    with pytest.raises(NotImplementedError):
-        encode_tiff(np.zeros((16, 16, 3), np.uint8), compression="jpeg", tiled=True)
-    with pytest.raises(ValueError):
-        encode_tiff(np.zeros((16, 16), np.uint8), compression="jpeg")
 
 
 def test_new_encoders_route_through_stats_layer():

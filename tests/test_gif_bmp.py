@@ -1,6 +1,6 @@
 """GIF/BMP codec tests (operators/gif.py).
 
-Same policy as test_codecs/test_jpeg/test_video: byte-exact roundtrips
+Same policy as test_codecs/test_tiff: byte-exact roundtrips
 (both formats are lossless for palette-sized inputs), plus
 independently-constructed byte streams — a GIF whose LZW data is packed
 by a separate bit-writer written in this test from the spec, an

@@ -316,9 +316,9 @@ def test_decode_png_gray_palette_alpha():
 
 
 def test_rgb_stats_malformed_body_yields_nulls(spark):
-    """Valid PNG/JPEG magic + malformed body raises ValueError from the
-    decoder — the kernel must emit a NULL row, not kill the task
-    (r4 advice finding #2)."""
+    """Valid PNG magic + malformed body raises ValueError from the
+    decoder, and JPEG magic has no decoder — the kernel must emit a NULL
+    row for each, not kill the task (r4 advice finding #2)."""
     import numpy as np
 
     from etl_for_dumdums_spark.operators.codecs import encode_png

@@ -69,15 +69,60 @@ def _pairs(spark, lst):
     ).distinct()
 
 
-def _labels(df):
-    return sorted((r["node"], r["lbl"]) for r in df.collect())
+def _cc_labels_minlabel(cand, pins):
+    """Min-label propagation over the candidate pair graph: the reference
+    ``_cc_labels_star`` is pinned against (identical fixpoint: every node
+    labelled with its component's minimum doc_id). Converges in O(graph
+    diameter) full-edge-join rounds, which is why the query uses the star
+    contraction instead. Same ``pins`` contract as ``_cc_labels_star``."""
+    import pyspark.sql.functions as F
+
+    from etl_for_dumdums_spark.catalog.dedup import _CC_MAX_ITERS, _Checkpoint
+
+    cand = cand.cache()
+    nodes = cand.select(F.col("da").alias("node")).union(cand.select("db")).distinct()
+    edges = cand.select(F.col("da").alias("src"), F.col("db").alias("dst"))
+    edges = edges.union(
+        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+    ).cache()
+
+    cp = _Checkpoint(nodes.withColumn("lbl", F.col("node")))
+    labels = cp.df
+    # convergence via the label-sum invariant: labels are per-node monotone
+    # nonincreasing, so sum(lbl) strictly decreases iff ANY label changed
+    prev_sum = labels.agg(F.sum("lbl")).collect()[0][0]
+    for _ in range(_CC_MAX_ITERS):
+        prop = edges.join(labels, edges["src"] == labels["node"]).select(
+            F.col("dst").alias("node"), "lbl"
+        )
+        new_cp = _Checkpoint(  # truncate per-iteration lineage
+            labels.select("node", "lbl")
+            .union(prop)
+            .groupBy("node")
+            .agg(F.min("lbl").alias("lbl"))
+        )
+        new_sum = new_cp.df.agg(F.sum("lbl")).collect()[0][0]
+        cp.unpersist(blocking=True)
+        cp, labels = new_cp, new_cp.df
+        if new_sum == prev_sum:
+            break
+        prev_sum = new_sum
+    pins.append(cp)
+    return labels.select("node", "lbl")
+
+
+def _labels(label_fn, cand, *args):
+    """``label_fn``'s sorted (node, lbl) pairs; its checkpoints released."""
+    pins = []
+    try:
+        return sorted((r["node"], r["lbl"]) for r in label_fn(cand, pins, *args).collect())
+    finally:
+        for p in pins:
+            p.unpersist(blocking=True)
 
 
 def test_cc_star_matches_minlabel_on_synthetic_graphs(spark):
-    from etl_for_dumdums_spark.catalog.dedup import (
-        _cc_labels_minlabel,
-        _cc_labels_star,
-    )
+    from etl_for_dumdums_spark.catalog.dedup import _cc_labels_star
 
     cases = {
         # chain short enough for min-label's _CC_MAX_ITERS to converge
@@ -88,21 +133,20 @@ def test_cc_star_matches_minlabel_on_synthetic_graphs(spark):
     }
     for name, edges in cases.items():
         cand = _pairs(spark, edges)
-        assert _labels(_cc_labels_star(cand)) == _labels(
-            _cc_labels_minlabel(cand)
+        assert _labels(_cc_labels_star, cand) == _labels(
+            _cc_labels_minlabel, cand
         ), name
 
 
 def test_cc_star_matches_minlabel_on_real_candidates(spark):
     from etl_for_dumdums_spark.catalog.dedup import (
-        _cc_labels_minlabel,
         _cc_labels_star,
         _minhash_candidates,
     )
 
     docs = spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
     cand = _minhash_candidates(docs).cache()
-    assert _labels(_cc_labels_star(cand)) == _labels(_cc_labels_minlabel(cand))
+    assert _labels(_cc_labels_star, cand) == _labels(_cc_labels_minlabel, cand)
 
 
 def test_cc_star_logarithmic_rounds_on_long_chain(spark):
@@ -115,9 +159,22 @@ def test_cc_star_logarithmic_rounds_on_long_chain(spark):
     # (+1 round that verifies no change)
     cand = _pairs(spark, [(i, i + 1) for i in range(255)])
     iters: list[int] = []
-    lbls = _labels(_cc_labels_star(cand, iters))
+    lbls = _labels(_cc_labels_star, cand, iters)
     assert lbls == [(i, 0) for i in range(256)]  # one component rooted at 0
     assert iters[0] <= math.ceil(math.log2(255)) + 1, iters
+
+
+def test_cc_groups_releases_checkpoint_storage(spark):
+    """dedup_cc_groups releases every local checkpoint of its CC rounds.
+    clearCache() drops cached frames but never checkpoint blocks, so after
+    the one-row result is consumed and the cache is cleared, no RDD storage
+    may remain."""
+    from etl_for_dumdums_spark.catalog.dedup import dedup_cc_groups
+
+    row = dedup_cc_groups(spark, SF_SMOKE).collect()[0]
+    assert row["n_components"] > 0
+    spark.catalog.clearCache()
+    assert not spark.sparkContext._jsc.sc().getRDDStorageInfo()
 
 
 # ---------------------------------------------------------------------------

@@ -253,74 +253,3 @@ def test_tiled_guards():
     tif = _hand_tiff("<", tags, b"\x00" * 300)
     with pytest.raises(ValueError, match="multiples of 16"):
         decode_tiff(tif)
-
-
-def _jpeg_segments(stream):
-    """Split a JPEG stream into (marker, full_segment_bytes) pairs."""
-    segs = []
-    pos = 2  # skip SOI
-    while pos < len(stream):
-        assert stream[pos] == 0xFF
-        marker = stream[pos + 1]
-        if marker == 0xD9:  # EOI
-            break
-        (ln,) = struct.unpack_from(">H", stream, pos + 2)
-        if marker == 0xDA:  # SOS: runs to EOI
-            segs.append((marker, stream[pos:-2]))
-            break
-        segs.append((marker, stream[pos : pos + 2 + ln]))
-        pos += 2 + ln
-    return segs
-
-
-def test_jpeg_in_tiff_full_stream_and_jpegtables():
-    """Compression 7: (a) each strip a complete JPEG stream; (b) the
-    abbreviated form — shared DQT/DHT in the JPEGTables tag (347),
-    strips carrying only frame+scan. Flat 8x8 quadrants at q95 decode
-    exactly (the mm_codec_roundtrip analysis), so the check is
-    byte-exact, not approximate."""
-    from etl_for_dumdums_spark.operators.jpeg import encode_jpeg
-
-    img = np.zeros((16, 16, 3), dtype=np.uint8)
-    for q, (y0, x0) in enumerate(((0, 0), (0, 8), (8, 0), (8, 8))):
-        img[y0 : y0 + 8, x0 : x0 + 8, :] = 40 + q * 50
-    jpg = encode_jpeg(img, quality=95)
-
-    def build(strip, jpegtables=None):
-        n_tags = 8 + (1 if jpegtables else 0)
-        ifd_end = 8 + 2 + n_tags * 12 + 4
-        bits_off = ifd_end
-        jt_off = bits_off + 6
-        strip_off = jt_off + (len(jpegtables) if jpegtables else 0)
-        tags = [
-            (256, 3, 1, 16), (257, 3, 1, 16), (258, 3, 3, bits_off),
-            (259, 3, 1, 7), (262, 3, 1, 6),  # YCbCr, the JPEG norm
-            (273, 4, 1, strip_off), (277, 3, 1, 3), (279, 4, 1, len(strip)),
-        ]
-        if jpegtables:
-            tags.append((347, 7, len(jpegtables), jt_off))
-        out = bytearray(b"II*\x00" + struct.pack("<I", 8))
-        out += struct.pack("<H", len(tags))
-        for tag, typ, count, val in sorted(tags):
-            if typ == 3 and count == 1:
-                out += struct.pack("<HHIHH", tag, typ, count, val, 0)
-            else:
-                out += struct.pack("<HHII", tag, typ, count, val)
-        out += struct.pack("<I", 0)
-        out += struct.pack("<3H", 8, 8, 8)
-        out += jpegtables or b""
-        out += strip
-        return bytes(out)
-
-    # (a) full interchange stream per strip
-    got = decode_tiff(build(jpg))
-    assert got.shape == (16, 16, 3) and (got == img).all()
-
-    # (b) abbreviated: tables → tag 347, the strip keeps the rest
-    segs = _jpeg_segments(jpg)
-    tables = b"".join(s for m, s in segs if m in (0xDB, 0xC4))  # DQT, DHT
-    rest = b"".join(s for m, s in segs if m not in (0xDB, 0xC4))
-    jt = b"\xff\xd8" + tables + b"\xff\xd9"
-    strip = b"\xff\xd8" + rest + b"\xff\xd9"
-    got2 = decode_tiff(build(strip, jpegtables=jt))
-    assert (got2 == img).all()
