@@ -1,4 +1,4 @@
-.PHONY: test oracle oracle-smoke oracle-all-sf bench smoke scale-data bench-scale scale-data-100 bench-scale-100
+.PHONY: test oracle oracle-smoke oracle-all-sf bench smoke scale-data bench-scale scale-data-100 bench-scale-100 perfbench perfbench-test
 
 # 10x scale-up of sf0.1 (key-offset replication) + bench on it — the
 # docs/SCALING.md evidence pipeline
@@ -90,6 +90,18 @@ oracle-all-sf:
 
 bench:
 	python bench.py 2>/dev/null
+
+# the repository benchmark (perfbench/README.md): both workloads on one
+# seed, untraced (end-to-end metrics) and then traced (per-layer metrics)
+SEED ?= 1
+perfbench:
+	for w in catalog_sf01 refresh; do \
+	  python3 perfbench/run.py --workload $$w --seed $(SEED) --seconds 5 --trace 0 || exit 1; \
+	  python3 perfbench/run.py --workload $$w --seed $(SEED) --seconds 5 --trace 1 || exit 1; \
+	done
+
+perfbench-test:
+	python -m pytest perfbench/tests -q
 
 smoke:
 	python -c "import __spark_entry__ as e; from etl_for_dumdums_spark.session import get_spark; print(e.entry(get_spark('smoke')).count(), 'rows')"

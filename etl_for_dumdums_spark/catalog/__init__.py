@@ -14,11 +14,15 @@ Determinism rules shared by both sides:
 
 from __future__ import annotations
 
+import threading
+import weakref
 from collections.abc import Callable
+from pathlib import Path
 from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 # float rounding applied on BOTH the Spark and DuckDB side before comparison
 ROUND_DP = 4
@@ -73,12 +77,17 @@ def register(name: str, sql: Optional[str] = None, extra: bool = False):
 
 
 class Tables:
-    """Lazy accessor for the testdata parquet tables of one scale factor."""
+    """Lazy accessor for the testdata parquet tables of one scale factor.
+
+    A table is resolved once per session: the first access runs
+    ``spark.read.parquet`` (a schema-inference Spark job) and the nanos
+    timestamp projection, and every later ``Tables`` on the same session
+    gets that frame back without a job. A table whose files change (name,
+    size or mtime) is resolved again on its next access."""
 
     def __init__(self, spark: SparkSession, sf_dir: str):
         self._spark = spark
         self._dir = sf_dir.rstrip("/")
-        self._cache: dict[str, DataFrame] = {}
 
     def row_count(self, name: str) -> int:
         """Row count from parquet footer metadata — no Spark job. Used for
@@ -87,16 +96,9 @@ class Tables:
         the decision is worth."""
         if name not in TABLE_NAMES:
             raise AttributeError(f"unknown table {name!r}")
-        from pathlib import Path
-
         import pyarrow.parquet as pq
 
-        path = Path(f"{self._dir}/{name}.parquet")
-        parts = (
-            sorted(p for p in path.glob("*.parquet")) or sorted(path.glob("part-*"))
-            if path.is_dir()
-            else [path]
-        )
+        parts = _part_files(f"{self._dir}/{name}.parquet")
         return sum(pq.ParquetFile(str(p)).metadata.num_rows for p in parts)
 
     def __getattr__(self, name: str) -> DataFrame:
@@ -104,52 +106,60 @@ class Tables:
             raise AttributeError(name)
         if name not in TABLE_NAMES:
             raise AttributeError(f"unknown table {name!r}")
-        if name not in self._cache:
-            path = f"{self._dir}/{name}.parquet"
-            df = self._spark.read.parquet(path)
-            for col in _nanos_timestamp_cols(path):
-                # nanos→micros truncation via integer division (values exceed
-                # double's 53-bit mantissa, so no float math here); matches
-                # DuckDB's truncating nanos→micros read. Only applies when the
-                # nanos column actually surfaced as a long (the driver's
-                # legacy.parquet.nanosAsLong path) — Spark reads its OWN
-                # ns-timestamp writes as proper TIMESTAMP already.
-                from pyspark.sql import types as _T
-
-                if isinstance(df.schema[col].dataType, _T.LongType):
-                    df = df.withColumn(
-                        col, F.expr(f"timestamp_micros(CAST(`{col}` DIV 1000 AS BIGINT))")
-                    )
-            self._cache[name] = df
-        return self._cache[name]
+        return _table_frame(self._spark, f"{self._dir}/{name}.parquet")
 
 
-_NANOS_CACHE: dict[str, tuple[str, ...]] = {}
+def _part_files(path: str) -> list[Path]:
+    """The parquet files of one table: driver testdata is a single file;
+    Spark-written datasets (e.g. tools/make_scale_data.py output) are
+    directories of parts."""
+    p = Path(path)
+    if p.is_dir():
+        return sorted(p.glob("*.parquet")) or sorted(p.glob("part-*"))
+    return [p]
 
 
-def _nanos_timestamp_cols(path: str) -> tuple[str, ...]:
-    if path not in _NANOS_CACHE:
-        from pathlib import Path
+# session -> {table path: (file signature, JVM Dataset)}. Weakly keyed and
+# holding JVM handles rather than DataFrames (which reference their session),
+# so a stopped session and its frames can be collected; one entry per path,
+# replaced when the files change.
+_FRAMES: weakref.WeakKeyDictionary[SparkSession, dict[str, tuple]] = weakref.WeakKeyDictionary()
+_FRAMES_LOCK = threading.Lock()
 
-        import pyarrow.parquet as pq
-        import pyarrow.types as patypes
 
-        # driver testdata is a single parquet file; Spark-written datasets
-        # (e.g. tools/make_scale_data.py output) are directories of parts
-        schema_path = path
-        if Path(path).is_dir():
-            parts = sorted(Path(path).glob("*.parquet")) or sorted(
-                Path(path).glob("part-*")
+def _table_frame(spark: SparkSession, path: str) -> DataFrame:
+    parts = _part_files(path)
+    stats = [p.stat() for p in parts]
+    sig = tuple((p.name, st.st_size, st.st_mtime_ns) for p, st in zip(parts, stats))
+    with _FRAMES_LOCK:
+        hit = _FRAMES.get(spark, {}).get(path)
+    if hit is not None and hit[0] == sig:
+        return DataFrame(hit[1], spark)
+    df = spark.read.parquet(path)
+    for col in _nanos_timestamp_cols(parts):
+        # nanos→micros truncation via integer division (values exceed
+        # double's 53-bit mantissa, so no float math here); matches
+        # DuckDB's truncating nanos→micros read. Only applies when the
+        # nanos column actually surfaced as a long (the driver's
+        # legacy.parquet.nanosAsLong path) — Spark reads its OWN
+        # ns-timestamp writes as proper TIMESTAMP already.
+        if isinstance(df.schema[col].dataType, T.LongType):
+            df = df.withColumn(
+                col, F.expr(f"timestamp_micros(CAST(`{col}` DIV 1000 AS BIGINT))")
             )
-            if parts:
-                schema_path = str(parts[0])
-        schema = pq.read_schema(schema_path)
-        _NANOS_CACHE[path] = tuple(
-            f.name
-            for f in schema
-            if patypes.is_timestamp(f.type) and f.type.unit == "ns"
-        )
-    return _NANOS_CACHE[path]
+    with _FRAMES_LOCK:
+        _FRAMES.setdefault(spark, {})[path] = (sig, df._jdf)
+    return df
+
+
+def _nanos_timestamp_cols(parts: list[Path]) -> tuple[str, ...]:
+    import pyarrow.parquet as pq
+    import pyarrow.types as patypes
+
+    schema = pq.read_schema(str(parts[0]))
+    return tuple(
+        f.name for f in schema if patypes.is_timestamp(f.type) and f.type.unit == "ns"
+    )
 
 
 def load_all() -> None:

@@ -30,6 +30,9 @@ _IVEC = "transform({c}, x -> CAST(round(CAST(x AS DOUBLE) * 1000) AS BIGINT))"
 # work beyond this). 200k rows x 64 float64 dims ~ 100 MB — far above the
 # intended <=2000-row deterministic samples, far below driver limits.
 _LOCAL_TRAIN_CAP = 200_000
+# rows per distance block in Lloyd's assignment step: 4096 x k=8 x d=64
+# float64 is 16 MB per temporary, whatever the sample size
+_LLOYD_BLOCK_ROWS = 4096
 
 
 def _lloyd_numpy(x, k: int, seed: int, max_iter: int) -> list[list[float]]:
@@ -57,8 +60,13 @@ def _lloyd_numpy(x, k: int, seed: int, max_iter: int) -> list[list[float]]:
         d2 = np.minimum(d2, ((x - centers[j]) ** 2).sum(axis=1))
     assign = None
     for _ in range(max_iter):
-        dists = ((x[:, None, :] - centers[None, :, :]) ** 2).sum(axis=2)
-        new_assign = dists.argmin(axis=1)
+        # row blocks bound the n x k x d temporary; each row's distances are
+        # the same per-row sums, so assignments do not depend on block size
+        new_assign = np.empty(n, dtype=np.intp)
+        for lo in range(0, n, _LLOYD_BLOCK_ROWS):
+            xb = x[lo : lo + _LLOYD_BLOCK_ROWS]
+            dists = ((xb[:, None, :] - centers[None, :, :]) ** 2).sum(axis=2)
+            new_assign[lo : lo + _LLOYD_BLOCK_ROWS] = dists.argmin(axis=1)
         if assign is not None and (new_assign == assign).all():
             break  # assignments stable -> centers are the fixpoint means
         assign = new_assign

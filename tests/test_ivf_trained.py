@@ -66,3 +66,15 @@ def test_nprobe_increases_recall(spark):
     r1, r4 = recall(1), recall(4)
     assert r4 >= r1, (r1, r4)
     assert r4 == 1.0  # probing ALL buckets = exact brute force recall
+
+
+def test_lloyd_blocked_assignment_matches_unblocked(monkeypatch):
+    import numpy as np
+
+    from etl_for_dumdums_spark.operators import ivf
+
+    n = 2 * ivf._LLOYD_BLOCK_ROWS + 123
+    x = np.random.RandomState(3).normal(size=(n, 16))
+    blocked = ivf._lloyd_numpy(x, k=8, seed=7, max_iter=20)
+    monkeypatch.setattr(ivf, "_LLOYD_BLOCK_ROWS", n)
+    assert ivf._lloyd_numpy(x, k=8, seed=7, max_iter=20) == blocked
