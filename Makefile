@@ -1,4 +1,4 @@
-.PHONY: test oracle oracle-smoke oracle-all-sf bench smoke scale-data bench-scale scale-data-100 bench-scale-100 perfbench perfbench-test
+.PHONY: test oracle oracle-smoke oracle-all-sf bench smoke scale-data bench-scale scale-data-100 bench-scale-100 perfbench perfbench-test loc
 
 # 10x scale-up of sf0.1 (key-offset replication) + bench on it — the
 # docs/SCALING.md evidence pipeline
@@ -24,7 +24,7 @@ bench-scale-100: scale-data-100
 # (win_lag_deltas, win_rolling_frames, scalar_*, text_chunk_tokens,
 # dedup_cc_groups, join_range_interval) are verified at 100x via the
 # sampled tier below instead of full-output comparison.
-ORACLE_100X_EXCLUDE = win_lag_deltas,win_rolling_frames,scalar_string_ops,scalar_math_conditional,scalar_clean_html,scalar_array_ops,dedup_prefix_jaccard,text_chunk_tokens,dedup_cc_groups,join_range_interval
+ORACLE_100X_EXCLUDE = win_lag_deltas,win_rolling_frames,scalar_string_ops,scalar_math_conditional,dedup_prefix_jaccard,text_chunk_tokens,dedup_cc_groups,join_range_interval
 # chunked: a single-process sweep over ~180 scale-up oracles accumulates
 # process memory (JVM native buffers + DuckDB pools) until KB-scale mallocs
 # fail on this no-swap box; fresh-process chunks restart the lifecycle.
@@ -102,6 +102,13 @@ perfbench:
 
 perfbench-test:
 	python -m pytest perfbench/tests -q
+
+# the size figures a simplification reports: source and test line counts
+# and the number of driver-facing, extra-tier and sampled-tier queries
+loc:
+	@echo "source lines: $$(find etl_for_dumdums_spark -name '*.py' -exec cat {} + | wc -l)"
+	@echo "test lines:   $$(find tests -name '*.py' -exec cat {} + | wc -l)"
+	@python -c "from etl_for_dumdums_spark.catalog import EXTRA_QUERIES, QUERIES, SAMPLED_QUERIES, load_all; load_all(); print(f'queries: {len(QUERIES)} driver, {len(EXTRA_QUERIES)} extra, {len(SAMPLED_QUERIES)} sampled')"
 
 smoke:
 	python -c "import __spark_entry__ as e; from etl_for_dumdums_spark.session import get_spark; print(e.entry(get_spark('smoke')).count(), 'rows')"

@@ -198,48 +198,6 @@ def mm_binary_stats(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------------
-# Exact percentiles (linear interpolation — Spark `percentile` ≡ DuckDB
-# quantile_cont). The approximate path at 100 TB is percentile_approx /
-# t-digest; exact is the oracle-checkable baseline.
-# ---------------------------------------------------------------------------
-@register(
-    "agg_percentiles",
-    extra=True,
-    sql=f"""
-    SELECT l_returnflag,
-           round(quantile_cont(l_extendedprice, 0.5), {DP})  AS p50_price,
-           round(quantile_cont(l_extendedprice, 0.9), {DP})  AS p90_price,
-           round(quantile_cont(l_extendedprice, 0.99), {DP}) AS p99_price,
-           round(max(l_extendedprice), {DP})                 AS max_price
-    FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag
-    """,
-)
-def agg_percentiles(spark, sf_dir):
-    t = Tables(spark, sf_dir)
-    # one shared-buffer percentile(col, array(...)) per group instead of
-    # three scalar Percentile aggregates (three independent value->count
-    # maps + three sorts per group); values identical — same buffer, same
-    # interpolation, three percentage points
-    return (
-        t.lineitem.groupBy("l_returnflag")
-        .agg(
-            F.percentile(
-                "l_extendedprice", F.array(F.lit(0.5), F.lit(0.9), F.lit(0.99))
-            ).alias("_ps"),
-            R(F.max("l_extendedprice")).alias("max_price"),
-        )
-        .select(
-            "l_returnflag",
-            R(F.col("_ps")[0]).alias("p50_price"),
-            R(F.col("_ps")[1]).alias("p90_price"),
-            R(F.col("_ps")[2]).alias("p99_price"),
-            "max_price",
-        )
-        .orderBy("l_returnflag")
-    )
-
-
-# ---------------------------------------------------------------------------
 # X2 — the sentiment-enrichment operator (mapInPandas + deterministic stub)
 # surfaced as a catalog query; the stub's md5 arithmetic is replicated in
 # SQL so even the Python path is oracle-checked.
@@ -513,7 +471,7 @@ def win_ntile_deciles(spark, sf_dir):
 # operator; the result frame is built from its outputs (the per-probe counts
 # are distributed jobs, the final four numbers are driver scalars by
 # design). Values interpolate between the same two integer-cent order
-# statistics in both engines; compared at ROUND_DP like agg_percentiles.
+# statistics in both engines; compared at ROUND_DP like agg_global_summary.
 # ---------------------------------------------------------------------------
 _QUANTILE_QS = (0.5, 0.99)  # both probes share the 4-scan bracketed selection (r9)
 

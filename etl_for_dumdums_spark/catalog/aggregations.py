@@ -372,8 +372,7 @@ def _orderstat_percentiles(frame, col, specs):
     """,
 )
 def agg_global_summary(spark, sf_dir):
-    """A11/A14 multi-stat global summary + interpolated percentiles (merged
-    from r01 agg_percentiles, kept in catalog/advanced.py as an extra).
+    """A11/A14 multi-stat global summary + interpolated percentiles.
 
     Decomposed into four independent passes crossJoined as 1-row frames
     (AQE runs independent stages concurrently): plain stats, the two

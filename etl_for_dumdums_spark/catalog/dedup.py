@@ -14,8 +14,9 @@ Scale design (100 TB):
     are uniform).
   * MinHash+LSH: tokenize → 8 signatures (one aggregation) → 4 band keys →
     self-join per band bucket. Only bucket-mates join, so cost is
-    sum(bucket²) not n²; hot buckets (boilerplate docs) would be capped or
-    salted in production.
+    sum(bucket²) not n²; hot buckets (boilerplate docs) above _MAX_BUCKET
+    are dropped by _capped_band_pairs, the one self-join every banded
+    family (MinHash, 64-bit SimHash, operators/corpus.py) shares.
   * SimHash: one aggregation per doc (16 bit-counters) then a bucket join —
     64-bit + multi-probe at scale, 16-bit here to exercise collisions at
     test SF.
@@ -49,7 +50,6 @@ def _tokens(df):
 # Exact + fingerprint dedup in one result: both are digest-groupBy aggregates
 # (raw-text md5 for exact; sorted-distinct-token-set md5 for reorder-robust
 # fingerprinting), unioned under a `method` column with one stats schema.
-# Merged from r01 dedup_exact + dedup_fingerprint (kept below as extras).
 # Single shuffle per digest — the scale-safe exact-dedup shape at 100 TB.
 # ---------------------------------------------------------------------------
 @register(
@@ -124,83 +124,6 @@ def dedup_exact_fingerprint(spark, sf_dir):
             F.max("n").alias("max_group_size"),
         )
         .orderBy("method", "source")
-    )
-
-
-# ---------------------------------------------------------------------------
-# Exact dedup: hash-groupBy on the raw text digest.
-# ---------------------------------------------------------------------------
-@register(
-    "dedup_exact",
-    extra=True,
-    sql="""
-    WITH grouped AS (
-      SELECT md5(text) AS digest, count(*) AS n_copies, min(doc_id) AS keep_id
-      FROM documents GROUP BY md5(text))
-    SELECT count(*)                          AS n_distinct_texts,
-           CAST(sum(n_copies) AS BIGINT)              AS n_docs,
-           CAST(sum(n_copies) AS BIGINT) - count(*)   AS n_dropped,
-           CAST(count_if(n_copies > 1) AS BIGINT)     AS n_dup_groups,
-           max(n_copies)                     AS max_group_size
-    FROM grouped
-    """,
-)
-def dedup_exact(spark, sf_dir):
-    t = Tables(spark, sf_dir)
-    grouped = t.documents.groupBy(F.md5("text").alias("digest")).agg(
-        F.count("*").alias("n_copies"), F.min("doc_id").alias("keep_id")
-    )
-    return grouped.agg(
-        F.count("*").alias("n_distinct_texts"),
-        F.sum("n_copies").alias("n_docs"),
-        (F.sum("n_copies") - F.count("*")).alias("n_dropped"),
-        F.count_if(F.col("n_copies") > 1).alias("n_dup_groups"),
-        F.max("n_copies").alias("max_group_size"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# Fingerprint dedup: canonical form = sorted distinct token set. Catches
-# reordered/shuffled near-duplicates that exact hashing misses.
-# ---------------------------------------------------------------------------
-@register(
-    "dedup_fingerprint",
-    extra=True,
-    sql=f"""
-    WITH fp AS (
-      SELECT source, md5(array_to_string(list_sort({_TOKENIZE_SQL}), ' ')) AS fingerprint
-      FROM documents),
-    grouped AS (
-      SELECT source, fingerprint, count(*) AS n FROM fp GROUP BY 1, 2)
-    SELECT source,
-           count(*)                AS n_fingerprints,
-           CAST(sum(n) AS BIGINT)          AS n_docs,
-           CAST(count_if(n > 1) AS BIGINT) AS n_dup_groups,
-           CAST(sum(CASE WHEN n > 1 THEN n ELSE 0 END) AS BIGINT) AS n_docs_in_dup_groups
-    FROM grouped GROUP BY source ORDER BY source
-    """,
-)
-def dedup_fingerprint(spark, sf_dir):
-    t = Tables(spark, sf_dir)
-    fp = t.documents.select(
-        "source",
-        F.md5(
-            F.concat_ws(
-                " ",
-                F.sort_array(F.array_distinct(F.split(F.lower(F.trim(F.col("text"))), r"\s+"))),
-            )
-        ).alias("fingerprint"),
-    )
-    grouped = fp.groupBy("source", "fingerprint").agg(F.count("*").alias("n"))
-    return (
-        grouped.groupBy("source")
-        .agg(
-            F.count("*").alias("n_fingerprints"),
-            F.sum("n").alias("n_docs"),
-            F.count_if(F.col("n") > 1).alias("n_dup_groups"),
-            F.sum(F.when(F.col("n") > 1, F.col("n")).otherwise(0)).alias("n_docs_in_dup_groups"),
-        )
-        .orderBy("source")
     )
 
 
@@ -298,10 +221,45 @@ def _mh_bands(sig):
 _MAX_BUCKET = 64
 
 
-@register(
-    "dedup_minhash_lsh",
-    sql=f"""
-    WITH {_mh_sig_sql()},
+def _capped_band_pairs(bands, max_bucket: int = _MAX_BUCKET):
+    """The capped band self-join over (doc_id, band, key) rows, shared by
+    every MinHash/SimHash family. Returns (pairs, hot): the distinct
+    candidate pairs (da < db) from buckets of at most ``max_bucket`` docs,
+    and the distinct (band, key) buckets above the cap.
+
+    Bucket sizes come from a window count over (band, key) — one shuffle,
+    no aggregate-and-join-back — and the sized frame is cached so the
+    caller's tokenize→signature subtree (the expensive part) runs ONCE for
+    the pair and hot readers instead of once per branch. The self-join's
+    equi-keys match the window partitioning, so the cached layout is reused
+    without a new Exchange."""
+    from pyspark.sql import Window as _W
+
+    sized = bands.withColumn(
+        "bucket_size", F.count("*").over(_W.partitionBy("band", "key"))
+    ).cache()
+    small = sized.filter(F.col("bucket_size") <= max_bucket).select("doc_id", "band", "key")
+    a, b = small.alias("a"), small.alias("b")
+    pairs = (
+        a.join(
+            b,
+            (F.col("a.band") == F.col("b.band"))
+            & (F.col("a.key") == F.col("b.key"))
+            & (F.col("a.doc_id") < F.col("b.doc_id")),
+        )
+        .select(F.col("a.doc_id").alias("da"), F.col("b.doc_id").alias("db"))
+        .distinct()
+    )
+    hot = sized.filter(F.col("bucket_size") > max_bucket).select("band", "key").distinct()
+    return pairs, hot
+
+
+def _minhash_cand_sql(where: str = "") -> str:
+    """The capped band-join candidate pairs over the documents table, as
+    reusable SQL CTE text (the oracle twin of _minhash_candidates).
+    ``where`` injects an input predicate (the sampled 100x-oracle tier
+    restricts the corpus deterministically; see catalog/sampled.py)."""
+    return f"""{_mh_sig_sql(where)},
     bands AS (
       {_mh_bands_sql()}),
     small_bands AS (
@@ -311,7 +269,19 @@ _MAX_BUCKET = 64
     cand AS (
       SELECT DISTINCT a.doc_id AS da, b.doc_id AS db
       FROM small_bands a JOIN small_bands b
-        ON a.band = b.band AND a.key = b.key AND a.doc_id < b.doc_id)
+        ON a.band = b.band AND a.key = b.key AND a.doc_id < b.doc_id)"""
+
+
+def _minhash_candidates(documents):
+    """Capped band-join candidate pairs (da < db) over ``documents`` —
+    Spark twin of _minhash_cand_sql."""
+    return _capped_band_pairs(_mh_bands(_mh_sig(documents)))[0]
+
+
+@register(
+    "dedup_minhash_lsh",
+    sql=f"""
+    WITH {_minhash_cand_sql()}
     SELECT (SELECT count(*) FROM cand) AS n_candidate_pairs,
            (SELECT count(DISTINCT d) FROM (SELECT da AS d FROM cand UNION SELECT db FROM cand))
              AS n_docs_flagged,
@@ -323,31 +293,7 @@ _MAX_BUCKET = 64
 )
 def dedup_minhash_lsh(spark, sf_dir):
     t = Tables(spark, sf_dir)
-    bands = _mh_bands(_mh_sig(t.documents))
-    # hot-bucket cap (see _MAX_BUCKET note): bucket sizes via a window count
-    # over (band, key) — one shuffle, no separate aggregate-and-join-back —
-    # and the sized frame is cached so the tokenize→signature subtree
-    # (the expensive part) runs ONCE for the small/hot/self-join readers
-    # instead of once per branch. The self-join's equi-keys match the window
-    # partitioning, so the cached layout is reused without a new Exchange.
-    from pyspark.sql import Window as _W
-
-    sized = bands.withColumn(
-        "bucket_size", F.count("*").over(_W.partitionBy("band", "key"))
-    ).cache()
-    small = sized.filter(F.col("bucket_size") <= _MAX_BUCKET).select("doc_id", "band", "key")
-    left = small.alias("a")
-    right = small.alias("b")
-    cand = (
-        left.join(
-            right,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.key") == F.col("b.key"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("da"), F.col("b.doc_id").alias("db"))
-        .distinct()
-    )
+    cand, hot = _capped_band_pairs(_mh_bands(_mh_sig(t.documents)))
     # pair count + flagged-doc count from ONE pass over the candidate set:
     # explode each pair to its two members — count(*)/2 is the pair count
     # (exact: the exploded row count is even by construction) and
@@ -358,7 +304,6 @@ def dedup_minhash_lsh(spark, sf_dir):
         (F.count("*") / 2).cast("long").alias("n_candidate_pairs"),
         F.count_distinct("d").alias("n_docs_flagged"),
     )
-    hot = sized.filter(F.col("bucket_size") > _MAX_BUCKET).select("band", "key").distinct()
     return (
         pair_stats.crossJoin(F.broadcast(t.documents.agg(F.count("*").alias("n_docs"))))
         .crossJoin(F.broadcast(hot.agg(F.count("*").alias("n_hot_buckets_skipped"))))
@@ -662,26 +607,10 @@ def dedup_simhash64(spark, sf_dir):
     bands = bandvals.select("doc_id", F.explode(band_structs).alias("bk")).select(
         "doc_id", F.col("bk.band").alias("band"), F.col("bk.key").alias("key")
     )
-    # same sized-window + cache shape as dedup_minhash_lsh: the 64-bit vote
-    # aggregation runs once, not once per small/hot reader
-    from pyspark.sql import Window as _W
-
-    sized = bands.withColumn(
-        "bucket_size", F.count("*").over(_W.partitionBy("band", "key"))
-    ).cache()
-    small = sized.filter(F.col("bucket_size") <= _MAX_BUCKET).select("doc_id", "band", "key")
-    a, b = small.alias("a"), small.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.key") == F.col("b.key"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("da"), F.col("b.doc_id").alias("db"))
-        .distinct()
-        .cache()  # read by the verification join AND the candidate count
-    )
+    # the capped self-join caches its sized frame, so the 64-bit vote
+    # aggregation runs once, not once per pair/hot reader
+    cand, hot = _capped_band_pairs(bands)
+    cand = cand.cache()  # read by the verification join AND the candidate count
     x = bandvals.select(
         F.col("doc_id").alias("da"), *[F.col(f"b{i}").alias(f"xa{i}") for i in range(_SH64_BANDS)]
     )
@@ -696,7 +625,6 @@ def dedup_simhash64(spark, sf_dir):
     flagged = confirmed.select(F.col("da").alias("d")).union(
         confirmed.select("db")
     ).distinct()
-    hot = sized.filter(F.col("bucket_size") > _MAX_BUCKET).select("band", "key").distinct()
     return (
         t.documents.agg(F.count("*").alias("n_docs"))
         .crossJoin(cand.agg(F.count("*").alias("n_candidate_pairs")))
@@ -726,51 +654,6 @@ def dedup_simhash64(spark, sf_dir):
 # ---------------------------------------------------------------------------
 _CC_MAX_ITERS = 25  # >= graph diameter for any capped-bucket candidate graph
 _DP_CC = 4
-
-
-def _minhash_cand_sql(where: str = "") -> str:
-    """The capped band-join candidate pairs, as reusable SQL CTE text
-    (identical logic to dedup_minhash_lsh's prefix). ``where`` injects an
-    input predicate (the sampled 100x-oracle tier restricts the corpus
-    deterministically; see catalog/sampled.py)."""
-    return f"""{_mh_sig_sql(where)},
-    bands AS (
-      {_mh_bands_sql()}),
-    small_bands AS (
-      SELECT doc_id, band, key,
-             count(*) OVER (PARTITION BY band, key) AS bucket_size
-      FROM bands QUALIFY bucket_size <= {_MAX_BUCKET}),
-    cand AS (
-      SELECT DISTINCT a.doc_id AS da, b.doc_id AS db
-      FROM small_bands a JOIN small_bands b
-        ON a.band = b.band AND a.key = b.key AND a.doc_id < b.doc_id)"""
-
-
-def _minhash_candidates(documents):
-    """Capped band-join candidate pairs (da < db) — Spark twin of
-    _minhash_cand_sql, same logic as dedup_minhash_lsh's prefix."""
-    bands = _mh_bands(_mh_sig(documents))
-    # window-count bucket sizing (see dedup_minhash_lsh): one shuffle on the
-    # join key, signature aggregation computed once for both join sides
-    from pyspark.sql import Window as _W
-
-    small = (
-        bands.withColumn("bucket_size", F.count("*").over(_W.partitionBy("band", "key")))
-        .filter(F.col("bucket_size") <= _MAX_BUCKET)
-        .select("doc_id", "band", "key")
-        .cache()
-    )
-    a, b = small.alias("a"), small.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.key") == F.col("b.key"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("da"), F.col("b.doc_id").alias("db"))
-        .distinct()
-    )
 
 
 def _cc_sql(where: str = "") -> str:

@@ -20,8 +20,8 @@ R = lambda c: F.round(c, DP)  # noqa: E731
 # F1/F2/F5/F6 — null/empty guards, boolean NOT-TRUE, categorical equality,
 # and regex predicates (positive via count_if, negative in the WHERE clause;
 # reference sources/hacker_news.py:78-83, stg_hn__stories.sql:3,
-# fct_hn_keyword_trends.sql:69 rlike — merged from r01 filter_regex, kept
-# below as an extra). Regexes stay in the dialect-portable subset (\b, \s).
+# fct_hn_keyword_trends.sql:69 rlike). Regexes stay in the dialect-portable
+# subset (\b, \s).
 # ---------------------------------------------------------------------------
 @register(
     "filter_guards",
@@ -59,34 +59,6 @@ def filter_guards(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------------
-# F3 — date-range lookback with a fixed cutoff (parameterized "now";
-# reference sources/fda_food_events.py:96, data.py:106).
-# ---------------------------------------------------------------------------
-@register(
-    "filter_date_lookback",
-    extra=True,
-    sql=f"""
-    SELECT event_type, count(*) AS n, round(avg(value), {DP}) AS avg_value
-    FROM events
-    WHERE ts >= TIMESTAMP '2024-01-24 00:00:00'
-      AND ts <  TIMESTAMP '2024-01-31 00:00:00'
-    GROUP BY event_type ORDER BY event_type
-    """,
-)
-def filter_date_lookback(spark, sf_dir):
-    t = Tables(spark, sf_dir)
-    return (
-        t.events.filter(
-            (F.col("ts") >= F.lit("2024-01-24 00:00:00").cast("timestamp"))
-            & (F.col("ts") < F.lit("2024-01-31 00:00:00").cast("timestamp"))
-        )
-        .groupBy("event_type")
-        .agg(F.count("*").alias("n"), R(F.avg("value")).alias("avg_value"))
-        .orderBy("event_type")
-    )
-
-
-# ---------------------------------------------------------------------------
 # F4 — IN-list via dim subquery → broadcast left-semi join
 # (reference stg_fda__recalls.sql:14-23,57 state-code filter).
 # ---------------------------------------------------------------------------
@@ -113,35 +85,9 @@ def filter_in_subquery(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------------
-# F6 — regex predicate (reference fct_hn_keyword_trends.sql:69 rlike).
-# Patterns restricted to the dialect-portable subset (\b, \s, alternation).
-# ---------------------------------------------------------------------------
-@register(
-    "filter_regex",
-    extra=True,
-    sql="""
-    SELECT lang, count(*) AS n_matching
-    FROM documents
-    WHERE regexp_matches(lower(text), '\\bspark\\b') AND NOT regexp_matches(lower(text), '\\bslow\\b')
-    GROUP BY lang ORDER BY lang
-    """,
-)
-def filter_regex(spark, sf_dir):
-    t = Tables(spark, sf_dir)
-    low = F.lower(F.col("text"))
-    return (
-        t.documents.filter(low.rlike(r"\bspark\b") & ~low.rlike(r"\bslow\b"))
-        .groupBy("lang")
-        .agg(F.count("*").alias("n_matching"))
-        .orderBy("lang")
-    )
-
-
-# ---------------------------------------------------------------------------
 # F3/F7 — date-range lookback with a fixed cutoff (parameterized "now";
 # reference sources/fda_food_events.py:96, data.py:106) feeding a
-# post-aggregation HAVING filter (fct_hn_domain_stats.sql:20-25). Merged
-# from r01 filter_date_lookback + filter_having (kept below as extras); the
+# post-aggregation HAVING filter (fct_hn_domain_stats.sql:20-25). The
 # lookback predicate pushes down to the parquet scan before the group-by.
 # ---------------------------------------------------------------------------
 @register(

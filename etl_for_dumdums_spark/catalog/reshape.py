@@ -23,8 +23,7 @@ SEGMENTS = ["AUTOMOBILE", "BUILDING", "FURNITURE", "HOUSEHOLD", "MACHINERY"]
 # assignee × cycle sum-of-estimate) over the COMPLETED key domain: the scan
 # starts from the nation dim LEFT JOIN customer, so nations with no customers
 # still appear as all-zero rows — the dense-matrix completion idiom
-# (pages/2_GitHub_PRs.py:337-351 heatmap grid; merged from r01
-# reshape_dense_matrix, kept below as an extra). Explicit pivot values avoid
+# (pages/2_GitHub_PRs.py:337-351 heatmap grid). Explicit pivot values avoid
 # the extra distinct-values job and keep the plan static; per-segment counts
 # ride along with the balance sums.
 # ---------------------------------------------------------------------------
@@ -134,49 +133,4 @@ def reshape_value_counts(spark, sf_dir):
         t.events.groupBy("event_type")
         .agg(F.count("*").alias("n"))
         .orderBy(F.col("n").desc(), "event_type")
-    )
-
-
-# ---------------------------------------------------------------------------
-# R4 — dense matrix completion: all key pairs, observed counts, fill 0
-# (reference pages/2_GitHub_PRs.py:337-351 heatmap grid).
-# ---------------------------------------------------------------------------
-@register(
-    "reshape_dense_matrix",
-    extra=True,
-    sql="""
-    WITH pairs AS (
-      SELECT n.n_nationkey, s.c_mktsegment
-      FROM (SELECT DISTINCT n_nationkey FROM nation) n
-      CROSS JOIN (SELECT DISTINCT c_mktsegment FROM customer) s),
-    observed AS (
-      SELECT c_nationkey, c_mktsegment, count(*) AS n
-      FROM customer GROUP BY 1, 2)
-    SELECT p.n_nationkey AS nationkey, p.c_mktsegment AS segment,
-           coalesce(o.n, 0) AS n_customers
-    FROM pairs p
-    LEFT JOIN observed o
-      ON p.n_nationkey = o.c_nationkey AND p.c_mktsegment = o.c_mktsegment
-    ORDER BY nationkey, segment
-    """,
-)
-def reshape_dense_matrix(spark, sf_dir):
-    t = Tables(spark, sf_dir)
-    pairs = t.nation.select("n_nationkey").distinct().crossJoin(
-        t.customer.select("c_mktsegment").distinct()
-    )
-    observed = t.customer.groupBy("c_nationkey", "c_mktsegment").agg(F.count("*").alias("n"))
-    return (
-        pairs.join(
-            observed,
-            (pairs.n_nationkey == observed.c_nationkey)
-            & (pairs.c_mktsegment == observed.c_mktsegment),
-            "left",
-        )
-        .select(
-            F.col("n_nationkey").alias("nationkey"),
-            pairs.c_mktsegment.alias("segment"),
-            F.coalesce(F.col("n"), F.lit(0)).alias("n_customers"),
-        )
-        .orderBy("nationkey", "segment")
     )

@@ -83,11 +83,9 @@ def _mod_pred(col: str, mod: int):
 
 # ~1/101 of keys — prime modulus so replication offsets don't alias
 _output_sampled("scalar_string_ops", _mod_pred("p_partkey", 101), "p_partkey % 101 = 0")
-_output_sampled("scalar_array_ops", _mod_pred("p_partkey", 101), "p_partkey % 101 = 0")
 _output_sampled(
     "scalar_math_conditional", _mod_pred("c_custkey", 101), "c_custkey % 101 = 0"
 )
-_output_sampled("scalar_clean_html", _mod_pred("doc_id", 101), "doc_id % 101 = 0")
 _output_sampled("text_chunk_tokens", _mod_pred("doc_id", 101), "doc_id % 101 = 0")
 
 # ---------------------------------------------------------------------------

@@ -20,8 +20,8 @@ R = lambda c: F.round(c, DP)  # noqa: E731
 # String ops: lower/upper/trim/concat/substring + regexp_extract
 # (reference dim_users.sql:14, sources/hacker_news.py:69) + array scalars
 # over the same part row: conditional-tag array build, filter-out-nulls,
-# size, join-to-string (merged from r01 scalar_array_ops, kept below as an
-# extra; reference row-wise list lambdas, pages/1_Linear_Issues.py:118-133).
+# size, join-to-string (reference row-wise list lambdas,
+# pages/1_Linear_Issues.py:118-133).
 # ---------------------------------------------------------------------------
 @register(
     "scalar_string_ops",
@@ -76,38 +76,6 @@ def scalar_string_ops(spark, sf_dir):
         )
         .orderBy("p_partkey")
     )
-
-
-# ---------------------------------------------------------------------------
-# X1 — HTML-clean chain as native regexp_replace (no UDF)
-# (reference sources/hacker_news.py:118-128 / stg_hn__comments.sql:21-24).
-# ---------------------------------------------------------------------------
-@register(
-    "scalar_clean_html",
-    extra=True,
-    sql="""
-    WITH cleaned AS (
-      SELECT doc_id,
-             trim(regexp_replace(
-               replace(replace(replace(replace(replace(replace(replace(
-                 regexp_replace(text, '<[^>]+>', ' ', 'g'),
-                 '&amp;', '&'), '&lt;', '<'), '&gt;', '>'), '&quot;', '"'),
-                 '&#x27;', ''''), '&#39;', ''''), '&nbsp;', ' '),
-               '\\s+', ' ', 'g')) AS clean_text
-      FROM documents)
-    SELECT doc_id, length(clean_text) AS clean_len,
-           substring(clean_text, 1, 40) AS clean_prefix
-    FROM cleaned ORDER BY doc_id
-    """,
-)
-def scalar_clean_html(spark, sf_dir):
-    t = Tables(spark, sf_dir)
-    cleaned = clean_html(F.col("text"))
-    return t.documents.select(
-        "doc_id",
-        F.length(cleaned).alias("clean_len"),
-        F.substring(cleaned, 1, 40).alias("clean_prefix"),
-    ).orderBy("doc_id")
 
 
 # ---------------------------------------------------------------------------
@@ -250,49 +218,3 @@ def scalar_math_conditional(spark, sf_dir):
         .otherwise("delinquent")
         .alias("tier"),
     ).orderBy("c_custkey")
-
-
-# ---------------------------------------------------------------------------
-# Array ops: build/filter/size/default-if-empty/join-to-string
-# (reference int_fda__food_event_reactions.sql:90-158: the
-#  array(select x from unnest([...]) where x is not null) idiom).
-# Arrays are serialized with array_join so the oracle hash is dialect-proof.
-# ---------------------------------------------------------------------------
-@register(
-    "scalar_array_ops",
-    extra=True,
-    sql="""
-    WITH flags AS (
-      SELECT p_partkey,
-             list_filter([CASE WHEN p_size > 10 THEN 'large' END,
-                          CASE WHEN p_retailprice > 1200 THEN 'premium' END,
-                          CASE WHEN p_type = 'ECONOMY' THEN 'economy' END],
-                         x -> x IS NOT NULL) AS tags
-      FROM part)
-    SELECT p_partkey,
-           CAST(len(tags) AS INT) AS n_tags,
-           array_to_string(CASE WHEN len(tags) = 0 THEN ['untagged'] ELSE tags END, ',') AS tag_list
-    FROM flags ORDER BY p_partkey
-    """,
-)
-def scalar_array_ops(spark, sf_dir):
-    t = Tables(spark, sf_dir)
-    tags = F.array_compact(
-        F.array(
-            F.when(F.col("p_size") > 10, "large"),
-            F.when(F.col("p_retailprice") > 1200, "premium"),
-            F.when(F.col("p_type") == "ECONOMY", "economy"),
-        )
-    )
-    return (
-        t.part.select("p_partkey", tags.alias("tags"))
-        .select(
-            "p_partkey",
-            F.size("tags").alias("n_tags"),
-            F.array_join(
-                F.when(F.size("tags") == 0, F.array(F.lit("untagged"))).otherwise(F.col("tags")),
-                ",",
-            ).alias("tag_list"),
-        )
-        .orderBy("p_partkey")
-    )

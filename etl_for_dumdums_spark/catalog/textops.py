@@ -47,8 +47,7 @@ _CLEAN_SQL = """trim(regexp_replace(
 # Document profile: token counting (whitespace + BPE-ish regex), quality
 # bucketing + corpus ratios, normalized-text fingerprint, and the X1
 # clean_html chain (reference sources/hacker_news.py:118-128) — one scan,
-# all native column expressions. Merged from r01 text_token_stats /
-# text_quality_score / text_fingerprint / scalar_clean_html (kept as extras).
+# all native column expressions.
 # All ratio denominators are exact integer sums divided once at the edge.
 # ---------------------------------------------------------------------------
 @register(
@@ -127,55 +126,6 @@ def text_profile(spark, sf_dir):
             R(F.sum("clean_len") * 1.0 / F.count("*")).alias("avg_clean_len"),
         )
         .orderBy("lang", "quality_bucket")
-    )
-
-
-# ---------------------------------------------------------------------------
-# Token counting: whitespace tokens + BPE-ish regex token estimate.
-# ---------------------------------------------------------------------------
-@register(
-    "text_token_stats",
-    extra=True,
-    sql=f"""
-    SELECT lang,
-           count(*) AS n_docs,
-           CAST(sum(len(regexp_split_to_array(trim(text), '\\s+'))) AS BIGINT) AS total_ws_tokens,
-           round(avg(len(regexp_split_to_array(trim(text), '\\s+'))), {DP}) AS avg_ws_tokens,
-           CAST(sum(len(regexp_extract_all(lower(text), '[a-z]+|[0-9]+|[^a-z0-9\\s]'))) AS BIGINT) AS total_bpe_ish_tokens,
-           round(avg(n_chars * 1.0), {DP}) AS avg_chars
-    FROM documents
-    GROUP BY lang ORDER BY lang
-    """,
-)
-def text_token_stats(spark, sf_dir):
-    t = Tables(spark, sf_dir)
-    # counts, not arrays: size(split(...)) / size(regexp_extract_all(...))
-    # materialized every token/match as a UTF8String just to take the
-    # length; regexp_count runs the same regex scan without allocating
-    # (guide §1.2 per-task work). Identities (pinned in
-    # tests/test_optimization_r09.py): a trimmed string has
-    # (#maximal-\s+-runs + 1) whitespace tokens, and extract_all's match
-    # list has regexp_count entries by definition.
-    ws_tokens = F.regexp_count(F.trim(F.col("text")), F.lit(r"\s+")) + F.lit(1)
-    bpe_ish = F.regexp_count(
-        F.lower(F.col("text")), F.lit(r"[a-z]+|[0-9]+|[^a-z0-9\s]")
-    )
-    # pre-project the tokenizations once — as inline aggregate inputs the
-    # regex passes run per referencing aggregate (same fix as
-    # scalar_json_extract)
-    pre = t.documents.select(
-        "lang", ws_tokens.alias("ws"), bpe_ish.alias("bpe"), "n_chars"
-    )
-    return (
-        pre.groupBy("lang")
-        .agg(
-            F.count("*").alias("n_docs"),
-            F.sum("ws").alias("total_ws_tokens"),
-            R(F.avg("ws")).alias("avg_ws_tokens"),
-            F.sum("bpe").alias("total_bpe_ish_tokens"),
-            R(F.avg(F.col("n_chars") * 1.0)).alias("avg_chars"),
-        )
-        .orderBy("lang")
     )
 
 
@@ -293,37 +243,6 @@ def text_langid_confusion(spark, sf_dir):
         pred.groupBy("actual_lang", "predicted_lang")
         .agg(F.count("*").alias("n_docs"))
         .orderBy("actual_lang", "predicted_lang")
-    )
-
-
-# ---------------------------------------------------------------------------
-# Document fingerprinting: digest of the normalized text (lower, collapse
-# whitespace) — the id for downstream exact dedup / lineage.
-# ---------------------------------------------------------------------------
-@register(
-    "text_fingerprint",
-    extra=True,
-    sql="""
-    WITH fp AS (
-      SELECT lang, substr(md5(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g')), 1, 12)
-               AS fingerprint
-      FROM documents)
-    SELECT lang, count(*) AS n_docs, count(DISTINCT fingerprint) AS n_distinct_fps
-    FROM fp GROUP BY lang ORDER BY lang
-    """,
-)
-def text_fingerprint(spark, sf_dir):
-    t = Tables(spark, sf_dir)
-    fp = t.documents.select(
-        "lang",
-        F.substring(
-            F.md5(F.regexp_replace(F.lower(F.trim(F.col("text"))), r"\s+", " ")), 1, 12
-        ).alias("fingerprint"),
-    )
-    return (
-        fp.groupBy("lang")
-        .agg(F.count("*").alias("n_docs"), F.count_distinct("fingerprint").alias("n_distinct_fps"))
-        .orderBy("lang")
     )
 
 

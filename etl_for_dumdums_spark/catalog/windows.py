@@ -23,8 +23,7 @@ R = lambda c: F.round(c, DP)  # noqa: E731
 # three window specs over the same scan: latest-per-(user,type) dedup (W1,
 # reference stg_hn__comments.sql:6-11), best-record with CASE order (W2,
 # stg_fda__food_events.sql:18-29), latest-per-user recency pick (W5,
-# fct_stock_prices.sql:81-84). Merged from r01 win_dedup_latest /
-# win_best_record_case_order / win_recency_latest (kept below as extras).
+# fct_stock_prices.sql:81-84).
 # Value sums go through integer cents so summation order can't flip the hash.
 # ---------------------------------------------------------------------------
 @register(
@@ -85,43 +84,11 @@ def win_pick_per_group(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------------
-# W1/W2 — row_number dedup keeping the latest record
-# (reference stg_hn__comments.sql:6-11, stg_oura__daily_activity.sql:7-11).
-# ---------------------------------------------------------------------------
-@register(
-    "win_dedup_latest",
-    extra=True,
-    sql=f"""
-    WITH ranked AS (
-      SELECT user_id, event_type, value,
-             row_number() OVER (PARTITION BY user_id, event_type
-                                ORDER BY ts DESC, event_id DESC) AS rn
-      FROM events)
-    SELECT event_type, count(*) AS n_user_types, round(sum(value), {DP}) AS sum_latest_value
-    FROM ranked WHERE rn = 1
-    GROUP BY event_type ORDER BY event_type
-    """,
-)
-def win_dedup_latest(spark, sf_dir):
-    t = Tables(spark, sf_dir)
-    w = W.partitionBy("user_id", "event_type").orderBy(
-        F.col("ts").desc(), F.col("event_id").desc()
-    )
-    return (
-        t.events.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .groupBy("event_type")
-        .agg(F.count("*").alias("n_user_types"), R(F.sum("value")).alias("sum_latest_value"))
-        .orderBy("event_type")
-    )
-
-
-# ---------------------------------------------------------------------------
 # W3/W4/F8 — top-N-per-group via rank filter (QUALIFY idiom)
 # (reference fct_sales_by_county.sql:35-50, sources/hacker_news.py:306-325)
 # + A13 group-total transform: each row's share of its partition total
-# (reference pages/9_FDA_Food_Events.py:346; merged from r01 win_group_share,
-# kept below as an extra). Totals are summed in integer cents so summation
+# (reference pages/9_FDA_Food_Events.py:346). Totals are summed in integer
+# cents so summation
 # order can't flip the hash. The oracle SQL is the simple one-window QUALIFY
 # form; the Spark plan is the scalable salted two-stage equivalent (see the
 # function body) because the partition key has only 5 distinct values.
@@ -178,38 +145,6 @@ def win_top_n_per_group(spark, sf_dir):
     )
 
 
-# ---------------------------------------------------------------------------
-# W5 — recency rank consumed as rank = 1 (latest record per key)
-# (reference fct_stock_prices.sql:81-84, Summary.py:124).
-# ---------------------------------------------------------------------------
-@register(
-    "win_recency_latest",
-    extra=True,
-    sql=f"""
-    WITH ranked AS (
-      SELECT user_id, event_type, value, ts,
-             row_number() OVER (PARTITION BY user_id ORDER BY ts DESC, event_id DESC) AS recency_rank
-      FROM events)
-    SELECT user_id, event_type AS last_event_type, round(value, {DP}) AS last_value
-    FROM ranked WHERE recency_rank = 1
-    ORDER BY user_id
-    """,
-)
-def win_recency_latest(spark, sf_dir):
-    t = Tables(spark, sf_dir)
-    w = W.partitionBy("user_id").orderBy(F.col("ts").desc(), F.col("event_id").desc())
-    return (
-        t.events.withColumn("recency_rank", F.row_number().over(w))
-        .filter(F.col("recency_rank") == 1)
-        .select(
-            "user_id",
-            F.col("event_type").alias("last_event_type"),
-            R(F.col("value")).alias("last_value"),
-        )
-        .orderBy("user_id")
-    )
-
-
 def _daily_revenue(t):
     """One row per (priority, day): the pre-aggregation that keeps all
     following window ops on a tiny series regardless of fact-table SF."""
@@ -258,9 +193,9 @@ def win_lag_deltas(spark, sf_dir):
 # ---------------------------------------------------------------------------
 # W8/W9/W11 — trailing rolling mean/max/min frames + derived signals
 # (reference fct_stock_prices.sql:37-78,96-129: 7d/30d MA, 52-week range)
-# + W10 centered ±3-row peak flag (reference fct_keyword_trends.sql:49-57;
-# merged from r01 win_centered_peak, kept below as an extra). All frames are
-# columns of one window spec over the same pre-aggregated daily series.
+# + W10 centered ±3-row peak flag (reference fct_keyword_trends.sql:49-57).
+# All frames are columns of one window spec over the same pre-aggregated
+# daily series.
 # ---------------------------------------------------------------------------
 @register(
     "win_rolling_frames",
@@ -298,124 +233,6 @@ def win_rolling_frames(spark, sf_dir):
         F.when(ma7 > ma30, "uptrend").otherwise("downtrend").alias("ma_trend"),
         F.when(rev >= F.max(rev).over(base.rowsBetween(-3, 3)), 1).otherwise(0).alias("is_peak"),
     ).orderBy("o_orderpriority", "order_date")
-
-
-# ---------------------------------------------------------------------------
-# W10 — centered window for peak detection
-# (reference fct_keyword_trends.sql:49-57: rows between 3 preceding and 3
-# following).
-# ---------------------------------------------------------------------------
-@register(
-    "win_centered_peak",
-    extra=True,
-    sql=f"""
-    WITH daily AS ({_DAILY_SQL}),
-    flagged AS (
-      SELECT o_orderpriority, order_date, revenue,
-             CASE WHEN revenue >= max(revenue) OVER (PARTITION BY o_orderpriority ORDER BY order_date
-                                ROWS BETWEEN 3 PRECEDING AND 3 FOLLOWING)
-                  THEN 1 ELSE 0 END AS is_peak
-      FROM daily)
-    SELECT o_orderpriority, CAST(sum(is_peak) AS BIGINT) AS n_peaks,
-           round(max(CASE WHEN is_peak = 1 THEN revenue END), {DP}) AS max_peak_revenue
-    FROM flagged GROUP BY o_orderpriority ORDER BY o_orderpriority
-    """,
-)
-def win_centered_peak(spark, sf_dir):
-    t = Tables(spark, sf_dir)
-    w = W.partitionBy("o_orderpriority").orderBy("order_date").rowsBetween(-3, 3)
-    rev = F.col("revenue")
-    flagged = _daily_revenue(t).withColumn(
-        "is_peak", F.when(rev >= F.max(rev).over(w), 1).otherwise(0)
-    )
-    return (
-        flagged.groupBy("o_orderpriority")
-        .agg(
-            F.sum("is_peak").alias("n_peaks"),
-            R(F.max(F.when(F.col("is_peak") == 1, rev))).alias("max_peak_revenue"),
-        )
-        .orderBy("o_orderpriority")
-    )
-
-
-# ---------------------------------------------------------------------------
-# A13 — group total broadcast back to rows (pandas .transform('sum')) →
-# share-of-group via an unordered partition window
-# (reference pages/9_FDA_Food_Events.py:346).
-# ---------------------------------------------------------------------------
-@register(
-    "win_group_share",
-    extra=True,
-    sql=f"""
-    WITH shared AS (
-      SELECT c_mktsegment, c_custkey, c_acctbal,
-             sum(c_acctbal) OVER (PARTITION BY c_mktsegment) AS segment_total
-      FROM customer WHERE c_acctbal > 0)
-    SELECT c_mktsegment,
-           count(*) AS n_customers,
-           round(max(c_acctbal / segment_total) * 100, {DP}) AS max_share_pct,
-           round(min(segment_total), {DP}) AS segment_total
-    FROM shared GROUP BY c_mktsegment ORDER BY c_mktsegment
-    """,
-)
-def win_group_share(spark, sf_dir):
-    t = Tables(spark, sf_dir)
-    w = W.partitionBy("c_mktsegment")
-    shared = t.customer.filter(F.col("c_acctbal") > 0).select(
-        "c_mktsegment",
-        "c_acctbal",
-        F.sum("c_acctbal").over(w).alias("segment_total"),
-    )
-    return (
-        shared.groupBy("c_mktsegment")
-        .agg(
-            F.count("*").alias("n_customers"),
-            R(F.max(F.col("c_acctbal") / F.col("segment_total")) * 100).alias("max_share_pct"),
-            R(F.min("segment_total")).alias("segment_total"),
-        )
-        .orderBy("c_mktsegment")
-    )
-
-
-# ---------------------------------------------------------------------------
-# W2 — best-record pick with a CASE expression in the ORDER BY
-# (reference stg_fda__food_events.sql:18-29: prefer 'Suspect' product rows).
-# ---------------------------------------------------------------------------
-@register(
-    "win_best_record_case_order",
-    extra=True,
-    sql="""
-    WITH ranked AS (
-      SELECT user_id, event_type, event_id,
-             row_number() OVER (
-               PARTITION BY user_id
-               ORDER BY CASE WHEN event_type = 'purchase' THEN 0
-                             WHEN event_type = 'signup'   THEN 1
-                             ELSE 2 END,
-                        ts DESC, event_id DESC) AS rn
-      FROM events)
-    SELECT event_type AS best_event_type, count(*) AS n_users
-    FROM ranked WHERE rn = 1
-    GROUP BY event_type ORDER BY event_type
-    """,
-)
-def win_best_record_case_order(spark, sf_dir):
-    t = Tables(spark, sf_dir)
-    preference = (
-        F.when(F.col("event_type") == "purchase", 0)
-        .when(F.col("event_type") == "signup", 1)
-        .otherwise(2)
-    )
-    w = W.partitionBy("user_id").orderBy(
-        preference, F.col("ts").desc(), F.col("event_id").desc()
-    )
-    return (
-        t.events.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .groupBy(F.col("event_type").alias("best_event_type"))
-        .agg(F.count("*").alias("n_users"))
-        .orderBy("best_event_type")
-    )
 
 
 # ---------------------------------------------------------------------------

@@ -12,8 +12,8 @@ operators exist for, composed as one lazy DataFrame plan.
 Everything is native column expressions + digest group-bys — a single
 pipeline whose shuffle count does not depend on corpus size (2 digest
 shuffles + 1 final report aggregation by default; the optional MinHash
-stage adds a signature aggregation and a hot-bucket-capped band self-join,
-the same bounded shape as catalog/dedup.py's dedup_minhash_lsh), so it
+stage adds a signature aggregation and the hot-bucket-capped band self-join
+it shares with catalog/dedup.py's dedup_minhash_lsh), so it
 runs unchanged at 100 TB.
 """
 
@@ -35,19 +35,15 @@ def _hits(lang: str):
     return F.size(F.regexp_extract_all(F.lower(F.col("text")), F.lit(pat), F.lit(0)))
 
 
-_MINHASH_MAX_BUCKET = 64  # same escape valve as catalog/dedup.py _MAX_BUCKET
-
-
-def minhash_neardup_candidates(
-    docs: DataFrame, max_bucket: int = _MINHASH_MAX_BUCKET
-) -> DataFrame:
+def minhash_neardup_candidates(docs: DataFrame, max_bucket: int | None = None) -> DataFrame:
     """Banded MinHash-LSH candidate pairs (da < db) over a (doc_id, text)
     frame — the reusable operator form of catalog/dedup.py's
     dedup_minhash_lsh plan: 8 universal-hash min-signatures over one
     md5-derived 31-bit token hash (catalog/dedup.py's shared scheme),
     4 bands × 2 rows, one band-struct explode, and buckets above
-    ``max_bucket`` excluded from the O(bucket²) self-join."""
-    from ..catalog.dedup import _mh_bands, _mh_sig_from_tokens
+    ``max_bucket`` (default: catalog/dedup.py's _MAX_BUCKET) excluded from
+    the O(bucket²) self-join by the shared _capped_band_pairs."""
+    from ..catalog.dedup import _MAX_BUCKET, _capped_band_pairs, _mh_bands, _mh_sig_from_tokens
 
     tok = docs.select(
         "doc_id",
@@ -56,21 +52,7 @@ def minhash_neardup_candidates(
         ).alias("w"),
     ).filter(F.col("w") != "")
     bands = _mh_bands(_mh_sig_from_tokens(tok))
-    sizes = bands.groupBy("band", "key").agg(F.count("*").alias("bucket_size"))
-    small = bands.join(
-        sizes.filter(F.col("bucket_size") <= max_bucket), ["band", "key"], "inner"
-    ).select("doc_id", "band", "key")
-    a, b = small.alias("a"), small.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.key") == F.col("b.key"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("da"), F.col("b.doc_id").alias("db"))
-        .distinct()
-    )
+    return _capped_band_pairs(bands, _MAX_BUCKET if max_bucket is None else max_bucket)[0]
 
 
 def gate_documents(

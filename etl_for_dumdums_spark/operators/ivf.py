@@ -1,10 +1,11 @@
-"""IVF ANN with TRAINED centroids (MLlib KMeans), the production upgrade of
+"""IVF ANN with TRAINED centroids (k-means), the production upgrade of
 the catalog's fixed-centroid IVF demo (catalog/similarity.py sim_topk_cosine
 ivf branch uses the first K vectors as deterministic stand-in centroids so
 it stays oracle-checkable in SQL).
 
-Spark-first: centroid training is pyspark.ml.clustering.KMeans (k-means||
-init, fixed seed → deterministic), not a hand-rolled Lloyd's loop. The
+Centroid training: a bounded sample trains on the driver with
+deterministic k-means++/Lloyd's in numpy; a sample above _LOCAL_TRAIN_CAP
+trains with pyspark.ml.clustering.KMeans (k-means|| init, fixed seed). The
 index is a plain DataFrame (vec_id, bucket) that joins against any query
 batch; searches probe only their own bucket (`nprobe=1`) or the nearest
 `nprobe` centroid buckets.
@@ -27,8 +28,9 @@ _NORM = "aggregate(transform({v}, x -> x * x), CAST(0 AS BIGINT), (acc, x) -> ac
 _IVEC = "transform({c}, x -> CAST(round(CAST(x AS DOUBLE) * 1000) AS BIGINT))"
 
 # driver-side training sample bound (guide §5: the driver does no data
-# work beyond this). 200k rows x 64 float64 dims ~ 100 MB — far above the
-# intended <=2000-row deterministic samples, far below driver limits.
+# work beyond this; larger samples train with MLlib). 200k rows x 64
+# float64 dims ~ 100 MB — far above the intended <=2000-row deterministic
+# samples, far below driver limits.
 _LOCAL_TRAIN_CAP = 200_000
 # rows per distance block in Lloyd's assignment step: 4096 x k=8 x d=64
 # float64 is 16 MB per temporary, whatever the sample size
@@ -102,7 +104,6 @@ def train_ivf_index(
     seed: int = 7,
     max_iter: int = 20,
     train_on: DataFrame | None = None,
-    trainer: str = "local",
 ) -> tuple[DataFrame, list[list[float]]]:
     """Train k-means centroids and assign every vector to its bucket.
 
@@ -111,53 +112,60 @@ def train_ivf_index(
     runs on a bounded deterministic sample while the broadcast-centroid
     assignment pass covers the full corpus.
 
-    ``trainer="local"`` (default): collect the bounded sample to the
-    driver, run deterministic k-means++/Lloyd's in numpy, and assign the
-    full corpus with a broadcast-centroid pure projection. Replaces ~2 s
-    of scheduler-bound MLlib micro-jobs (r9 profile: the #2 cost of
-    sim_ivf_trained_topk) with milliseconds of driver numpy and removes
-    the MLlib vector-conversion pass from the assignment (guide §1.2).
-    The sample is capped at ``_LOCAL_TRAIN_CAP`` rows — pass a bounded
-    ``train_on`` (or ``trainer="mllib"``) for anything larger.
-
-    ``trainer="mllib"``: the original pyspark.ml KMeans path (k-means||
-    init) — the cluster-scale trainer when the sample itself is huge.
-    Downstream top-k output is centroid-robust by design (full-probe IVF
-    is mathematically the brute top-k for ANY centroid set — see catalog
-    sim_ivf_trained_topk), so the two trainers yield identical query
-    results; pinned in tests/test_ivf_trained.py.
+    A sample of at most ``_LOCAL_TRAIN_CAP`` rows is collected to the
+    driver and trained with deterministic k-means++/Lloyd's in numpy; the
+    full corpus is assigned with a broadcast-centroid pure projection.
+    Replaces ~2 s of scheduler-bound MLlib micro-jobs (r9 profile: the #2
+    cost of sim_ivf_trained_topk) with milliseconds of driver numpy and
+    removes the MLlib vector-conversion pass from the assignment (guide
+    §1.2). A larger sample trains with pyspark.ml KMeans instead
+    (_train_mllib), the cluster-scale trainer. Downstream top-k output is
+    centroid-robust by design (full-probe IVF is mathematically the brute
+    top-k for ANY centroid set — see catalog sim_ivf_trained_topk), so the
+    two trainers yield identical query results; pinned in
+    tests/test_optimization_r10.py.
 
     Returns (assignments DataFrame with (id, bucket), centroid list)."""
-    if trainer == "local":
-        src = train_on if train_on is not None else embeddings
-        rows = (
-            src.select(F.col(id_col).alias("i"), F.col(vec_col).cast("array<double>").alias("v"))
-            .limit(_LOCAL_TRAIN_CAP + 1)
-            .collect()
-        )
-        if len(rows) > _LOCAL_TRAIN_CAP:
-            raise ValueError(
-                f"local IVF training sample exceeds {_LOCAL_TRAIN_CAP} rows; "
-                "pass a bounded train_on or trainer='mllib'"
-            )
-        import numpy as np
+    src = train_on if train_on is not None else embeddings
+    rows = (
+        src.select(F.col(id_col).alias("i"), F.col(vec_col).cast("array<double>").alias("v"))
+        .limit(_LOCAL_TRAIN_CAP + 1)
+        .collect()
+    )
+    if len(rows) > _LOCAL_TRAIN_CAP:
+        del rows
+        return _train_mllib(embeddings, k, id_col, vec_col, seed, max_iter, train_on)
+    import numpy as np
 
-        rows.sort(key=lambda r: r["i"])  # partitioning-independent determinism
-        x = np.array([r["v"] for r in rows], dtype=np.float64)
-        if x.shape[0] < k:
-            raise ValueError(f"need >= k={k} training vectors, got {x.shape[0]}")
-        centroids = _lloyd_numpy(x, k, seed, max_iter)
-        assigned = embeddings.select(
-            F.col(id_col),
-            F.col(vec_col).cast("array<double>").alias("_dv"),
-        ).select(
-            F.col(id_col),
-            nearest_centroid_expr("_dv", centroids).alias("bucket"),
-        )
-        return assigned, centroids
+    rows.sort(key=lambda r: r["i"])  # partitioning-independent determinism
+    x = np.array([r["v"] for r in rows], dtype=np.float64)
+    if x.shape[0] < k:
+        raise ValueError(f"need >= k={k} training vectors, got {x.shape[0]}")
+    centroids = _lloyd_numpy(x, k, seed, max_iter)
+    assigned = embeddings.select(
+        F.col(id_col),
+        F.col(vec_col).cast("array<double>").alias("_dv"),
+    ).select(
+        F.col(id_col),
+        nearest_centroid_expr("_dv", centroids).alias("bucket"),
+    )
+    return assigned, centroids
 
+
+def _train_mllib(
+    embeddings: DataFrame,
+    k: int,
+    id_col: str,
+    vec_col: str,
+    seed: int,
+    max_iter: int,
+    train_on: DataFrame | None,
+) -> tuple[DataFrame, list[list[float]]]:
+    """train_ivf_index's trainer for samples above ``_LOCAL_TRAIN_CAP``:
+    pyspark.ml KMeans (k-means|| init) on the cluster, assignment by the
+    fitted model."""
     from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector, vector_to_array  # noqa: F401
+    from pyspark.ml.functions import array_to_vector
 
     def feat(df):
         return df.select(

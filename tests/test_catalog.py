@@ -21,7 +21,7 @@ EXPECTED_FAMILIES = [
     "dedup_minhash_lsh",
     "sim_topk_cosine",
     "text_quality_score",
-    "scalar_array_ops",
+    "scalar_string_ops",
 ]
 
 

@@ -152,3 +152,46 @@ def test_chunking_invariants(spark, docs, w, overlap):
             assert r.start_tok % s == 0 and r.chunk_id == r.start_tok // s
             covered.update(range(r.start_tok, r.start_tok + r.n_tok))
         assert covered == set(range(len(toks)))
+
+
+def test_capped_band_pairs_agree_across_callers_and_drop_hot_bucket(spark):
+    """One generated corpus holds a band bucket of more than _MAX_BUCKET
+    identical docs plus ordinary near-duplicate pairs. The corpus operator
+    and the catalog candidate builder must return the same pair set (texts
+    carry no leading tabs, so both tokenizers agree), no pair may come from
+    the hot bucket, and the shared self-join's hot count must equal the
+    (band, key) groups above the cap counted directly."""
+    from etl_for_dumdums_spark.catalog.dedup import (
+        _MAX_BUCKET,
+        _capped_band_pairs,
+        _mh_bands,
+        _mh_sig,
+        _minhash_candidates,
+    )
+    from etl_for_dumdums_spark.operators.corpus import minhash_neardup_candidates
+
+    rng = random.Random(11)
+    n_hot = _MAX_BUCKET + 16
+    # identical docs share every band key; their vocabulary is shared with
+    # no other doc, so their only buckets are the hot ones
+    texts = [" ".join(f"boiler{i}" for i in range(20))] * n_hot
+    for _ in range(30):
+        toks = [f"w{rng.randrange(10_000)}" for _ in range(20)]
+        texts.append(" ".join(toks))
+        toks[rng.randrange(20)] = f"x{rng.randrange(10_000)}"  # one-token edit
+        texts.append(" ".join(toks))
+    docs = spark.createDataFrame(list(enumerate(texts)), "doc_id long, text string")
+
+    corpus_pairs = {(r["da"], r["db"]) for r in minhash_neardup_candidates(docs).collect()}
+    catalog_pairs = {(r["da"], r["db"]) for r in _minhash_candidates(docs).collect()}
+    assert corpus_pairs == catalog_pairs
+    assert corpus_pairs, "the near-duplicate pairs must produce candidates"
+    assert not any(da < n_hot or db < n_hot for da, db in corpus_pairs)
+
+    bands = _mh_bands(_mh_sig(docs))
+    _pairs, hot = _capped_band_pairs(bands)
+    direct = (
+        bands.groupBy("band", "key").count().filter(F.col("count") > _MAX_BUCKET).count()
+    )
+    assert hot.count() == direct == 4  # the identical docs' bucket in each band
+    spark.catalog.clearCache()

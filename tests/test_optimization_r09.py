@@ -690,46 +690,6 @@ def test_histogram_quantile_single_scan_matches_multiscan(spark, sf):
 
 
 # ---------------------------------------------------------------------------
-# text_token_stats: regexp_count identities vs the array-materializing form.
-# ---------------------------------------------------------------------------
-def test_token_count_identities_on_documents(spark):
-    t = Tables(spark, "/root/testdata/sf0.01")
-    df = t.documents.select("text")
-    old = df.select(
-        F.size(F.split(F.trim(F.col("text")), r"\s+")).alias("ws"),
-        F.size(
-            F.regexp_extract_all(
-                F.lower(F.col("text")), F.lit(r"[a-z]+|[0-9]+|[^a-z0-9\s]"), F.lit(0)
-            )
-        ).alias("bpe"),
-    )
-    new = df.select(
-        (F.regexp_count(F.trim(F.col("text")), F.lit(r"\s+")) + F.lit(1)).alias("ws"),
-        F.regexp_count(F.lower(F.col("text")), F.lit(r"[a-z]+|[0-9]+|[^a-z0-9\s]")).alias("bpe"),
-    )
-    mismatch = old.exceptAll(new).unionByName(new.exceptAll(old)).count()
-    assert mismatch == 0
-
-
-def test_token_count_identities_edge_strings(spark):
-    rows = [("",), ("   ",), ("one",), ("a b",), ("a  b\t c\nd",), ("éîø 日本語 x!",), ("1,2;3",)]
-    df = spark.createDataFrame(rows, "text string")
-    pairs = df.select(
-        F.size(F.split(F.trim(F.col("text")), r"\s+")).alias("ws_old"),
-        (F.regexp_count(F.trim(F.col("text")), F.lit(r"\s+")) + F.lit(1)).alias("ws_new"),
-        F.size(
-            F.regexp_extract_all(
-                F.lower(F.col("text")), F.lit(r"[a-z]+|[0-9]+|[^a-z0-9\s]"), F.lit(0)
-            )
-        ).alias("bpe_old"),
-        F.regexp_count(F.lower(F.col("text")), F.lit(r"[a-z]+|[0-9]+|[^a-z0-9\s]")).alias("bpe_new"),
-    ).collect()
-    for r in pairs:
-        assert r["ws_old"] == r["ws_new"]
-        assert r["bpe_old"] == r["bpe_new"]
-
-
-# ---------------------------------------------------------------------------
 # exact_quantiles_cents: the approx-bracketed bisection must stay exact,
 # including when n is tiny relative to the rank slack (brackets clamp to
 # the global range).

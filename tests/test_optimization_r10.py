@@ -17,16 +17,17 @@ from .conftest import SF_SMOKE
 # ---------------------------------------------------------------------------
 def test_local_and_mllib_trainers_identical_full_probe(spark):
     pytest.importorskip("pyspark.ml.clustering")
-    from etl_for_dumdums_spark.operators.ivf import ivf_topk, train_ivf_index
+    from etl_for_dumdums_spark.operators.ivf import _train_mllib, ivf_topk, train_ivf_index
 
     emb = spark.read.parquet(f"{SF_SMOKE}/embeddings.parquet")
     queries = list(range(6))
+    train_on = emb.filter("vec_id < 2000")
+    trained = {
+        "local": train_ivf_index(emb, k=4, seed=7, train_on=train_on),
+        "mllib": _train_mllib(emb, 4, "vec_id", "embedding", 7, 20, train_on),
+    }
     out = {}
-    for trainer in ("local", "mllib"):
-        assigned, cents = train_ivf_index(
-            emb, k=4, seed=7, trainer=trainer,
-            train_on=emb.filter("vec_id < 2000"),
-        )
+    for trainer, (assigned, cents) in trained.items():
         assert len(cents) == 4
         out[trainer] = ivf_topk(
             emb, assigned, queries, k=5, nprobe=4, centroids=cents
@@ -38,10 +39,10 @@ def test_local_trainer_deterministic_and_assignment_consistent(spark):
     from etl_for_dumdums_spark.operators.ivf import train_ivf_index
 
     emb = spark.read.parquet(f"{SF_SMOKE}/embeddings.parquet")
-    a1, c1 = train_ivf_index(emb, k=4, seed=7, trainer="local")
+    a1, c1 = train_ivf_index(emb, k=4, seed=7)
     # repartitioned input: the driver-side sample sort makes the draw
     # order (hence centroids) partitioning-independent
-    a2, c2 = train_ivf_index(emb.repartition(7), k=4, seed=7, trainer="local")
+    a2, c2 = train_ivf_index(emb.repartition(7), k=4, seed=7)
     assert c1 == c2
     assert a1.orderBy("vec_id").collect() == a2.orderBy("vec_id").collect()
     # every vector lands in exactly one bucket in [0, k)
@@ -472,14 +473,19 @@ def test_cooccurrence_basket_explode_matches_self_join(spark):
     assert _cooccurrence_pairs(li).collect() == old
 
 
-def test_local_trainer_cap_raises(spark):
+def test_over_cap_corpus_trains_and_full_probe_equals_brute(spark, monkeypatch):
+    """A training sample above _LOCAL_TRAIN_CAP trains (on MLlib) instead of
+    raising, and its full-probe top-k is the exact brute-force top-k."""
+    pytest.importorskip("pyspark.ml.clustering")
     from etl_for_dumdums_spark.operators import ivf
+    from etl_for_dumdums_spark.operators.vector import cosine_topk_vectorized
 
+    monkeypatch.setattr(ivf, "_LOCAL_TRAIN_CAP", 10)
     emb = spark.read.parquet(f"{SF_SMOKE}/embeddings.parquet")
-    orig = ivf._LOCAL_TRAIN_CAP
-    ivf._LOCAL_TRAIN_CAP = 10  # force the driver-memory guard
-    try:
-        with pytest.raises(ValueError, match="bounded train_on"):
-            ivf.train_ivf_index(emb, k=4, seed=7, trainer="local")
-    finally:
-        ivf._LOCAL_TRAIN_CAP = orig
+    queries = list(range(6))
+    assigned, cents = ivf.train_ivf_index(emb, k=4, seed=7)
+    assert len(cents) == 4
+    got = ivf.ivf_topk(emb, assigned, queries, k=5, nprobe=4, centroids=cents).collect()
+    exact = cosine_topk_vectorized(emb, query_ids=queries, k=5).collect()
+    key = lambda r: (r["query_id"], r["rank"], r["neighbor_id"], r["cosine"])  # noqa: E731
+    assert sorted(map(key, got)) == sorted(map(key, exact))
