@@ -72,8 +72,10 @@ oracle-1000x-spot:
 	python tools/spot_check_scale.py --sf /tmp/sfscale1000 --sampled \
 	  events_sequence_pattern
 
+# the Tier-1 command from ROADMAP.md, plus the 15 slowest tests
 test:
-	python -m pytest tests/ -q
+	export SPARK_GRAFT_CPUS="$$(env -u OMP_NUM_THREADS nproc)" SPARK_LOCAL_DIRS=/tmp/spark-local; \
+	timeout -k 10 2670 python -m pytest tests/ -q --continue-on-collection-errors -p no:cacheprovider --durations=15
 
 oracle:
 	python tools/check_oracle.py

@@ -639,7 +639,8 @@ def ts_changepoint_cusum(spark, sf_dir):
                 F.col("ns").alias("ns"),
             )
         ).alias("b"),
-        F.max("n").alias("n"),
+        # zero days (empty orders): max is NULL, the day count is 0
+        F.coalesce(F.max("n"), F.lit(0).cast("long")).alias("n"),
         F.max("t").alias("t"),
     )
     return best.select(

@@ -9,16 +9,10 @@ Decode support comes in three honest tiers:
   ``pcm_stats`` route these to full decodes.
 * REAL raw kernels: the self-describing RGB8/PCM1 formats below (what a
   production decode stage emits) — numpy only.
-* REAL GIF + BMP (operators/gif.py): full LZW (variable width, dict
-  reset, interlace), multi-frame animations with transparency and
-  disposal; BI_RGB BMP at 8 (paletted) / 24 / 32 bits, both rasters.
-* REAL TIFF (operators/tiff.py): baseline 6.0, both byte orders —
-  none/LZW (MSB-first early-change variant)/deflate/PackBits,
-  horizontal predictor, gray/RGB/RGBA/palette, multi-strip.
-* STUBS behind NotImplementedError: everything else (JPEG, WebP,
-  AIFF, mp3, video codecs); ``fake=True`` gives a deterministic
-  digest-derived stand-in so pipelines and tests exercise the full Spark path with
-  realistic shapes.
+* STUBS behind NotImplementedError: everything else (JPEG, WebP, GIF,
+  BMP, TIFF, ICO, AIFF, mp3, video codecs); ``fake=True`` gives a
+  deterministic digest-derived stand-in so pipelines and tests exercise
+  the full Spark path with realistic shapes.
 
 Everything Spark-side is real and tested regardless of tier: schemas,
 Arrow batch shapes, mapInPandas signatures, and partition-size control.
@@ -64,49 +58,26 @@ FEATURE_SCHEMA = T.StructType(
 
 
 def image_payload_to_array(payload: bytes):
-    """Route an image payload to a REAL decode: PNG (operators/codecs.py),
-    GIF (first coalesced frame) / BMP / ICO favicons (operators/gif.py),
-    TIFF (operators/tiff.py),
-    or self-describing RGB8 raw. Returns (h, w, ch) uint8 with ch >= 3:
-    single-channel decodes (grayscale TIFF) are replicated to RGB here so
-    every downstream ``[:, :, :3]`` reduction sees the same contract the
-    PNG decoder honors natively. Raises NotImplementedError for codec
-    formats without an in-container decoder (JPEG/WebP/...) — the honest
-    gate."""
-    import numpy as np
-
+    """Route an image payload to a REAL decode: PNG (operators/codecs.py)
+    or self-describing RGB8 raw. Returns (h, w, ch) uint8 with ch >= 3
+    (the PNG decoder replicates grayscale to RGB). Raises
+    NotImplementedError for codec formats without an in-container decoder
+    (JPEG/WebP/GIF/BMP/TIFF/ICO/...) — the honest gate."""
     from .codecs import decode_png, is_png
-    from .gif import decode_bmp, decode_gif, decode_ico, is_bmp, is_gif, is_ico
-    from .tiff import decode_tiff, is_tiff
 
     if is_png(payload):
-        a = decode_png(bytes(payload))
-    elif is_gif(payload):
-        a = decode_gif(bytes(payload))[0][0]
-    elif is_bmp(payload):
-        a = decode_bmp(bytes(payload))
-    elif is_tiff(payload):
-        a = decode_tiff(bytes(payload))
-    elif is_ico(payload):
-        a = decode_ico(bytes(payload))
-    else:
-        a = decode_rgb_raw(bytes(payload) if payload is not None else None)
-    if a.ndim == 2:
-        a = a[:, :, None]
-    if a.shape[2] == 1:
-        a = np.repeat(a, 3, axis=2)
-    return a
+        return decode_png(bytes(payload))
+    return decode_rgb_raw(bytes(payload) if payload is not None else None)
 
 
 def decode_image(payload: bytes, fake: bool = False) -> list[float]:
     """Decode an image payload to an 8-dim feature vector.
 
-    REAL for every decodable format (PNG, GIF, BMP, TIFF, ICO,
-    RGB8-raw): per-channel means + brightness + normalized dimensions,
+    REAL for every decodable format (PNG, RGB8-raw): per-channel means + brightness + normalized dimensions,
     all deterministic byte arithmetic. With ``fake=True`` returns a
     digest-derived stand-in instead (the pre-codec behavior, kept for
     pipeline-shape tests). Formats without an in-container decoder
-    (JPEG, WebP) raise NotImplementedError.
+    (JPEG, WebP, GIF, BMP, TIFF, ICO) raise NotImplementedError.
     """
     if fake:
         digest = hashlib.sha256(payload or b"").digest()
@@ -198,12 +169,8 @@ RESIZE_SCHEMA = T.StructType(
 def resize_payload(payload: bytes, width: int, height: int, fake: bool = False) -> bytes:
     """Resize an image payload.
 
-    REAL for every decodable format (decode → nearest-neighbor →
-    re-encode, format family preserved: PNG→PNG, GIF→GIF
-    — first coalesced frame of an animation, still ≤256 colors under
-    nearest-neighbor so the palette re-encode is exact — BMP→24/32-bit
-    BMP, TIFF→TIFF, ICO→PNG-entry ICO) and RGB8-raw payloads;
-    deterministic integer index maps so every engine/run produces
+    REAL for PNG (decode → nearest-neighbor → re-encode as PNG) and
+    RGB8-raw payloads; deterministic integer index maps so every engine/run produces
     identical bytes. With ``fake=True`` returns a digest-derived
     pseudo-payload sized proportionally to the target area (kept for
     pipeline-shape tests). Formats without an in-container decoder
@@ -214,25 +181,15 @@ def resize_payload(payload: bytes, width: int, height: int, fake: bool = False) 
         reps = target_len // len(seed) + 1
         return (seed * reps)[:target_len]
     from .codecs import encode_png, is_png
-    from .gif import encode_bmp, encode_gif, encode_ico, is_bmp, is_gif, is_ico
-    from .tiff import encode_tiff, is_tiff
 
-    encoders = (
-        (is_png, encode_png),
-        (is_gif, encode_gif),
-        (is_bmp, encode_bmp),
-        (is_tiff, encode_tiff),
-        (is_ico, encode_ico),
-    )
-    for probe, enc in encoders:
-        if probe(payload):
-            import numpy as np
+    if is_png(payload):
+        import numpy as np
 
-            a = image_payload_to_array(payload)
-            sh, sw = a.shape[:2]
-            yi = (np.arange(height, dtype=np.int64) * sh) // height
-            xi = (np.arange(width, dtype=np.int64) * sw) // width
-            return enc(a[yi][:, xi])
+        a = image_payload_to_array(payload)
+        sh, sw = a.shape[:2]
+        yi = (np.arange(height, dtype=np.int64) * sh) // height
+        xi = (np.arange(width, dtype=np.int64) * sw) // width
+        return encode_png(a[yi][:, xi])
     return resize_rgb_raw(payload, width, height)
 
 
@@ -321,15 +278,13 @@ def resize_rgb_raw(payload: bytes, width: int, height: int) -> bytes:
 
 def rgb_stats(media: DataFrame) -> DataFrame:
     """mapInPandas REAL feature extraction for every decodable image
-    format (RGB8-raw, PNG, GIF, BMP, TIFF, ICO): decoded dimensions +
-    per-channel means + brightness, one vectorized numpy reduction per
-    image. Payloads without an in-container decoder (JPEG, WebP) pass
-    through with NULLs — the honest gate."""
+    format (RGB8-raw, PNG): decoded dimensions + per-channel means +
+    brightness, one vectorized numpy reduction per image. Payloads without
+    an in-container decoder (JPEG, WebP, GIF, BMP, TIFF, ICO) pass through
+    with NULLs — the honest gate."""
     import numpy as np
 
     from .codecs import is_png
-    from .gif import is_bmp, is_gif, is_ico
-    from .tiff import is_tiff
 
     schema = T.StructType(
         [
@@ -348,21 +303,14 @@ def rgb_stats(media: DataFrame) -> DataFrame:
             rows = []
             for mid, p in zip(pdf["media_id"], pdf["payload"]):
                 head = bytes(p[:16]) if p is not None else b""
-                if p is None or not (
-                    head[:4] == RAW_RGB_MAGIC
-                    or is_png(head)
-                    or is_gif(head)
-                    or is_bmp(head)
-                    or is_tiff(head)
-                    or is_ico(head)
-                ):
+                if p is None or not (head[:4] == RAW_RGB_MAGIC or is_png(head)):
                     rows.append((mid, None, None, None, None, None, None))
                     continue
                 try:
                     a = image_payload_to_array(bytes(p))[:, :, :3]
                 except (NotImplementedError, ValueError, struct.error):
                     # NotImplementedError: no in-container decoder (e.g.
-                    # an unsupported TIFF mode); ValueError: valid magic but
+                    # a spec-illegal PNG shape); ValueError: valid magic but
                     # malformed body — both pass through as NULLs instead
                     # of killing the task (r4 advice findings #1/#2)
                     rows.append((mid, None, None, None, None, None, None))
@@ -423,9 +371,7 @@ def decode_pcm16(payload: bytes):
         raise NotImplementedError("not a raw PCM16 payload — codecs unavailable")
     rate = int.from_bytes(payload[4:8], "big")
     n = int.from_bytes(payload[8:12], "big")
-    import numpy as _np
-
-    a = _np.frombuffer(payload, dtype="<i2", count=n, offset=_PCM_HDR)
+    a = np.frombuffer(payload, dtype="<i2", count=n, offset=_PCM_HDR)
     return rate, a
 
 

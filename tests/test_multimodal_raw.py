@@ -187,6 +187,27 @@ def test_pcm_stats_undecodable_wav_yields_nulls(spark):
     assert got[4]["n_samples"] == 2 and got[4]["rate"] == 4000
 
 
+def test_pcm_stats_wav_equals_raw_pcm16_twin(spark):
+    """pcm_stats decodes a WAV row to the same stats as its raw PCM16
+    twin in every column; a NULL payload gives a NULL row."""
+    from etl_for_dumdums_spark.operators.codecs import encode_wav
+    from etl_for_dumdums_spark.operators.multimodal import encode_pcm16, pcm_stats
+
+    rng = np.random.RandomState(17)
+    pcm = rng.randint(-30000, 30000, 300).astype(np.int16)
+    audio = [
+        (1, bytearray(encode_wav(pcm, 8000))),
+        (2, bytearray(encode_pcm16(pcm, 8000))),
+        (4, None),
+    ]
+    adf = spark.createDataFrame(audio, "media_id long, payload binary")
+    arows = {r["media_id"]: r.asDict() for r in pcm_stats(adf).collect()}
+    base = {k: v for k, v in arows[1].items() if k != "media_id"}
+    assert base["rms_int"] is not None
+    assert {k: v for k, v in arows[2].items() if k != "media_id"} == base
+    assert arows[4]["rms_int"] is None
+
+
 def test_decode_wav_linear_formats():
     """Every linear-sample WAV shape decodes to the documented int16
     conversion: float32/64 clip-scale-round, 8-bit unsigned recenter,

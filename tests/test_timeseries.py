@@ -57,3 +57,55 @@ def test_gap_runs_are_monotone_between_anchors(spark):
             else:
                 i += 1
     assert checked > 0
+
+
+def test_changepoint_cusum_empty_orders_matches_oracle(spark, tmp_path):
+    """Zero orders: the day count is 0 (DuckDB's count(*)), not NULL, and
+    every other column is NULL in both engines, with the same types."""
+    import os
+
+    import duckdb
+    import pyarrow.parquet as pq
+
+    from etl_for_dumdums_spark.catalog import (
+        EXTRA_ORACLE,
+        EXTRA_QUERIES,
+        TABLE_NAMES,
+        load_all,
+    )
+
+    load_all()
+    sf = tmp_path / "sf_empty_orders"
+    sf.mkdir()
+    for name in TABLE_NAMES:
+        if name != "orders":
+            os.symlink(f"{SF_SMOKE}/{name}.parquet", sf / f"{name}.parquet")
+    schema = pq.read_schema(f"{SF_SMOKE}/orders.parquet")
+    pq.write_table(schema.empty_table(), sf / "orders.parquet")
+
+    sdf = EXTRA_QUERIES["ts_changepoint_cusum"](spark, str(sf))
+    got = [r.asDict() for r in sdf.collect()]
+    spark.catalog.clearCache()
+
+    con = duckdb.connect()
+    for name in TABLE_NAMES:
+        con.execute(
+            f"CREATE VIEW {name} AS SELECT * FROM read_parquet('{sf}/{name}.parquet')"
+        )
+    res = con.execute(EXTRA_ORACLE["ts_changepoint_cusum"])
+    cols = [d[0] for d in res.description]
+    want = [dict(zip(cols, row)) for row in res.fetchall()]
+    con.close()
+
+    assert want == [
+        {
+            "n_days": 0,
+            "total_cents": None,
+            "max_abs_ns": None,
+            "cusum_ratio": None,
+            "changepoint_day": None,
+            "regime": "above_mean",
+        }
+    ]
+    assert got == want
+    assert sdf.schema["n_days"].dataType.simpleString() == "bigint"
