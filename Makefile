@@ -105,11 +105,13 @@ perfbench:
 perfbench-test:
 	python -m pytest perfbench/tests -q
 
-# the size figures a simplification reports: source and test line counts
-# and the number of driver-facing, extra-tier and sampled-tier queries
+# the size figures a simplification reports: source and test line counts,
+# the number of collected tests and of driver-facing, extra-tier and
+# sampled-tier queries
 loc:
 	@echo "source lines: $$(find etl_for_dumdums_spark -name '*.py' -exec cat {} + | wc -l)"
 	@echo "test lines:   $$(find tests -name '*.py' -exec cat {} + | wc -l)"
+	@echo "tests:        $$(python -m pytest --collect-only -q -p no:cacheprovider tests/ 2>/dev/null | tail -1 | sed 's/ in .*//')"
 	@python -c "from etl_for_dumdums_spark.catalog import EXTRA_QUERIES, QUERIES, SAMPLED_QUERIES, load_all; load_all(); print(f'queries: {len(QUERIES)} driver, {len(EXTRA_QUERIES)} extra, {len(SAMPLED_QUERIES)} sampled')"
 
 smoke:

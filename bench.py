@@ -102,38 +102,22 @@ def main() -> None:
     # deliberately-loaded measurement) with SPARK_GRAFT_BENCH_FORCE=1.
     import glob as _glob
 
+    sys.path.insert(0, str(Path(__file__).resolve().parent / "tools"))
+    from run_oracle_chunked import live_sweep_pid
+
     for lockpath in _glob.glob("/tmp/spark_graft_sweep*.lock"):
         if os.environ.get("SPARK_GRAFT_BENCH_FORCE"):
             break
         sweep_lock = Path(lockpath)
-        try:
-            lock_lines = sweep_lock.read_text().splitlines()
-        except FileNotFoundError:
-            continue  # sweep unlinked its lock between glob and read: no sweep
-        pid = lock_lines[0].strip() if lock_lines else ""
-        recorded_cmd = lock_lines[1].strip() if len(lock_lines) > 1 else ""
-        if pid and Path(f"/proc/{pid}").exists():
-            # PID-reuse guard: a lock that recorded its holder's cmdline is
-            # only honored if the live process still matches it; a legacy
-            # pid-only lock is honored on liveness alone
-            try:
-                cur_cmd = (
-                    Path(f"/proc/{pid}/cmdline")
-                    .read_bytes()
-                    .replace(b"\0", b" ")
-                    .decode(errors="replace")
-                    .strip()
-                )
-            except OSError:
-                cur_cmd = ""
-            if not recorded_cmd or recorded_cmd == cur_cmd:
-                print(
-                    f"bench: sweep (pid {pid}) holds {sweep_lock}; benching under "
-                    "sweep contention produces unusable numbers — aborting",
-                    file=sys.stderr,
-                )
-                raise SystemExit(2)
-        sweep_lock.unlink(missing_ok=True)  # stale
+        pid = live_sweep_pid(sweep_lock)
+        if pid:
+            print(
+                f"bench: sweep (pid {pid}) holds {sweep_lock}; benching under "
+                "sweep contention produces unusable numbers — aborting",
+                file=sys.stderr,
+            )
+            raise SystemExit(2)
+        sweep_lock.unlink(missing_ok=True)  # stale, or gone since the glob
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     try:

@@ -1,1 +1,1 @@
-"""Reusable large-scale operators: dedup, similarity, text, multimodal, enrichment."""
+"""Reusable large-scale operators: dedup, similarity, text, enrichment."""

@@ -19,6 +19,8 @@ surgery on the five 1000x-resource-failed DuckDB oracles.
      form, plus a brute-force pin of the period-2 collapse identity.
 """
 
+from pathlib import Path
+
 import duckdb
 import pytest
 
@@ -27,6 +29,7 @@ from etl_for_dumdums_spark.catalog import EXTRA_ORACLE, ORACLE, load_all
 load_all()
 
 SF_DIRS = ["/root/testdata/sf0.001", "/root/testdata/sf0.01"]
+REPO = Path(__file__).resolve().parents[1]
 
 
 def _con(sf_dir, tables=("lineitem", "documents")):
@@ -45,7 +48,7 @@ def test_sweep_lock_refuses_second_runner(tmp_path, monkeypatch):
     import os
     import sys
 
-    sys.path.insert(0, "/root/repo/tools")
+    sys.path.insert(0, str(REPO / "tools"))
     import run_oracle_chunked as roc
 
     lock = tmp_path / "sweep.lock"
@@ -54,9 +57,9 @@ def test_sweep_lock_refuses_second_runner(tmp_path, monkeypatch):
     monkeypatch.setattr(sys, "argv", ["run_oracle_chunked.py"])
     assert roc.main() == 2
     # stale lock (dead pid) must be recovered, not refused — use an
-    # impossible pid; don't actually run a sweep, just check the lock path
+    # impossible pid; don't actually run a sweep, just ask the lock rule
     lock.write_text("99999999")
-    assert not (lock.read_text() == "")  # still present before main
+    assert roc.live_sweep_pid(lock) is None
 
 
 def test_bench_refuses_under_live_sweep_lock(tmp_path, monkeypatch):
@@ -75,7 +78,7 @@ def test_bench_refuses_under_live_sweep_lock(tmp_path, monkeypatch):
         f.write(str(os.getpid()))
     try:
         proc = subprocess.run(
-            [sys.executable, "/root/repo/bench.py"],
+            [sys.executable, str(REPO / "bench.py")],
             capture_output=True,
             text=True,
             timeout=60,

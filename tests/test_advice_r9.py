@@ -80,7 +80,7 @@ _LOCK = "/tmp/spark_graft_sweep.lock"
 
 def _run_bench():
     return subprocess.run(
-        [sys.executable, "/root/repo/bench.py"],
+        [sys.executable, str(Path(__file__).resolve().parents[1] / "bench.py")],
         capture_output=True,
         text=True,
         timeout=300,

@@ -13,6 +13,7 @@ from __future__ import annotations
 import subprocess
 import sys
 import textwrap
+from pathlib import Path
 
 import pytest
 
@@ -60,7 +61,8 @@ _SCRIPT = textwrap.dedent(
 
 
 def test_real_delta_merge_and_evolution(tmp_path):
-    script = _SCRIPT.format(repo="/root/repo", path=str(tmp_path / "tbl"))
+    repo = str(Path(__file__).resolve().parents[1])
+    script = _SCRIPT.format(repo=repo, path=str(tmp_path / "tbl"))
     proc = subprocess.run(
         [sys.executable, "-c", script], capture_output=True, text=True, timeout=600
     )

@@ -7,13 +7,6 @@ from etl_for_dumdums_spark.operators.enrich import (
     score_sentiment,
     stub_scorer,
 )
-from etl_for_dumdums_spark.operators.multimodal import (
-    decode_image,
-    extract_features,
-    media_metadata_stats,
-    sample_frames,
-    MEDIA_SCHEMA,
-)
 
 
 def test_stub_scorer_deterministic_and_bounded():
@@ -54,62 +47,6 @@ def test_score_sentiment_error_path(spark):
     assert row["sentiment_label"] == "ERROR"
     assert row["sentiment_score"] == 0.0
     assert row["sentiment_category"] == "neutral"
-
-
-def _media_df(spark):
-    rows = [
-        (1, "image", b"imgbytes-1", "image/png", 64, 48, None),
-        (2, "image", b"imgbytes-2", "image/png", 32, 32, None),
-        (3, "video", b"vidbytes", "video/mp4", 640, 480, 3500),
-        (4, "audio", None, "audio/wav", None, None, 2000),
-    ]
-    return spark.createDataFrame(rows, MEDIA_SCHEMA)
-
-
-def test_decode_image_stub_contract():
-    with pytest.raises(NotImplementedError):
-        decode_image(b"x")
-    feat = decode_image(b"x", fake=True)
-    assert len(feat) == 8 and feat == decode_image(b"x", fake=True)
-
-
-def test_extract_features_shapes(spark):
-    out = extract_features(_media_df(spark)).collect()
-    by_id = {r["media_id"]: r for r in out}
-    assert by_id[1]["payload_bytes"] == len(b"imgbytes-1")
-    assert len(by_id[1]["feature"]) == 8
-    assert by_id[4]["feature"] is None and by_id[4]["digest"] is None
-    # deterministic digest
-    assert by_id[2]["digest"] == extract_features(_media_df(spark)).collect()[1]["digest"]
-
-
-def test_media_metadata_stats_prunes_payload(spark):
-    df = media_metadata_stats(_media_df(spark))
-    rows = {r["kind"]: r for r in df.collect()}
-    assert rows["image"]["n_assets"] == 2
-    assert rows["video"]["total_duration_ms"] == 3500
-    assert "payload" not in df.columns
-
-
-def test_sample_frames_explodes_timestamps(spark):
-    frames = sample_frames(_media_df(spark), every_ms=1000).collect()
-    assert [f["frame_ts_ms"] for f in frames] == [0, 1000, 2000, 3000]
-
-
-def test_resize_images_stub_contract(spark):
-    from etl_for_dumdums_spark.operators.multimodal import resize_images, resize_payload
-
-    with pytest.raises(NotImplementedError):
-        resize_payload(b"x", 8, 8)
-    out = resize_images(_media_df(spark), width=16, height=16).collect()
-    by_id = {r["media_id"]: r for r in out}
-    assert set(by_id) == {1, 2}  # image rows only
-    assert by_id[1]["width"] == by_id[1]["height"] == 16
-    # deterministic per (payload, target) and sized to the target area
-    again = {r["media_id"]: r for r in resize_images(_media_df(spark), 16, 16).collect()}
-    assert by_id[1]["payload"] == again[1]["payload"]
-    assert len(by_id[1]["payload"]) == max(16, (16 * 16) // 64)
-    assert by_id[1]["payload"] != by_id[2]["payload"]
 
 
 # ---------------------------------------------------------------------------

@@ -15,12 +15,17 @@ import math
 import sys
 import time
 from datetime import date, datetime
+from pathlib import Path
 
 # per-query PASS/FAIL lines must reach a piping parent (run_oracle_chunked)
 # as they happen — block buffering hid a 25-min stall inside an 8KB buffer
 sys.stdout.reconfigure(line_buffering=True)
 
-sys.path.insert(0, "/root/repo")
+ROOT = str(Path(__file__).resolve().parents[1])
+sys.path.insert(0, ROOT)
+# the Python workers of the mapInPandas queries import the package too, and
+# they get the JVM's environment, not this process's sys.path
+os.environ["PYTHONPATH"] = os.pathsep.join(filter(None, [ROOT, os.environ.get("PYTHONPATH")]))
 
 import duckdb  # noqa: E402
 

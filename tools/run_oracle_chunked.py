@@ -33,6 +33,36 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 from etl_for_dumdums_spark.catalog import EXTRA_QUERIES, QUERIES, load_all  # noqa: E402
 
 
+def _cmdline(pid: str) -> str:
+    """The process's command line, space-joined; "" if it cannot be read."""
+    try:
+        raw = Path(f"/proc/{pid}/cmdline").read_bytes()
+    except OSError:
+        return ""
+    return raw.replace(b"\0", b" ").decode(errors="replace").strip()
+
+
+def live_sweep_pid(lock: Path) -> str | None:
+    """The pid of the live sweep holding ``lock``, or None if the lock is
+    missing or stale.
+
+    A lock holds the holder's pid on line 1 and its cmdline on line 2. A
+    lock with a recorded cmdline belongs to a live sweep only while its pid
+    still runs that cmdline, so a recycled pid does not keep it alive; a
+    pid-only lock is honored on liveness alone."""
+    try:
+        lines = lock.read_text().splitlines()
+    except FileNotFoundError:
+        return None
+    pid = lines[0].strip() if lines else ""
+    if not pid or not Path(f"/proc/{pid}").exists():
+        return None
+    recorded_cmd = lines[1].strip() if len(lines) > 1 else ""
+    if recorded_cmd and recorded_cmd != _cmdline(pid):
+        return None
+    return pid
+
+
 def _stream_child(proc, out_path: Path, poll_sec: float = 0.5) -> list[str]:
     """Tail the child's stdout FILE live until the child has exited and the
     file is drained. Returns the collected lines.
@@ -85,32 +115,27 @@ def main() -> int:
     args = ap.parse_args()
 
     lock = SWEEP_LOCK
-    if SWEEP_LOCK.exists():
-        pid = (SWEEP_LOCK.read_text().splitlines() or [""])[0].strip()
-        # stale-lock recovery: the owning process may have been killed
-        if pid and Path(f"/proc/{pid}").exists():
-            if os.environ.get("SPARK_GRAFT_SWEEP_PARALLEL"):
-                # deliberate split sweep: take a pid-suffixed lock so bench
-                # still sees a live sweep; the operator is responsible for
-                # also splitting the resource caps (SPARK_GRAFT_DUCK_MEM /
-                # _SPILL / _TMP) so the halves can't jointly fill the box
-                lock = SWEEP_LOCK.with_name(f"{SWEEP_LOCK.stem}.{os.getpid()}.lock")
-            else:
-                print(
-                    f"another sweep (pid {pid}) holds {SWEEP_LOCK}; refusing to "
-                    "run two at once (r7: concurrent sweeps filled the disk)",
-                    file=sys.stderr,
-                )
-                return 2
+    pid = live_sweep_pid(SWEEP_LOCK)
+    if pid:
+        if os.environ.get("SPARK_GRAFT_SWEEP_PARALLEL"):
+            # deliberate split sweep: take a pid-suffixed lock so bench
+            # still sees a live sweep; the operator is responsible for
+            # also splitting the resource caps (SPARK_GRAFT_DUCK_MEM /
+            # _SPILL / _TMP) so the halves can't jointly fill the box
+            lock = SWEEP_LOCK.with_name(f"{SWEEP_LOCK.stem}.{os.getpid()}.lock")
         else:
-            print(f"removing stale sweep lock (pid {pid} is gone)", flush=True)
-            SWEEP_LOCK.unlink(missing_ok=True)
-    # line 1: pid; line 2: the holder's cmdline, so a lock-checker (bench.py)
-    # can tell a live sweep from an unrelated process that recycled the pid
-    lock.write_text(
-        f"{os.getpid()}\n"
-        + Path("/proc/self/cmdline").read_bytes().replace(b"\0", b" ").decode(errors="replace").strip()
-    )
+            print(
+                f"another sweep (pid {pid}) holds {SWEEP_LOCK}; refusing to "
+                "run two at once (r7: concurrent sweeps filled the disk)",
+                file=sys.stderr,
+            )
+            return 2
+    elif SWEEP_LOCK.exists():
+        # stale-lock recovery: the owning process may have been killed
+        print(f"removing stale sweep lock {SWEEP_LOCK}", flush=True)
+        SWEEP_LOCK.unlink(missing_ok=True)
+    # the format live_sweep_pid reads: pid, then the holder's cmdline
+    lock.write_text(f"{os.getpid()}\n{_cmdline('self')}")
 
     # purge spill dirs left by dead check_oracle processes (they are
     # per-pid — see check_oracle.make_con — so a killed chunk's spill
