@@ -4,8 +4,11 @@ unique / not_null / accepted_values / relationships / expression_is_true /
 accepted_range — each check compiles to one aggregate query returning the
 violation count (dbt generates the same SQL shape; see SURVEY.md §5.1).
 
-All checks are single-pass aggregations; `run_checks` unions them so the
-whole suite is one job per table at any scale.
+The four row-filter checks (not_null, accepted_values, expression_is_true,
+accepted_range) are a violation predicate each; `CheckSuite.run` counts all
+of a suite's predicates in one aggregate, one `count_if` per check, so they
+cost one Spark action together. `unique` and `relationships` need a group-by
+or a join and keep one query each.
 """
 
 from __future__ import annotations
@@ -25,6 +28,23 @@ class CheckResult:
     detail: str = ""
 
 
+@dataclass
+class _RowCheck:
+    """A row-filter check: it fails on every row where ``violation`` is true."""
+
+    check: str
+    column: str
+    violation: Column
+    detail: str = ""
+
+
+def _count_violations(df: DataFrame, row_checks: list[_RowCheck]) -> list[CheckResult]:
+    counts = df.agg(*[F.count_if(rc.violation) for rc in row_checks]).collect()[0]
+    return [
+        CheckResult(rc.check, rc.column, n, n == 0, rc.detail) for rc, n in zip(row_checks, counts)
+    ]
+
+
 def unique(df: DataFrame, column: str) -> CheckResult:
     dupes = (
         df.groupBy(column).count().filter(F.col("count") > 1).agg(F.count("*")).collect()[0][0]
@@ -32,14 +52,21 @@ def unique(df: DataFrame, column: str) -> CheckResult:
     return CheckResult("unique", column, dupes, dupes == 0)
 
 
+def _not_null(column: str) -> _RowCheck:
+    return _RowCheck("not_null", column, F.col(column).isNull())
+
+
 def not_null(df: DataFrame, column: str) -> CheckResult:
-    n = df.filter(F.col(column).isNull()).count()
-    return CheckResult("not_null", column, n, n == 0)
+    return _count_violations(df, [_not_null(column)])[0]
+
+
+def _accepted_values(column: str, values: list) -> _RowCheck:
+    c = F.col(column)
+    return _RowCheck("accepted_values", column, ~c.isin(values) & c.isNotNull(), str(values))
 
 
 def accepted_values(df: DataFrame, column: str, values: list) -> CheckResult:
-    n = df.filter(~F.col(column).isin(values) & F.col(column).isNotNull()).count()
-    return CheckResult("accepted_values", column, n, n == 0, detail=str(values))
+    return _count_violations(df, [_accepted_values(column, values)])[0]
 
 
 def relationships(df: DataFrame, column: str, parent: DataFrame, parent_key: str) -> CheckResult:
@@ -52,23 +79,38 @@ def relationships(df: DataFrame, column: str, parent: DataFrame, parent_key: str
     return CheckResult("relationships", column, orphans, orphans == 0, detail=parent_key)
 
 
-def expression_is_true(df: DataFrame, expression: str | Column) -> CheckResult:
+def _expression_is_true(expression: str | Column) -> _RowCheck:
     cond = F.expr(expression) if isinstance(expression, str) else expression
-    n = df.filter(~F.coalesce(cond, F.lit(False))).count()
-    return CheckResult("expression_is_true", str(expression), n, n == 0)
+    return _RowCheck("expression_is_true", str(expression), ~F.coalesce(cond, F.lit(False)))
 
 
-def accepted_range(
-    df: DataFrame, column: str, min_value=None, max_value=None, inclusive: bool = True
-) -> CheckResult:
+def expression_is_true(df: DataFrame, expression: str | Column) -> CheckResult:
+    return _count_violations(df, [_expression_is_true(expression)])[0]
+
+
+def _accepted_range(column: str, min_value=None, max_value=None, inclusive: bool = True) -> _RowCheck:
     c = F.col(column)
     viol = F.lit(False)
     if min_value is not None:
         viol = viol | ((c < min_value) if inclusive else (c <= min_value))
     if max_value is not None:
         viol = viol | ((c > max_value) if inclusive else (c >= max_value))
-    n = df.filter(c.isNotNull() & viol).count()
-    return CheckResult("accepted_range", column, n, n == 0, detail=f"[{min_value}, {max_value}]")
+    return _RowCheck("accepted_range", column, c.isNotNull() & viol, f"[{min_value}, {max_value}]")
+
+
+def accepted_range(
+    df: DataFrame, column: str, min_value=None, max_value=None, inclusive: bool = True
+) -> CheckResult:
+    return _count_violations(df, [_accepted_range(column, min_value, max_value, inclusive)])[0]
+
+
+# public check -> its violation predicate; CheckSuite.run batches these
+_ROW_CHECKS = {
+    not_null: _not_null,
+    accepted_values: _accepted_values,
+    expression_is_true: _expression_is_true,
+    accepted_range: _accepted_range,
+}
 
 
 @dataclass
@@ -82,7 +124,18 @@ class CheckSuite:
         return self
 
     def run(self, df: DataFrame) -> list[CheckResult]:
-        return [fn(df, *args, **kwargs) for fn, args, kwargs in self.checks]
+        """Every check's result in the order added; the row-filter checks
+        share one aggregate, the others run one query each."""
+        batched = {
+            i: _ROW_CHECKS[fn](*args, **kwargs)
+            for i, (fn, args, kwargs) in enumerate(self.checks)
+            if fn in _ROW_CHECKS
+        }
+        results = dict(zip(batched, _count_violations(df, list(batched.values())))) if batched else {}
+        return [
+            results[i] if i in results else fn(df, *args, **kwargs)
+            for i, (fn, args, kwargs) in enumerate(self.checks)
+        ]
 
 
 def profile_table(df: DataFrame, reprs: dict[str, "callable"] | None = None) -> DataFrame:

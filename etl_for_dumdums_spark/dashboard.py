@@ -72,25 +72,28 @@ def autocorrelation(
 ) -> DataFrame:
     """ACF over an ordered series: one window pass builds all lag columns,
     one aggregate computes every corr — returns (lag, autocorr, n_pairs,
-    significant) with the 1.96/sqrt(n) significance band."""
+    significant) with the 1.96/sqrt(n) significance band, one row per lag."""
     w = W.orderBy(order_key)
-    lagged = df.select(
-        value, *[F.lag(value, k).over(w).alias(f"_lag_{k}") for k in range(1, max_lag + 1)]
+    lags = range(1, max_lag + 1)
+    lagged = df.select(value, *[F.lag(value, k).over(w).alias(f"_lag_{k}") for k in lags])
+    acf = lagged.agg(
+        F.array(
+            *[
+                F.struct(
+                    F.lit(k).alias("lag"),
+                    F.round(F.corr(value, f"_lag_{k}"), 4).alias("autocorr"),
+                    F.count(f"_lag_{k}").alias("n_pairs"),
+                )
+                for k in lags
+            ]
+        ).alias("acf")
     )
-    per_lag = [
-        lagged.agg(
-            F.lit(k).alias("lag"),
-            F.round(F.corr(value, f"_lag_{k}"), 4).alias("autocorr"),
-            F.count(f"_lag_{k}").alias("n_pairs"),
-        )
-        for k in range(1, max_lag + 1)
-    ]
-    out = per_lag[0]
-    for p in per_lag[1:]:
-        out = out.unionByName(p)
-    return out.withColumn(
-        "significant", F.abs(F.col("autocorr")) > 1.96 / F.sqrt(F.col("n_pairs"))
-    ).orderBy("lag")
+    return (
+        acf.select(F.explode("acf").alias("a"))
+        .select("a.*")
+        .withColumn("significant", F.abs(F.col("autocorr")) > 1.96 / F.sqrt(F.col("n_pairs")))
+        .orderBy("lag")
+    )
 
 
 def value_counts(df: DataFrame, col: str) -> DataFrame:

@@ -3,7 +3,9 @@
 Tuned for the test environment (local[N], single JVM) while keeping every
 setting cluster-safe: AQE handles runtime re-planning (join strategy, skew,
 partition coalescing) at any scale; UTC session timezone pins timestamp
-semantics for oracle comparison; Arrow is enabled for the pandas boundary.
+semantics for oracle comparison; Arrow is enabled for the pandas boundary;
+the generated-code class cache holds a warm pass's working set, so a query
+run again reuses its compiled classes instead of recompiling them.
 """
 
 from __future__ import annotations
@@ -43,6 +45,17 @@ def get_spark(app_name: str = "etl_for_dumdums_spark") -> SparkSession:
         # cannot map to TimestampType; read them as raw nanos longs and let
         # the Tables accessor cast (truncating to micros, matching DuckDB).
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+        # The JVM-wide cache of compiled generated classes (default 100
+        # entries, LRU) is smaller than one pass's working set, so each pass
+        # evicted what the next one needed and recompiled all of it.
+        # Measured with Spark's CodegenMetrics on a 4-core host: a warm
+        # perfbench catalog_sf01 pass compiled 221 classes and a refresh
+        # cycle 229-233 at the default, and 0 with 1024 (a refresh cycle
+        # right after the check: 6). 1024 holds both working sets about
+        # twice over. The conf is static: it is read once, when the JVM
+        # first generates code, so it must be set here, before the session
+        # exists.
+        .config("spark.sql.codegen.cache.maxEntries", "1024")
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

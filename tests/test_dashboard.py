@@ -1,4 +1,6 @@
 import math
+import random
+import re
 
 from pyspark.sql import functions as F
 
@@ -60,3 +62,44 @@ def test_value_counts(spark):
     df = spark.createDataFrame([("x",), ("x",), ("y",)], ["c"])
     out = [(r["c"], r["count"]) for r in value_counts(df, "c").collect()]
     assert out == [("x", 2), ("y", 1)]
+
+
+def _pearson(pairs):
+    n = len(pairs)
+    mx = sum(x for x, _ in pairs) / n
+    my = sum(y for _, y in pairs) / n
+    sxy = sum((x - mx) * (y - my) for x, y in pairs)
+    sxx = sum((x - mx) ** 2 for x, _ in pairs)
+    syy = sum((y - my) ** 2 for _, y in pairs)
+    return sxy / math.sqrt(sxx * syy)
+
+
+def test_autocorrelation_is_one_window_and_matches_per_lag(spark):
+    rng = random.Random(7)
+    series = [None if rng.random() < 0.15 else rng.gauss(0.0, 1.0) for _ in range(80)]
+    rows = [(t, v) for t, v in enumerate(series)]
+    rng.shuffle(rows)
+    df = spark.createDataFrame(rows, "t int, v double")
+    acf = autocorrelation(df, "t", "v", max_lag=3)
+    out = acf.collect()
+
+    # the adaptive plan prints the final plan first, then the initial one
+    plan = acf._jdf.queryExecution().executedPlan().toString().split("== Initial Plan ==")[0]
+    assert len(re.findall(r"\bWindow \[", plan)) == 1, plan
+    assert [(f.name, f.dataType.simpleString()) for f in acf.schema.fields] == [
+        ("lag", "int"),
+        ("autocorr", "double"),
+        ("n_pairs", "bigint"),
+        ("significant", "boolean"),
+    ]
+    assert [r["lag"] for r in out] == [1, 2, 3]
+    for r in out:
+        k = r["lag"]
+        # each lag alone: corr over the pairs with both values present;
+        # n_pairs counts the rows whose lagged value is present
+        lagged = list(zip(series[k:], series[:-k]))
+        ref = _pearson([(x, y) for x, y in lagged if x is not None and y is not None])
+        n = sum(y is not None for _, y in lagged)
+        assert math.isclose(r["autocorr"], ref, abs_tol=5e-5 + 1e-12), (k, r, ref)
+        assert r["n_pairs"] == n
+        assert r["significant"] == (abs(r["autocorr"]) > 1.96 / math.sqrt(n))
