@@ -72,7 +72,9 @@ def autocorrelation(
 ) -> DataFrame:
     """ACF over an ordered series: one window pass builds all lag columns,
     one aggregate computes every corr — returns (lag, autocorr, n_pairs,
-    significant) with the 1.96/sqrt(n) significance band, one row per lag."""
+    significant) with the 1.96/sqrt(n) significance band, one row per lag.
+    n_pairs counts the pairs corr uses: rows where both the value and its
+    lag are present (as pandas ``Series.autocorr`` does)."""
     w = W.orderBy(order_key)
     lags = range(1, max_lag + 1)
     lagged = df.select(value, *[F.lag(value, k).over(w).alias(f"_lag_{k}") for k in lags])
@@ -82,7 +84,7 @@ def autocorrelation(
                 F.struct(
                     F.lit(k).alias("lag"),
                     F.round(F.corr(value, f"_lag_{k}"), 4).alias("autocorr"),
-                    F.count(f"_lag_{k}").alias("n_pairs"),
+                    F.regr_count(value, f"_lag_{k}").alias("n_pairs"),
                 )
                 for k in lags
             ]

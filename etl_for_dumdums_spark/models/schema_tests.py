@@ -19,6 +19,7 @@ from __future__ import annotations
 
 from ..checks import (
     CheckResult,
+    CheckSuite,
     accepted_range,
     accepted_values,
     expression_is_true,
@@ -175,8 +176,12 @@ def declared_tests():
 
 
 def run_schema_tests(built: dict) -> list[CheckResult]:
-    """Run every declared test whose model exists in `built`."""
-    results: list[CheckResult] = []
+    """Run every declared test whose model exists in `built`. Each model's
+    tests run as one `CheckSuite`, so its row-filter tests share one
+    aggregate; `unique` and `relationships` run one query each. Results
+    come model by model, which is declared order: `declared_tests` lists
+    each model's tests together."""
+    suites: dict[str, CheckSuite] = {}
     for model, fn, args, kwargs in declared_tests():
         if model not in built:
             continue
@@ -189,7 +194,10 @@ def run_schema_tests(built: dict) -> list[CheckResult]:
             built[a.split(":", 1)[1]] if isinstance(a, str) and a.startswith("parent:") else a
             for a in args
         ]
-        res = fn(built[model], *resolved, **kwargs)
-        res.detail = f"{model}: {res.detail}" if res.detail else model
-        results.append(res)
+        suites.setdefault(model, CheckSuite()).add(fn, *resolved, **kwargs)
+    results: list[CheckResult] = []
+    for model, suite in suites.items():
+        for res in suite.run(built[model]):
+            res.detail = f"{model}: {res.detail}" if res.detail else model
+            results.append(res)
     return results

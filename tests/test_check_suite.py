@@ -13,18 +13,10 @@ from etl_for_dumdums_spark.checks import (
     unique,
 )
 
-
-def _jobs(spark, group: str, fn):
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc._jsc.clearJobGroup()
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+from .test_full_dag import NOW
 
 
-def test_suite_matches_each_check_alone_in_fewer_jobs(spark):
+def test_suite_matches_each_check_alone_in_fewer_jobs(spark, jobs_in_group):
     df = spark.createDataFrame(
         [
             (1, "open", 0.5, 10),
@@ -51,11 +43,41 @@ def test_suite_matches_each_check_alone_in_fewer_jobs(spark):
     for fn, args, kwargs in checks:
         suite.add(fn, *args, **kwargs)
 
-    alone, alone_jobs = _jobs(
-        spark, "checks-alone", lambda: [fn(df, *args, **kwargs) for fn, args, kwargs in checks]
+    alone, alone_jobs = jobs_in_group(
+        "checks-alone", lambda: [fn(df, *args, **kwargs) for fn, args, kwargs in checks]
     )
-    batched, suite_jobs = _jobs(spark, "checks-suite", lambda: suite.run(df))
+    batched, suite_jobs = jobs_in_group("checks-suite", lambda: suite.run(df))
 
     assert batched == alone
     assert [r.violations for r in alone] == [1, 1, 1, 1, 2, 1, 2, 3, 0]
-    assert suite_jobs < alone_jobs, (suite_jobs, alone_jobs)
+    assert len(suite_jobs) < len(alone_jobs), (suite_jobs, alone_jobs)
+
+
+def test_declared_schema_tests_batched_match_each_test_alone(spark, raw_paths, jobs_in_group):
+    """run_schema_tests runs each model's declared tests as one suite; over
+    the full DAG (raw fixtures, so some tests fail) its results, order and
+    details are those of every declared test run alone, from fewer jobs."""
+    from etl_for_dumdums_spark.models.full_dag import build_full_dag
+    from etl_for_dumdums_spark.models.schema_tests import declared_tests, run_schema_tests
+
+    built = build_full_dag(raw_paths, NOW).build(spark)
+
+    def each_alone():
+        out = []
+        for model, fn, args, kwargs in declared_tests():
+            parents = [a[len("parent:"):] for a in args if str(a).startswith("parent:")]
+            if model not in built or any(p not in built for p in parents):
+                continue
+            resolved = [built[a[len("parent:"):]] if str(a).startswith("parent:") else a for a in args]
+            res = fn(built[model], *resolved, **kwargs)
+            res.detail = f"{model}: {res.detail}" if res.detail else model
+            out.append(res)
+        return out
+
+    alone, alone_jobs = jobs_in_group("schema-tests-alone", each_alone)
+    batched, batched_jobs = jobs_in_group("schema-tests-batched", lambda: run_schema_tests(built))
+
+    assert batched == alone
+    assert len(batched) == len(declared_tests())
+    assert any(not r.passed for r in batched)
+    assert len(batched_jobs) < len(alone_jobs), (batched_jobs, alone_jobs)

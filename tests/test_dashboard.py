@@ -2,6 +2,7 @@ import math
 import random
 import re
 
+import pandas as pd
 from pyspark.sql import functions as F
 
 from etl_for_dumdums_spark.dashboard import (
@@ -93,13 +94,18 @@ def test_autocorrelation_is_one_window_and_matches_per_lag(spark):
         ("significant", "boolean"),
     ]
     assert [r["lag"] for r in out] == [1, 2, 3]
+    s = pd.Series(series, dtype="float64")
     for r in out:
         k = r["lag"]
-        # each lag alone: corr over the pairs with both values present;
-        # n_pairs counts the rows whose lagged value is present
+        # each lag alone: corr over the pairs with both values present, and
+        # n_pairs counts exactly those pairs, as pandas' autocorr does
         lagged = list(zip(series[k:], series[:-k]))
         ref = _pearson([(x, y) for x, y in lagged if x is not None and y is not None])
-        n = sum(y is not None for _, y in lagged)
+        n = int((s.notna() & s.shift(k).notna()).sum())
+        # the series has NULLs with a present lag, so rows with a lag only
+        # would count more
+        assert n < sum(y is not None for _, y in lagged)
         assert math.isclose(r["autocorr"], ref, abs_tol=5e-5 + 1e-12), (k, r, ref)
+        assert math.isclose(r["autocorr"], s.autocorr(k), abs_tol=5e-5 + 1e-12), (k, r)
         assert r["n_pairs"] == n
         assert r["significant"] == (abs(r["autocorr"]) > 1.96 / math.sqrt(n))

@@ -1,7 +1,7 @@
 """Run the FULL model DAG (models/full_dag.py — the `dbt build`
-equivalent) at a fixture scale factor and record wall time + per-model row
-counts (r5 verdict item #3: the DAG had parity evidence only at pytest
-scale).
+equivalent) at a fixture scale factor and record the build's wall time,
+the time to then count every model, and per-model row counts (r5 verdict
+item #3: the DAG had parity evidence only at pytest scale).
 
 The raw inputs come from the same seeded generators the parity tests use
 (tests/fixtures.py), scaled via $SPARK_GRAFT_FIXTURE_SCALE: facts grow
@@ -89,24 +89,29 @@ def main() -> int:
     t0 = time.time()
     reg = build_full_dag(paths, NOW, mart_dir=mart_dir)
     built = reg.build(spark)
-    # force every model (views are lazy): count each in topo order
+    t_built = time.time()
+    # force every model (views are lazy): count each in topo order. Table
+    # marts are computed by reg.build and only scanned here, so the build
+    # and force times are reported apart: the split moves with the
+    # materialization.
     model_rows = {}
     for name in reg.topo_order():
         model_rows[name] = built[name].count()
-    wall = round(time.time() - t0, 2)
+    t_forced = time.time()
 
     doc = {
         "fixture_scale": scale,
         "raw_rows": raw_rows,
         "raw_total": sum(raw_rows.values()),
         "n_models": len(model_rows),
-        "dag_build_sec": wall,
+        "build_sec": round(t_built - t0, 2),
+        "force_sec": round(t_forced - t_built, 2),
         "fixture_gen_sec": gen_sec,
         "model_rows": model_rows,
     }
     Path(args.out).write_text(json.dumps(doc, indent=1))
     print(json.dumps({k: doc[k] for k in (
-        "fixture_scale", "raw_total", "n_models", "dag_build_sec")}))
+        "fixture_scale", "raw_total", "n_models", "build_sec", "force_sec")}))
     if not args.keep_raw:
         shutil.rmtree(base, ignore_errors=True)
     shutil.rmtree(mart_dir, ignore_errors=True)
