@@ -95,11 +95,12 @@ def duckdb_control(sf_dir: str, names: list[str], n_runs: int):
     return total, per_query, [round(r, 3) for r in rounds]
 
 
-def main() -> None:
-    # refuse to bench while an at-scale oracle sweep is live: BENCH_r07 was
-    # taken under sweep contention and read as a 70%/46% per-query regression
-    # that a quiet-box re-run showed was pure noise. Override (e.g. for a
-    # deliberately-loaded measurement) with SPARK_GRAFT_BENCH_FORCE=1.
+def sweep_guard() -> None:
+    """Refuse to bench while an at-scale oracle sweep is live: BENCH_r07 was
+    taken under sweep contention and read as a 70%/46% per-query regression
+    that a quiet-box re-run showed was pure noise. Exits 2 under a live
+    sweep; removes a stale lock. Override (e.g. for a deliberately-loaded
+    measurement) with SPARK_GRAFT_BENCH_FORCE=1."""
     import glob as _glob
 
     sys.path.insert(0, str(Path(__file__).resolve().parent / "tools"))
@@ -118,6 +119,10 @@ def main() -> None:
             )
             raise SystemExit(2)
         sweep_lock.unlink(missing_ok=True)  # stale, or gone since the glob
+
+
+def main() -> None:
+    sweep_guard()
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     try:

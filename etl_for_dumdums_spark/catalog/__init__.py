@@ -188,11 +188,8 @@ def load_all() -> None:
         behavior,
         privacy,
         incremental,
-        graph,
         mining,
         features,
-        warehouse,
-        native4,
         ingest,
     )
     from . import sampled  # noqa: F401  (last: wraps already-registered queries)

@@ -1095,8 +1095,8 @@ def embed_centroid_assign(spark, sf_dir):
 
 # ---------------------------------------------------------------------------
 # One EXACT Lloyd iteration of k-means over the integer-quantized embeddings
-# (beyond-reference — the iterative-ML-on-aggregates pattern, same class as
-# graph_pagerank_nations' unrolled power method): init centroids = first K
+# (beyond-reference — the iterative-ML-on-aggregates pattern, one unrolled
+# step): init centroids = first K
 # vectors, assign by integer squared-L2 argmin, UPDATE centroids as exact
 # per-dimension truncating-division means (SQL div / DuckDB // both truncate
 # toward zero on negatives — NOT Python floor; integer centroids stay integers — no

@@ -13,7 +13,6 @@ codegen-friendly — no Python UDFs):
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -83,18 +82,3 @@ def scrub_nan(col: Column) -> Column:
     clean_float/clean_int ingestion scrubbing)."""
     return F.when(F.isnan(col), F.lit(None)).otherwise(col)
 
-
-def token_count_pandas() -> Column:
-    """Arrow-vectorized scalar Pandas UDF counting whitespace tokens —
-    the @pandas_udf surface demonstrated with a JVM-native twin
-    (``F.size(F.split(trim(text), r'\\s+'))``) pinned equal by test.
-    Use the native expression in hot paths; this exists for kernels with
-    no column-expression form (and as the ~10-100x-faster-than-row-UDF
-    Python escape hatch the guide prescribes)."""
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("int")
-    def _count(texts: pd.Series) -> pd.Series:
-        return texts.str.strip().str.split(r"\s+").str.len().astype("int32")
-
-    return _count

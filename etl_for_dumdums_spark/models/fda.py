@@ -175,7 +175,6 @@ def fct_events_by_reaction(int_reactions: DataFrame) -> DataFrame:
             F.min("event_year").alias("first_year"),
             F.max("event_year").alias("last_year"),
         )
-        .orderBy("category")
     )
 
 
@@ -196,7 +195,7 @@ def fct_events_by_gender(stg: DataFrame) -> DataFrame:
             "pct_of_reports"
         ),
         F.round(F.col("n_hospitalized") * 100.0 / F.col("n_reports"), 4).alias("pct_hospitalized"),
-    ).orderBy("gender")
+    )
 
 
 def fct_events_monthly(int_reactions: DataFrame) -> DataFrame:
@@ -222,7 +221,6 @@ def fct_events_monthly(int_reactions: DataFrame) -> DataFrame:
             F.count_if(F.col("gender") == "Male").alias("male_count"),
             F.round(F.avg("reaction_count"), 2).alias("avg_reactions_per_event"),
         )
-        .orderBy("month")
     )
 
 
@@ -245,7 +243,7 @@ def fct_events_by_product(stg: DataFrame, int_reactions: DataFrame) -> DataFrame
         .filter(F.col("rn") == 1)
         .select("industry", F.col("category").alias("top_reaction"), F.col("n").alias("top_reaction_reports"))
     )
-    return totals.join(top, "industry", "left").orderBy("industry")
+    return totals.join(top, "industry", "left")
 
 
 # inline state lookup (subset of the 56-element literal table at
@@ -282,7 +280,6 @@ def fct_recalls_by_state(raw_recalls: DataFrame, spark) -> DataFrame:
             "class_ii_count",
             "class_iii_count",
         )
-        .orderBy("state")
     )
 
 
@@ -326,5 +323,4 @@ def fct_recalls_by_topic(int_topics: DataFrame) -> DataFrame:
     return (
         per_topic.unionByName(rollup_row("Pathogen (Any)", PATHOGEN_TOPICS))
         .unionByName(rollup_row("Allergen (Any)", ALLERGEN_TOPICS))
-        .orderBy("topic")
     )

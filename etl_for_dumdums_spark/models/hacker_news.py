@@ -48,7 +48,6 @@ def fct_hn_weekly_stats(raw_stories: DataFrame) -> DataFrame:
             F.max("score").alias("max_score"),
             F.round(F.avg("descendants"), 4).alias("avg_comments"),
         )
-        .orderBy("week")
     )
 
 
@@ -70,7 +69,6 @@ def fct_hn_keyword_trends(raw_stories: DataFrame) -> DataFrame:
         .filter(F.col("m.matched"))
         .groupBy("week", F.col("m.keyword").alias("keyword"))
         .agg(F.count("*").alias("mention_count"))
-        .orderBy("week", "keyword")
     )
 
 
@@ -145,7 +143,7 @@ def fct_hn_keyword_sentiment(int_sentiment: DataFrame) -> DataFrame:
         "*",
         (F.col("avg_sentiment") - F.lag("avg_sentiment").over(w)).alias("sentiment_dod_change"),
         (F.col("positive_pct") - F.lag("positive_pct").over(w)).alias("positive_pct_dod_change"),
-    ).orderBy("keyword", "day")
+    )
 
 
 def fct_hn_domain_stats(raw_stories: DataFrame, min_stories: int = 3) -> DataFrame:
@@ -158,5 +156,4 @@ def fct_hn_domain_stats(raw_stories: DataFrame, min_stories: int = 3) -> DataFra
             F.round(F.avg("score"), 4).alias("avg_score"),
         )
         .filter(F.col("story_count") >= min_stories)
-        .orderBy("week", "domain")
     )

@@ -28,7 +28,6 @@ def fct_sales_monthly(sales: DataFrame) -> DataFrame:
                 F.sum("sale_dollars") / F.nullif(F.count("*"), F.lit(0)), 4
             ).alias("avg_transaction"),
         )
-        .orderBy("sale_month")
     )
 
 
@@ -55,7 +54,7 @@ def fct_sales_by_county(sales: DataFrame) -> DataFrame:
         F.col("top_category_name").alias("top_category"),
         F.col("top_m").alias("top_category_sales"),
     )
-    return totals.join(top_cat, "county").orderBy("county")
+    return totals.join(top_cat, "county")
 
 
 def fct_top_vendors(sales: DataFrame) -> DataFrame:
@@ -68,4 +67,4 @@ def fct_top_vendors(sales: DataFrame) -> DataFrame:
         F.col("top_item_description").alias("top_product"),
         F.col("top_m").alias("top_product_sales"),
     )
-    return totals.join(top_item, "vendor_name").orderBy("vendor_name")
+    return totals.join(top_item, "vendor_name")

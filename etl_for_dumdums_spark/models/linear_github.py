@@ -51,7 +51,6 @@ def dim_users(linear_users: DataFrame, github_users: DataFrame) -> DataFrame:
             .otherwise("github_only")
             .alias("presence"),
         )
-        .orderBy("email")
     )
 
 
@@ -98,7 +97,6 @@ def fct_issues(
                 & now_lit.between(F.col("starts_at"), F.col("ends_at"))
             ).alias("is_in_active_cycle"),
         )
-        .orderBy("issue_id")
     )
 
 
@@ -137,7 +135,6 @@ def fct_pull_requests(prs: DataFrame, reviews: DataFrame, comments: DataFrame) -
                 4,
             ).alias("hours_to_first_review"),
         )
-        .orderBy("pr_id")
     )
 
 
@@ -175,5 +172,4 @@ def fct_reviewer_activity(prs: DataFrame, reviews: DataFrame, comments: DataFram
                 "capped_engagement"
             ),
         )
-        .orderBy("participant_id")
     )

@@ -64,4 +64,4 @@ def fct_oura_daily(
         .when(combined.isNotNull(), "poor")
         .otherwise("unknown")
         .alias("wellness_category"),
-    ).orderBy("day")
+    )

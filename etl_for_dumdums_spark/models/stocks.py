@@ -94,4 +94,4 @@ def fct_sector_performance(fct_prices: DataFrame) -> DataFrame:
         F.count_if(F.col("period_change_pct") > 0).alias("n_up"),
         F.round(F.avg("period_change_pct"), 4).alias("avg_change_pct"),
     )
-    return agg.join(best, "sector").orderBy("sector")
+    return agg.join(best, "sector")

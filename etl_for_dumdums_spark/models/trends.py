@@ -30,4 +30,4 @@ def fct_keyword_trends(interest: DataFrame) -> DataFrame:
             & (i >= F.max(i).over(w.rowsBetween(-3, 3)))
         ).alias("is_local_peak"),
         F.row_number().over(wrec).alias("recency_rank"),
-    ).orderBy("keyword", "geo", "date")
+    )

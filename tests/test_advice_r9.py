@@ -65,52 +65,40 @@ def test_stream_child_waits_for_slow_full_lines(tmp_path):
     assert lines == ["PASS q1 (1 rows) [0.1s]\n"]
 
 
-# The lock tests only exercise bench's sweep-lock guard, not its timing
-# quality: one run per query, no DuckDB control, so the subprocess finishes
-# well inside the timeout even on a cold/loaded box (the original 3-run +
-# control form was timeout-flaky at 120s).
-_BENCH_ENV = {
-    **os.environ,
-    "SPARK_GRAFT_SF_DIR": "/root/testdata/sf0.001",
-    "SPARK_GRAFT_BENCH_RUNS": "1",
-    "SPARK_GRAFT_BENCH_CONTROL": "0",
-}
+# The lock tests call bench's sweep-lock guard in-process: it is the first
+# thing bench.main() does, so running the whole bench would only add its
+# Spark queries to the test.
 _LOCK = "/tmp/spark_graft_sweep.lock"
 
 
-def _run_bench():
-    return subprocess.run(
-        [sys.executable, str(Path(__file__).resolve().parents[1] / "bench.py")],
-        capture_output=True,
-        text=True,
-        timeout=300,
-        env=_BENCH_ENV,
-    )
-
-
-def test_bench_ignores_pid_reuse_with_mismatched_cmdline():
+def test_bench_ignores_pid_reuse_with_mismatched_cmdline(monkeypatch):
     """A lock that records a cmdline is only honored if the live process
     still matches it — here the recorded holder is a fake sweep cmdline but
     the pid belongs to this pytest process, so bench must treat the lock as
-    stale, recover it, and run."""
+    stale and recover it."""
+    import bench
+
     if os.path.exists(_LOCK):
         pytest.skip("a real sweep is running")
+    monkeypatch.delenv("SPARK_GRAFT_BENCH_FORCE", raising=False)
     Path(_LOCK).write_text(
         f"{os.getpid()}\npython tools/run_oracle_chunked.py --sf /tmp/sfscale1000"
     )
     try:
-        proc = _run_bench()
-        assert proc.returncode == 0, proc.stderr[-1000:]
+        bench.sweep_guard()
         assert not os.path.exists(_LOCK)  # recovered as stale
     finally:
         Path(_LOCK).unlink(missing_ok=True)
 
 
-def test_bench_refuses_when_recorded_cmdline_matches():
+def test_bench_refuses_when_recorded_cmdline_matches(monkeypatch, capsys):
     """Same pid, but the recorded cmdline matches the live process: a real
     sweep — bench must refuse (exit 2)."""
+    import bench
+
     if os.path.exists(_LOCK):
         pytest.skip("a real sweep is running")
+    monkeypatch.delenv("SPARK_GRAFT_BENCH_FORCE", raising=False)
     my_cmd = (
         Path(f"/proc/{os.getpid()}/cmdline")
         .read_bytes()
@@ -120,9 +108,10 @@ def test_bench_refuses_when_recorded_cmdline_matches():
     )
     Path(_LOCK).write_text(f"{os.getpid()}\n{my_cmd}")
     try:
-        proc = _run_bench()
-        assert proc.returncode == 2
-        assert "sweep" in proc.stderr
+        with pytest.raises(SystemExit) as exc:
+            bench.sweep_guard()
+        assert exc.value.code == 2
+        assert "sweep" in capsys.readouterr().err
     finally:
         Path(_LOCK).unlink(missing_ok=True)
 

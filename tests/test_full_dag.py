@@ -50,6 +50,19 @@ def test_full_dag_builds_all_marts(spark, raw_paths, tmp_path):
     assert (tmp_path / "fct_stock_prices").exists()
 
 
+def test_table_models_end_in_no_global_sort(spark, raw_paths):
+    """A parquet table does not keep the order its builder sorted in, so no
+    table model ends in a sort: the root of each one's optimized plan is not
+    a Sort (a window's ordering is not a plan-root Sort)."""
+    reg = build_full_dag(raw_paths, NOW, mart_dir="marts")
+    tables = [m.name for m in reg._models.values() if m.materialization == "table"]
+    assert len(tables) >= 25
+    built = build_full_dag(raw_paths, NOW).build(spark, targets=tables)
+    for name in tables:
+        root = built[name]._jdf.queryExecution().optimizedPlan()
+        assert root.nodeName() != "Sort", name
+
+
 def test_dbt_style_checks_on_built_marts(spark, raw_paths):
     reg = build_full_dag(raw_paths, NOW)
     built = reg.build(spark)

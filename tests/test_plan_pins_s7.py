@@ -2,7 +2,6 @@
 
 These assert PLAN PROPERTIES, not results (the oracle covers results):
   * the chi-square cells cache means the events parquet is scanned once;
-  * PageRank's three iterations reuse ONE cached lineitem scan;
   * the migration checksum aggregates with no hash-partitioned exchange
     (only the single-partition partial merge);
   * the de-hinted star join no longer forces a supplier broadcast.
@@ -30,14 +29,6 @@ def test_chisq_scans_events_once(spark):
     # the text repeats it once per referencing branch)
     assert plan.count("InMemoryRelation") >= 1
     assert plan.count("events.parquet") == plan.count("InMemoryRelation")
-
-
-def test_pagerank_scans_lineitem_once(spark):
-    from etl_for_dumdums_spark.catalog.graph import graph_pagerank_nations
-
-    plan = _optimized(graph_pagerank_nations(spark, SF_SMOKE))
-    assert plan.count("InMemoryRelation") >= 1
-    assert plan.count("lineitem.parquet") == plan.count("InMemoryRelation")
 
 
 def test_checksum_has_no_hash_exchange(spark):

@@ -5,8 +5,6 @@
     (local row_number / local running sum); the total order comes from a
     RangePartitioning exchange, never a single-task global sort window;
   * feat_point_in_time's RANGE frame window partitions by user_id;
-  * graph_triangle_count collapses to the nation edge frame before any
-    join — the triangle joins are broadcasts, never cartesian products;
   * events_sequence_pattern is one user_id hash aggregate — no WindowExec,
     no cartesian product;
   * embed_kmeans_lloyd assigns via hash aggregation (min_by), not windows.
@@ -61,15 +59,6 @@ def test_point_in_time_window_is_user_partitioned(spark):
     for w in wins:
         assert "user_id" in w, w
     assert "CartesianProduct" not in plan
-
-
-def test_triangle_joins_are_broadcast_on_the_edge_frame(spark):
-    from etl_for_dumdums_spark.catalog.graph import graph_triangle_count
-
-    plan = _physical(graph_triangle_count(spark, SF_SMOKE))
-    assert "CartesianProduct" not in plan
-    assert "BroadcastHashJoin" in plan or "BroadcastNestedLoopJoin" in plan
-    assert "Window" not in plan
 
 
 def test_sequence_pattern_caps_state_before_collect_list(spark):

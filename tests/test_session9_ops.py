@@ -213,46 +213,6 @@ def test_session_native_matches_serial_gap_rule(spark):
     assert row["max_events"] > 1
 
 
-def test_triangle_count_matches_serial(spark):
-    from itertools import combinations
-
-    from etl_for_dumdums_spark.catalog.graph import graph_triangle_count
-
-    und = set(
-        tuple(r)
-        for r in duckdb.sql(
-            f"""
-        SELECT DISTINCT least(s.s_nationkey, c.c_nationkey),
-                        greatest(s.s_nationkey, c.c_nationkey)
-        FROM '{SF_SMOKE}/lineitem.parquet' l
-        JOIN '{SF_SMOKE}/orders.parquet' o ON l.l_orderkey = o.o_orderkey
-        JOIN '{SF_SMOKE}/customer.parquet' c ON o.o_custkey = c.c_custkey
-        JOIN '{SF_SMOKE}/supplier.parquet' s ON l.l_suppkey = s.s_suppkey
-        WHERE s.s_nationkey <> c.c_nationkey
-        """
-        ).fetchall()
-    )
-    nodes = sorted({n for e in und for n in e})
-    tri = sum(
-        1
-        for a, b, c in combinations(nodes, 3)
-        if (a, b) in und and (b, c) in und and (a, c) in und
-    )
-    deg = {n: 0 for n in nodes}
-    for a, b in und:
-        deg[a] += 1
-        deg[b] += 1
-    triads = sum(d * (d - 1) // 2 for d in deg.values())
-
-    row = graph_triangle_count(spark, SF_SMOKE).collect()[0]
-    assert row["n_nodes"] == len(nodes)
-    assert row["n_edges"] == len(und)
-    assert row["n_triangles"] == tri
-    assert row["n_open_triads"] == triads
-    assert row["clustering_ppm"] == (3 * tri * 1_000_000 // triads if triads else 0)
-    assert tri > 0  # non-vacuous on the smoke data
-
-
 def test_point_in_time_features_leakage_free(spark):
     """Prior-7d view counts must exclude the label instant and anything
     after it (strict point-in-time rule), per the serial replay."""
@@ -292,44 +252,6 @@ def test_point_in_time_features_leakage_free(spark):
         )
         assert r["avg_value_cents"] == total // n
     assert len(buckets) > 1  # non-vacuous: multiple engagement buckets
-
-
-def test_functional_deps_directions(spark):
-    """The FD audit must report both holding and violated dependencies."""
-    from etl_for_dumdums_spark.catalog.warehouse import ops_functional_deps
-
-    rows = {r["fd"]: r for r in ops_functional_deps(spark, SF_SMOKE).collect()}
-    # unique determinants trivially hold
-    assert rows["customer_key_to_segment"]["holds"] is True
-    assert rows["nation_key_to_region"]["holds"] is True
-    # real event streams violate user->type determinism
-    assert rows["events_user_to_type"]["holds"] is False
-    assert rows["events_user_to_type"]["n_violating_groups"] > 0
-    serial = duckdb.sql(
-        f"SELECT count(*), count_if(nd > 1), max(nd) FROM ("
-        f"SELECT user_id, count(DISTINCT event_type) AS nd "
-        f"FROM '{SF_SMOKE}/events.parquet' GROUP BY user_id)"
-    ).fetchone()
-    r = rows["events_user_to_type"]
-    assert (r["n_groups"], r["n_violating_groups"], r["max_distinct_rhs"]) == serial
-
-
-def test_dq_report_rules(spark):
-    from etl_for_dumdums_spark.catalog.warehouse import _DQ_PRICE_MAX, ops_dq_report
-
-    rows = {r["rule_id"]: r for r in ops_dq_report(spark, SF_SMOKE).collect()}
-    assert len(rows) == 5
-    # clean columns pass
-    assert rows["orders.o_custkey not_null"]["passed"] is True
-    assert rows["orders.o_orderkey unique"]["passed"] is True
-    assert rows["orders.o_custkey -> customer"]["passed"] is True
-    # the tight range rule must FAIL on real data (non-vacuous report)
-    r = rows[f"orders.o_totalprice in [0, {_DQ_PRICE_MAX}]"]
-    expected = duckdb.sql(
-        f"SELECT count_if(o_totalprice > {_DQ_PRICE_MAX}) "
-        f"FROM '{SF_SMOKE}/orders.parquet'"
-    ).fetchone()[0]
-    assert r["passed"] is False and r["n_violations"] == expected > 0
 
 
 def test_weighted_median_matches_serial(spark):
@@ -537,41 +459,6 @@ def test_multiprobe_recall_dominates_single_probe(spark):
     assert any(
         r["recall_9probe_pct"] > r["recall_1probe_pct"] for r in mp.values()
     )
-
-
-def test_hierarchy_shares_matches_serial(spark):
-    from etl_for_dumdums_spark.catalog.warehouse import agg_hierarchy_shares
-
-    rows = duckdb.sql(
-        f"""
-        SELECT r.r_name, n.n_name, sum(CAST(round(o.o_totalprice*100) AS BIGINT))
-        FROM '{SF_SMOKE}/orders.parquet' o
-        JOIN '{SF_SMOKE}/customer.parquet' c ON o.o_custkey = c.c_custkey
-        JOIN '{SF_SMOKE}/nation.parquet' n ON c.c_nationkey = n.n_nationkey
-        JOIN '{SF_SMOKE}/region.parquet' r ON n.n_regionkey = r.r_regionkey
-        GROUP BY 1, 2
-        """
-    ).fetchall()
-    child = {(reg, nat): int(cents) for reg, nat, cents in rows}
-    region_tot = {}
-    for (reg, _), cents in child.items():
-        region_tot[reg] = region_tot.get(reg, 0) + cents
-    total = sum(child.values())
-
-    got = {(r["region"], r["nation"]): r for r in agg_hierarchy_shares(spark, SF_SMOKE).collect()}
-    assert set(got) == set(child)
-    for key, cents in child.items():
-        r = got[key]
-        assert r["cents"] == cents
-        assert r["region_cents"] == region_tot[key[0]]
-        assert r["share_of_region_ppm"] == cents * 1_000_000 // region_tot[key[0]]
-        assert r["share_of_total_ppm"] == cents * 1_000_000 // total
-    # ppm shares of each region sum to ~1e6 (floor losses < nations/region)
-    for reg in region_tot:
-        s = sum(
-            r["share_of_region_ppm"] for k, r in got.items() if k[0] == reg
-        )
-        assert 1_000_000 - 10 <= s <= 1_000_000
 
 
 def test_stl_decompose_matches_serial(spark):

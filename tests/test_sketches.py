@@ -6,15 +6,19 @@ hold by construction:
   * the shared md5-prefix hash matches the reference computation bit-for-bit;
   * HLL's estimate lands within its theoretical error envelope;
   * count-min never underestimates (one-sided error);
-  * the Bloom filter has zero false negatives.
+  * the Bloom filter has zero false negatives;
+  * Spark's built-in DataSketches HLL is deterministic, mergeable and
+    bounded-error (no SQL engine can restate its estimate).
 """
 
 from __future__ import annotations
 
 import hashlib
+from pathlib import Path
 
 from pyspark.sql import functions as F
 
+from etl_for_dumdums_spark.catalog import Tables
 from etl_for_dumdums_spark.catalog.sketches import (
     _BLOOM_M,
     _CMS_D,
@@ -25,6 +29,8 @@ from etl_for_dumdums_spark.catalog.sketches import (
     sketch_hll_distinct,
 )
 from tests.conftest import SF_SMOKE
+
+SF_01 = str(Path(SF_SMOKE).parent / "sf0.01")
 
 
 def _py_h(s: str) -> int:
@@ -114,3 +120,30 @@ def test_hll_rollup_merge_is_lossless(spark):
         mw = [w for w in weeks if w["period"].startswith(m["period"])]
         assert m["n_days"] == sum(w["n_days"] for w in mw)
         assert m["n_exact"] <= sum(w["n_exact"] for w in mw)
+
+
+# ---------------------------------------------------------------------------
+# DataSketches HLL: deterministic, mergeable, bounded-error — pinned here
+# because no SQL engine can restate the DataSketches estimate (same policy
+# as text_compression_ratio's zlib values).
+# ---------------------------------------------------------------------------
+def test_hll_sketch_union_equals_direct_and_bounds_error(spark):
+    ev = Tables(spark, SF_01).events
+    lg_k = F.lit(14)
+    per_type = ev.groupBy("event_type").agg(F.hll_sketch_agg("user_id", lg_k).alias("sk"))
+    union_est = per_type.agg(
+        F.hll_sketch_estimate(F.hll_union_agg("sk")).alias("est")
+    ).collect()[0].est
+    direct_est = ev.agg(
+        F.hll_sketch_estimate(F.hll_sketch_agg("user_id", lg_k)).alias("est")
+    ).collect()[0].est
+    exact = ev.select("user_id").distinct().count()
+    # mergeability: unioning per-group sketches == sketching the whole column
+    assert union_est == direct_est
+    # bounded error: lgK=14 gives ~0.8% relative standard error
+    assert abs(union_est - exact) <= max(2, 0.05 * exact)
+    # determinism: a second run yields the identical estimate
+    again = ev.agg(
+        F.hll_sketch_estimate(F.hll_sketch_agg("user_id", lg_k)).alias("est")
+    ).collect()[0].est
+    assert again == direct_est

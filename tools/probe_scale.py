@@ -41,7 +41,6 @@ DEFAULT_SET = [
     "agg_gini_concentration",
     "agg_weighted_median",
     "events_session_native",
-    "agg_hierarchy_shares",
     "events_sequence_pattern",
 ]
 
