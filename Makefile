@@ -17,10 +17,7 @@ bench-scale-100: scale-data-100
 
 # oracle parity ON the 100x dataset. dedup_prefix_jaccard stays excluded:
 # its exact pair-list output is quadratic in the replication factor by
-# definition — verified at 10x instead. events_sequence_pattern rejoined
-# the batch in r4: the row_number()<=_SEQ_CAP pre-filter bounds both
-# engines' aggregation state (the old slice-after-collect_list shape
-# exhausted DuckDB's buffer pool). The per-row-output queries
+# definition — verified at 10x instead. The per-row-output queries
 # (win_lag_deltas, win_rolling_frames, scalar_*, text_chunk_tokens,
 # dedup_cc_groups, join_range_interval) are verified at 100x via the
 # sampled tier below instead of full-output comparison.
@@ -52,9 +49,7 @@ oracle-100x-sampled:
 #   OOM in r8 even after CTE materialization — beyond a single-node oracle.
 # - join_cooccurrence_pairs: the oracle's basket pair join needs ~46GB of
 #   spill at 1000x and OOMs regardless of materialization.
-# - events_sequence_pattern was already sampled-only at 1000x (the full
-#   oracle's serial window over 600M rows OOMs at ~94GB, ROUND4_NOTES).
-ORACLE_1000X_EXCLUDE = $(ORACLE_100X_EXCLUDE),text_winnow_sketch,text_winnow_neardup,join_cooccurrence_pairs,events_sequence_pattern
+ORACLE_1000X_EXCLUDE = $(ORACLE_100X_EXCLUDE),text_winnow_sketch,text_winnow_neardup,join_cooccurrence_pairs
 oracle-1000x:
 	python tools/run_oracle_chunked.py --sf /tmp/sfscale1000 \
 	  --exclude $(ORACLE_1000X_EXCLUDE) --chunk-size 25
@@ -68,9 +63,7 @@ oracle-1000x-sampled:
 oracle-1000x-spot:
 	python tools/spot_check_scale.py --sf /tmp/sfscale1000 \
 	  agg_pricing_summary win_top_n_per_group join_agg_then_left \
-	  events_session_native dedup_minhash_lsh
-	python tools/spot_check_scale.py --sf /tmp/sfscale1000 --sampled \
-	  events_sequence_pattern
+	  dedup_minhash_lsh
 
 # the Tier-1 command from ROADMAP.md, plus the 15 slowest tests
 test:

@@ -185,11 +185,9 @@ def load_all() -> None:
         sampling,
         timeseries,
         contamination,
-        behavior,
         privacy,
         incremental,
         mining,
-        features,
         ingest,
     )
     from . import sampled  # noqa: F401  (last: wraps already-registered queries)

@@ -34,7 +34,6 @@ from . import (
     SAMPLED_QUERIES,
     Tables,
 )
-from .behavior import _sequence_pattern, _sequence_pattern_sql
 from .dedup import _cc_groups, _cc_sql, _prefix_jaccard, _prefix_jaccard_sql
 from .joins import (
     _cooccurrence_pairs,
@@ -104,9 +103,8 @@ SAMPLED_QUERIES["dedup_cc_groups"] = _sampled_cc_groups
 SAMPLED_ORACLE["dedup_cc_groups"] = _cc_sql(f" WHERE doc_id % {_DOC_MOD} = 0")
 
 
-# dedup_prefix_jaccard samples deeper (prime mod, the _SEQ_USER_MOD
-# convention): the exact pair-list is QUADRATIC in per-token document
-# frequency, and the r9 1000x adjudication measured the mod-10 corpus
+# dedup_prefix_jaccard samples deeper (a prime modulus): the exact
+# pair-list is QUADRATIC in per-token document frequency, and the r9 1000x adjudication measured the mod-10 corpus
 # (500k docs, phrase-pool trigrams at df 100-6000) generating ~2.6B
 # candidate match rows — beyond one box's disk in BOTH engines even after
 # the positional-filter/fingerprint/collapse rewrite. 1/101 keeps ~50k
@@ -135,25 +133,6 @@ def _sampled_range_interval(spark, sf_dir):
 SAMPLED_QUERIES["join_range_interval"] = _sampled_range_interval
 SAMPLED_ORACLE["join_range_interval"] = _range_interval_sql(
     f" WHERE event_id % {_EVT_MOD} = 0"
-)
-
-# events_sequence_pattern: the full-output 1000x oracle is DuckDB-infeasible
-# (serial window over 600M rows OOMs at ~94 GB — docs/ROUND4_NOTES.md); the
-# computation is strictly per-user, so restricting to a 1/101 USER subset
-# (prime modulus, applied before the QUALIFY/row_number in both engines) is
-# semantics-preserving and gives the biggest 1000x consumer VALUE parity at
-# scale, not just completion (r4 verdict item #4).
-_SEQ_USER_MOD = 101
-
-
-def _sampled_sequence_pattern(spark, sf_dir):
-    t = Tables(spark, sf_dir)
-    return _sequence_pattern(t.events.filter(F.col("user_id") % _SEQ_USER_MOD == 0))
-
-
-SAMPLED_QUERIES["events_sequence_pattern"] = _sampled_sequence_pattern
-SAMPLED_ORACLE["events_sequence_pattern"] = _sequence_pattern_sql(
-    f" WHERE user_id % {_SEQ_USER_MOD} = 0"
 )
 
 # ---------------------------------------------------------------------------

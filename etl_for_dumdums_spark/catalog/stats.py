@@ -166,7 +166,7 @@ def stats_autocorr(spark, sf_dir):
     )
     # one agg computes every lag's corr/count, then explodes to rows — the
     # union-of-single-row-aggs shape re-executed the daily pipeline + window
-    # once PER lag (same plan bug as events_sequence_pattern, round 6)
+    # once PER lag
     acf = lagged.agg(
         *[R(F.corr("revenue", f"lag_{k}")).alias(f"a_{k}") for k in _ACF_LAGS],
         *[F.count(f"lag_{k}").alias(f"n_{k}") for k in _ACF_LAGS],

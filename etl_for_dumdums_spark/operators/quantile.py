@@ -11,9 +11,9 @@ probe a value, count how many rows are <= it, narrow. Terminates because
 the candidate set shrinks monotonically; on 2-decimal money columns the
 domain is integer cents, so the search is exact integer bisection.
 
-``exact_quantile_cents`` returns the same linear-interpolated quantile as
-``F.percentile`` / DuckDB ``quantile_cont`` (pinned by test): it selects
-the floor/ceil order statistics with two bisections and interpolates.
+``exact_quantiles_cents`` returns the same linear-interpolated quantiles
+as ``F.percentile`` / DuckDB ``quantile_cont`` (pinned by test): it selects
+the floor/ceil order statistics and interpolates.
 """
 
 from __future__ import annotations
@@ -22,6 +22,15 @@ import math
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+# Scan 4 collects its bracket histogram to the driver, at ~430 bytes of
+# Python heap per (value, count) row. Its size is rank-bounded but grows
+# with n: ~4*ceil(n/100000)+3 rows per order statistic, so
+# agg_quantile_counting's four order statistics over the 1000x replica's
+# 600M rows need at most ~96k rows (~41 MB). Past this many rows the driver
+# stops collecting and each order statistic falls back to counting
+# bisection, which holds O(1) on the driver.
+_HIST_CAP = 100_000
 
 
 def _kth_smallest_cents(df: DataFrame, col: str, k: int, lo: int, hi: int) -> int:
@@ -142,15 +151,20 @@ def exact_quantiles_cents(df: DataFrame, value_col: str, qs) -> list[float]:
     ).collect()[0]
     base = {k: base_row[f"b{k}"] for k in sks}
     # scan 4: distinct-value histogram over the union of brackets —
-    # rank-bounded (<= ~4*ceil(n/accuracy)+3 distinct values per k)
+    # rank-bounded (<= ~4*ceil(n/accuracy)+3 distinct values per k) and
+    # collected only up to _HIST_CAP rows
     in_any = None
     for k in sks:
         cond = (F.col("c") >= bounds[k][0]) & (F.col("c") <= bounds[k][1])
         in_any = cond if in_any is None else (in_any | cond)
-    hist = sorted(
-        (r["c"], r["f"])
-        for r in cdf.filter(in_any).groupBy("c").agg(F.count("*").alias("f")).collect()
+    rows = (
+        cdf.filter(in_any)
+        .groupBy("c")
+        .agg(F.count("*").alias("f"))
+        .limit(_HIST_CAP + 1)
+        .collect()
     )
+    hist = sorted((r["c"], r["f"]) for r in rows) if len(rows) <= _HIST_CAP else []
     kth: dict[int, int] = {}
     for k in sks:
         lo_k, hi_k = bounds[k]
@@ -165,7 +179,7 @@ def exact_quantiles_cents(df: DataFrame, value_col: str, qs) -> list[float]:
                         break
         if found is not None:
             kth[k] = found
-        else:  # pragma: no cover — requires a broken GK rank bound
+        else:  # histogram over the cap, or a broken GK rank bound
             kth[k] = _kth_smallest_cents(cdf, "c", k, glo, ghi)
     out = []
     for q in qs:
@@ -176,30 +190,3 @@ def exact_quantiles_cents(df: DataFrame, value_col: str, qs) -> list[float]:
         else:
             out.append((v_lo + frac * (kth[k_lo + 1] - v_lo)) / 100.0)
     return out
-
-
-def exact_quantile_cents(df: DataFrame, value_col: str, q: float) -> float:
-    """Exact linear-interpolated quantile of a 2-decimal money column,
-    computed with constant executor memory (iterative counting selection).
-
-    Equals ``F.percentile(value_col, q)`` bit-for-bit on 2-decimal data
-    (both interpolate between the same two integer-cent order statistics).
-    """
-    cents = (F.round(F.col(value_col) * 100)).cast("long")
-    cdf = df.select(cents.alias("c"))
-    stats = cdf.agg(
-        F.count("*").alias("n"), F.min("c").alias("lo"), F.max("c").alias("hi")
-    ).collect()[0]
-    n, lo, hi = stats["n"], stats["lo"], stats["hi"]
-    if n == 0:
-        return math.nan
-    # continuous-quantile rank: h = (n-1)q + 1 (1-based), interpolate
-    h = (n - 1) * q + 1
-    k_lo = int(math.floor(h))
-    frac = h - k_lo
-    v_lo = _kth_smallest_cents(cdf, "c", k_lo, lo, hi)
-    if frac == 0.0 or k_lo >= n:
-        return v_lo / 100.0
-    v_hi = _kth_smallest_cents(cdf, "c", k_lo + 1, v_lo, hi)
-    # interpolate exactly as percentile/quantile_cont: lo + frac*(hi-lo)
-    return (v_lo + frac * (v_hi - v_lo)) / 100.0

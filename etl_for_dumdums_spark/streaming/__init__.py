@@ -253,8 +253,9 @@ def session_event_stream(
     query_name: str = "events_sessions",
 ) -> StreamingQuery:
     """Native session windows over a parquet-backed stream — the streaming
-    side of the catalog's ``events_session_native``: sessions extend while
-    the next event arrives within ``gap`` of the previous one; the watermark
+    side of the catalog's gap-rule ``win_sessionize`` (which compares whole
+    seconds): sessions extend while the next event arrives within ``gap`` of
+    the previous one; the watermark
     closes sessions and evicts their state once no on-time event can still
     merge into them (bounded state on an unbounded stream — without it the
     open-session map grows with the user population forever).

@@ -293,68 +293,6 @@ def test_winsorized_histogram_matches_quantile_cont_form(sf_dir):
     assert got == want
 
 
-# ---------------------------------------------------------------------------
-# 3f. events_sequence_pattern char-string form == '>'-joined word form
-# ---------------------------------------------------------------------------
-_SEQ_WORD_FORM = """
-    WITH firstk AS (
-      SELECT user_id, ts, event_id, event_type
-      FROM events
-      QUALIFY row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id)
-              <= 200),
-    seqs AS (
-      SELECT user_id,
-             array_to_string(list(event_type ORDER BY ts, event_id), '>') AS seq
-      FROM firstk GROUP BY user_id),
-    per AS (
-      SELECT CAST(len(regexp_extract_all(seq, 'click>purchase')) AS BIGINT) AS c1,
-             CAST(len(regexp_extract_all(seq, 'error>error')) AS BIGINT) AS c2,
-             CASE WHEN regexp_matches(seq, 'signup.*purchase') THEN 1 ELSE 0 END AS f3,
-             CASE WHEN regexp_matches(seq, 'view.*click.*purchase') THEN 1 ELSE 0 END AS f4
-      FROM seqs),
-    agg AS (
-      SELECT CAST(count(*) AS BIGINT) AS n_users,
-             CAST(count_if(c1 > 0) AS BIGINT) AS u1, CAST(sum(c1) AS BIGINT) AS o1,
-             CAST(count_if(c2 > 0) AS BIGINT) AS u2, CAST(sum(c2) AS BIGINT) AS o2,
-             CAST(sum(f3) AS BIGINT) AS u3, CAST(sum(f4) AS BIGINT) AS u4
-      FROM per)
-    SELECT 'adj_click_purchase' AS pattern, u1 AS n_users_matched,
-           CAST(u1 * 1000000 // n_users AS BIGINT) AS share_ppm,
-           o1 AS n_occurrences FROM agg
-    UNION ALL SELECT 'adj_error_error', u2,
-           CAST(u2 * 1000000 // n_users AS BIGINT), o2 FROM agg
-    UNION ALL SELECT 'subseq_signup_purchase', u3,
-           CAST(u3 * 1000000 // n_users AS BIGINT), CAST(NULL AS BIGINT) FROM agg
-    UNION ALL SELECT 'subseq_view_click_purchase', u4,
-           CAST(u4 * 1000000 // n_users AS BIGINT), CAST(NULL AS BIGINT) FROM agg
-    ORDER BY pattern
-"""
-
-
-@pytest.mark.parametrize("sf_dir", SF_DIRS)
-def test_sequence_pattern_char_form_matches_word_form(sf_dir):
-    con = _con(sf_dir, tables=("events",))
-    got = con.execute(EXTRA_ORACLE["events_sequence_pattern"]).fetchall()
-    want = con.execute(_SEQ_WORD_FORM).fetchall()
-    assert got == want
-
-
-def test_sequence_char_form_equivalence_adversarial():
-    """The self-adjacent 'ee' pattern is the subtle one: non-overlapping
-    regex counts floor(run/2) in BOTH forms. Pin on synthetic runs."""
-    con = duckdb.connect()
-    for events, run in [(["error"] * k, k) for k in range(1, 8)]:
-        word = ">".join(events)
-        chars = "e" * run
-        w = con.execute(
-            f"SELECT len(regexp_extract_all('{word}', 'error>error'))"
-        ).fetchone()[0]
-        c = con.execute(
-            f"SELECT len(regexp_extract_all('{chars}', 'ee'))"
-        ).fetchone()[0]
-        assert w == c == run // 2, (run, w, c)
-
-
 def test_period2_collapse_identity_bruteforce():
     """The ' a ' / ' y ' counting identity: collapse every 2-gram 'ab' to a
     marker; matches = sum over marker runs (optionally capturing a trailing

@@ -8,14 +8,11 @@
    and must survive the lock vanishing between glob and read.
 3. _cnt_aba_sql fails loudly on a non-period-2 trigram ('aaa'), whose
    collapse identity would silently undercount.
-4. The sequence-pattern oracle's char-form patterns are DERIVED from the
-   same _SEQ_ADJ/_SEQ_SUB constants the Spark side scans.
 """
 
 import os
 import subprocess
 import sys
-import tempfile
 from pathlib import Path
 
 import pytest
@@ -123,23 +120,6 @@ def test_cnt_aba_sql_rejects_period1_pattern():
         _cnt_aba_sql("aaa")
     # the legitimate shape still builds
     assert "chr(1)" in _cnt_aba_sql(" a ")
-
-
-def test_sequence_char_patterns_derive_from_constants():
-    from etl_for_dumdums_spark.catalog.behavior import (
-        _SEQ_ADJ,
-        _SEQ_SUB,
-        _seq_char_pattern,
-        _sequence_pattern_sql,
-    )
-
-    assert _seq_char_pattern(_SEQ_ADJ[0][1]) == "cp"
-    assert _seq_char_pattern(_SEQ_ADJ[1][1]) == "ee"
-    assert _seq_char_pattern(_SEQ_SUB[0][1]) == "s.*p"
-    assert _seq_char_pattern(_SEQ_SUB[1][1]) == "v.*c.*p"
-    sql = _sequence_pattern_sql()
-    for pat in ("'cp'", "'ee'", "'s.*p'", "'v.*c.*p'"):
-        assert pat in sql
 
 
 _RANGE_JOIN_FORM = """

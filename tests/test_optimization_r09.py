@@ -540,58 +540,6 @@ def test_ks_mannwhitney_one_pass_matches_two_pass(spark, sf):
 
 
 # ---------------------------------------------------------------------------
-# ops_json_schema_infer: the single from_json map parse must reproduce the
-# old json_object_keys + per-key get_json_object census exactly.
-# ---------------------------------------------------------------------------
-@pytest.mark.parametrize("sf", ["sf0.001", "sf0.01"])
-def test_json_schema_infer_map_parse_matches_per_key_parse(spark, sf):
-    d = f"/root/testdata/{sf}"
-    t = Tables(spark, d)
-    ord_json = F.expr(
-        """concat('{', '"okey": ', o_orderkey, ', "cents": ',
-                  CAST(round(o_totalprice * 100) AS BIGINT),
-                  ', "prio": "', o_orderpriority, '"',
-                  CASE WHEN o_totalprice > 150000 THEN ', "big": true' ELSE '' END,
-                  '}')"""
-    )
-    js = t.events.select(
-        F.lit("events.props").alias("source"), F.col("props").alias("j")
-    ).unionByName(
-        t.orders.select(F.lit("orders.synth").alias("source"), ord_json.alias("j"))
-    )
-    old_vals = (
-        js.select("source", "j", F.explode(F.json_object_keys("j")).alias("key"))
-        .select("source", "key", F.expr("get_json_object(j, concat('$.', key))").alias("v"))
-    )
-    new_vals = js.select(
-        "source",
-        F.explode(F.expr("from_json(j, 'map<string,string>')")).alias("key", "v"),
-    )
-    old_rows = sorted((r["source"], r["key"], r["v"]) for r in old_vals.collect())
-    new_rows = sorted((r["source"], r["key"], r["v"]) for r in new_vals.collect())
-    assert old_rows == new_rows
-
-
-def test_json_schema_infer_map_parse_lexical_forms(spark):
-    """from_json map<string,string> must preserve the lexical forms
-    get_json_object produced: ints, floats with trailing zeros, booleans,
-    bare strings, and JSON null -> SQL NULL."""
-    docs = [
-        ('{"a": 1, "b": 2.50, "c": true, "d": "x y", "e": null}',),
-        ('{"big": 12345678901234, "neg": -0.5, "f": false}',),
-    ]
-    df = spark.createDataFrame(docs, "j string")
-    old = (
-        df.select("j", F.explode(F.json_object_keys("j")).alias("key"))
-        .select("key", F.expr("get_json_object(j, concat('$.', key))").alias("v"))
-    )
-    new = df.select(
-        F.explode(F.expr("from_json(j, 'map<string,string>')")).alias("key", "v")
-    )
-    assert sorted(map(tuple, old.collect())) == sorted(map(tuple, new.collect()))
-
-
-# ---------------------------------------------------------------------------
 # profile_table: the no-Expand shape (stats pass + per-column 2-stage
 # distinct branches) must reproduce the original packed single aggregate.
 # ---------------------------------------------------------------------------
@@ -701,24 +649,9 @@ def test_quantiles_bracketed_bisection_tiny_and_skewed(spark):
     the reference Python reimplementation of that formula over the sorted
     cents. Covers n smaller than the rank slack (brackets clamp to the
     global range), all-equal values, and extreme skew."""
-    import math as _math
-
     from etl_for_dumdums_spark.operators.quantile import exact_quantiles_cents
 
-    def reference(vals, qs):
-        cs = sorted(round(v * 100) for v in vals)
-        n = len(cs)
-        out = []
-        for q in qs:
-            h = (n - 1) * q + 1
-            k_lo = int(_math.floor(h))
-            frac = h - k_lo
-            v_lo = cs[k_lo - 1]
-            if frac == 0.0 or k_lo >= n:
-                out.append(v_lo / 100.0)
-            else:
-                out.append((v_lo + frac * (cs[k_lo] - v_lo)) / 100.0)
-        return out
+    from .test_quantile_multi import sorted_cents_quantiles as reference
 
     cases = [
         [1.00],

@@ -4,11 +4,7 @@
   * text_inverted_index's posting heads sort inside (term, salt)-partitioned
     windows (sort-spill), never an unpartitioned window;
   * customer_rfm_segments carries no global-sort window — ntile comes from
-    range partitioning (the RangePartitioning exchange IS the plan);
-  * events_attribution_linear's purchase-view pair join is a user-keyed
-    equi-join (SortMergeJoin/ShuffledHashJoin), never a cartesian product;
-  * feat_hash_vectorizer reaches the parquet scan with only the text column
-    (column pruning through the explode).
+    range partitioning (the RangePartitioning exchange IS the plan).
 """
 
 from __future__ import annotations
@@ -53,22 +49,3 @@ def test_rfm_uses_range_partitioning_not_global_sort_window(spark):
     # any window must be _pid-partitioned (local row_number), none global
     for m in re.finditer(r"Window \[[^\n]*", plan):
         assert "_pid" in m.group(0), m.group(0)
-
-
-def test_attribution_join_is_user_keyed_not_cartesian(spark):
-    from etl_for_dumdums_spark.catalog.features import events_attribution_linear
-
-    plan = _physical(events_attribution_linear(spark, SF_SMOKE))
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
-    # equi-join on user_id: merge/hash/broadcast-hash are all keyed joins
-    # (the tiny test SF broadcasts the view side; the key is what matters)
-    assert any(j in plan for j in ("SortMergeJoin", "ShuffledHashJoin", "BroadcastHashJoin"))
-
-
-def test_hash_vectorizer_prunes_to_text_column(spark):
-    from etl_for_dumdums_spark.catalog.features import feat_hash_vectorizer as fh
-
-    plan = _physical(fh(spark, SF_SMOKE))
-    m = re.search(r"ReadSchema: struct<([^>]*)>", plan)
-    assert m and m.group(1).split(":")[0] == "text", m.group(0) if m else plan[:200]

@@ -4,9 +4,6 @@
     the ranged-prefix helper: every data-sized Window partitions by _pid
     (local row_number / local running sum); the total order comes from a
     RangePartitioning exchange, never a single-task global sort window;
-  * feat_point_in_time's RANGE frame window partitions by user_id;
-  * events_sequence_pattern is one user_id hash aggregate — no WindowExec,
-    no cartesian product;
   * embed_kmeans_lloyd assigns via hash aggregation (min_by), not windows.
 """
 
@@ -48,36 +45,6 @@ def test_weighted_median_windows_are_range_partition_local(spark):
     plan = _physical(agg_weighted_median(spark, SF_SMOKE))
     assert "rangepartitioning" in plan.lower()
     _windows_are_pid_partitioned(plan)
-
-
-def test_point_in_time_window_is_user_partitioned(spark):
-    from etl_for_dumdums_spark.catalog.features import feat_point_in_time
-
-    plan = _physical(feat_point_in_time(spark, SF_SMOKE))
-    wins = re.findall(r"Window \[[^\n]*", plan)
-    assert wins, "expected the RANGE-frame feature window"
-    for w in wins:
-        assert "user_id" in w, w
-    assert "CartesianProduct" not in plan
-
-
-def test_sequence_pattern_caps_state_before_collect_list(spark):
-    """r3 verdict finding #1: the _SEQ_CAP must be applied BEFORE the
-    collect_list aggregation (row_number pre-filter, spillable sort +
-    counter), so per-user aggregation-buffer state is O(_SEQ_CAP) — the old
-    slice-after-collect_list shape materialized each user's full event list
-    in the agg buffer."""
-    from etl_for_dumdums_spark.catalog.behavior import events_sequence_pattern
-
-    plan = _physical(events_sequence_pattern(spark, SF_SMOKE))
-    wins = re.findall(r"Window \[[^\n]*", plan)
-    assert wins, "expected the row_number pre-filter window"
-    for w in wins:
-        assert "user_id" in w, w
-    # the cap filter must sit between the window and the collect_list agg
-    assert "row_number" in plan
-    assert "collect_list" in plan
-    assert "CartesianProduct" not in plan
 
 
 def test_kmeans_assignment_is_aggregate_not_window(spark):

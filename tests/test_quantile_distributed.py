@@ -1,5 +1,5 @@
-"""Distributed exact quantile (iterative counting selection) must equal
-Spark's buffer-based exact percentile on 2-decimal money data."""
+"""Distributed exact quantiles (counting selection) must equal Spark's
+buffer-based exact percentile on 2-decimal money data."""
 
 from __future__ import annotations
 
@@ -7,7 +7,7 @@ import math
 
 from pyspark.sql import functions as F
 
-from etl_for_dumdums_spark.operators.quantile import exact_quantile_cents
+from etl_for_dumdums_spark.operators.quantile import exact_quantiles_cents
 
 from .conftest import SF_SMOKE
 
@@ -16,9 +16,9 @@ def test_exact_quantile_matches_percentile(spark):
     from etl_for_dumdums_spark.catalog import Tables
 
     li = Tables(spark, SF_SMOKE).lineitem
-    for q in (0.05, 0.5, 0.95, 0.99):
+    qs = (0.05, 0.5, 0.95, 0.99)
+    for q, got in zip(qs, exact_quantiles_cents(li, "l_extendedprice", qs)):
         want = li.agg(F.percentile("l_extendedprice", F.lit(q))).collect()[0][0]
-        got = exact_quantile_cents(li, "l_extendedprice", q)
         assert math.isclose(got, want, rel_tol=0, abs_tol=1e-9), (q, got, want)
 
 
@@ -27,5 +27,6 @@ def test_exact_quantile_edge_quantiles(spark):
 
     li = Tables(spark, SF_SMOKE).lineitem
     mn, mx = li.agg(F.min("l_extendedprice"), F.max("l_extendedprice")).collect()[0]
-    assert exact_quantile_cents(li, "l_extendedprice", 0.0) == mn
-    assert exact_quantile_cents(li, "l_extendedprice", 1.0) == mx
+    lo, hi = exact_quantiles_cents(li, "l_extendedprice", (0.0, 1.0))
+    assert lo == mn
+    assert hi == mx

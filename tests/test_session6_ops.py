@@ -2,9 +2,8 @@
 
 Oracle rows for the SQL-expressible ones are the primary gate
 (tools/check_oracle.py); these tests pin the invariants the oracle can't
-see: the WAU explode-vs-range-join equivalence, the integer z-score
-identity against a float reference, compression values against in-process
-zlib, and ANN-recall boundedness.
+see: the integer z-score identity against a float reference, compression
+values against in-process zlib, and ANN-recall boundedness.
 """
 
 from __future__ import annotations
@@ -14,59 +13,6 @@ import zlib
 import pytest
 
 from tests.conftest import SF_SMOKE
-
-
-def test_rolling_wau_matches_range_join(spark):
-    """The bounded ×7 contribution explode must equal the naive range join."""
-    from pyspark.sql import functions as F
-
-    from etl_for_dumdums_spark.catalog.behavior import events_rolling_wau
-
-    got = events_rolling_wau(spark, SF_SMOKE).collect()
-    ud = (
-        spark.read.parquet(f"{SF_SMOKE}/events.parquet")
-        .select(F.col("ts").cast("date").alias("day"), "user_id")
-        .distinct()
-    )
-    days = ud.select("day").distinct()
-    naive = (
-        days.alias("d")
-        .join(
-            ud.alias("u"),
-            (F.col("u.day") >= F.date_sub(F.col("d.day"), 6))
-            & (F.col("u.day") <= F.col("d.day")),
-        )
-        .groupBy("d.day")
-        .agg(F.countDistinct("user_id").alias("wau"))
-        .collect()
-    )
-    naive_map = {r["day"]: r["wau"] for r in naive}
-    assert len(got) == len(naive_map) > 0
-    for row in got:
-        assert row["wau"] == naive_map[row["day"]]
-        assert 0 < row["dau"] <= row["wau"]
-
-
-def test_daily_user_accounting_invariants(spark):
-    from etl_for_dumdums_spark.catalog.behavior import events_daily_user_accounting
-
-    rows = events_daily_user_accounting(spark, SF_SMOKE).collect()
-    assert rows, "no days"
-    running = 0
-    for r in rows:
-        assert r["active_users"] == r["new_users"] + r["returning_users"]
-        running += r["new_users"]
-        assert r["cumulative_users"] == running
-    # day 1: everyone is new
-    assert rows[0]["returning_users"] == 0
-    # the cumulative curve ends at the total distinct-user count
-    n_users = (
-        spark.read.parquet(f"{SF_SMOKE}/events.parquet")
-        .select("user_id")
-        .distinct()
-        .count()
-    )
-    assert rows[-1]["cumulative_users"] == n_users
 
 
 def test_anomaly_zscore_integer_flag_matches_float_z(spark):

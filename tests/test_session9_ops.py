@@ -132,128 +132,6 @@ def test_ranged_prefix_matches_serial_window(spark):
     assert totals["_n"] == 50 and totals["x"] == sum(r[2] for r in rows)
 
 
-def test_sequence_pattern_matches_serial(spark):
-    import re
-
-    from etl_for_dumdums_spark.catalog.behavior import (
-        _SEQ_ADJ,
-        _SEQ_CAP,
-        _SEQ_SUB,
-        events_sequence_pattern,
-    )
-
-    evs = duckdb.sql(
-        f"SELECT user_id, ts, event_id, event_type FROM '{SF_SMOKE}/events.parquet' "
-        f"ORDER BY user_id, ts, event_id"
-    ).fetchall()
-    seqs = {}
-    for uid, _, _, et in evs:
-        seqs.setdefault(uid, []).append(et)
-    strs = {u: ">".join(v[:_SEQ_CAP]) for u, v in seqs.items()}
-    n_users = len(strs)
-    expected = {}
-    for name, pat in _SEQ_ADJ:
-        occ = sum(len(re.findall(pat, s)) for s in strs.values())
-        users = sum(1 for s in strs.values() if re.search(pat, s))
-        expected[name] = (users, users * 1_000_000 // n_users, occ)
-    for name, pat in _SEQ_SUB:
-        users = sum(1 for s in strs.values() if re.search(pat, s))
-        expected[name] = (users, users * 1_000_000 // n_users, None)
-
-    rows = {r["pattern"]: r for r in events_sequence_pattern(spark, SF_SMOKE).collect()}
-    assert set(rows) == set(expected)
-    for name, (users, ppm, occ) in expected.items():
-        r = rows[name]
-        assert (r["n_users_matched"], r["share_ppm"], r["n_occurrences"]) == (
-            users,
-            ppm,
-            occ,
-        ), name
-    # non-vacuous: at least one adjacency pattern must actually occur
-    assert any(v[2] for v in expected.values() if v[2] is not None)
-
-
-def test_session_native_matches_serial_gap_rule(spark):
-    from etl_for_dumdums_spark.catalog.behavior import (
-        _SESS_GAP_US,
-        events_session_native,
-    )
-
-    evs = duckdb.sql(
-        f"SELECT user_id, epoch_us(ts) FROM '{SF_SMOKE}/events.parquet' "
-        f"ORDER BY user_id, ts, event_id"
-    ).fetchall()
-    per_user = {}
-    for uid, us in evs:
-        per_user.setdefault(uid, []).append(us)
-    sessions = []  # (n_events, dur_us)
-    for uid, uss in per_user.items():
-        cur = [uss[0]]
-        for us in uss[1:]:
-            if us - cur[-1] >= _SESS_GAP_US:
-                sessions.append((len(cur), cur[-1] - cur[0]))
-                cur = [us]
-            else:
-                cur.append(us)
-        sessions.append((len(cur), cur[-1] - cur[0]))
-    n_sess = len(sessions)
-    row = events_session_native(spark, SF_SMOKE).collect()[0]
-    assert row["n_sessions"] == n_sess
-    assert row["n_users"] == len(per_user)
-    assert row["n_single_event"] == sum(1 for n, _ in sessions if n == 1)
-    assert row["max_events"] == max(n for n, _ in sessions)
-    assert row["avg_events"] == round(sum(n for n, _ in sessions) * 1.0 / n_sess, 4)
-    assert row["avg_duration_sec"] == round(
-        sum(d for _, d in sessions) / (n_sess * 1000000.0), 4
-    )
-    assert row["max_duration_sec"] == round(
-        max(d for _, d in sessions) / 1000000.0, 4
-    )
-    # non-vacuous: multi-event sessions must exist
-    assert row["max_events"] > 1
-
-
-def test_point_in_time_features_leakage_free(spark):
-    """Prior-7d view counts must exclude the label instant and anything
-    after it (strict point-in-time rule), per the serial replay."""
-    from collections import defaultdict
-
-    from etl_for_dumdums_spark.catalog.features import (
-        _PIT_7D_US,
-        feat_point_in_time,
-    )
-
-    evs = duckdb.sql(
-        f"SELECT user_id, event_type, epoch_us(ts), CAST(round(value*100) AS BIGINT) "
-        f"FROM '{SF_SMOKE}/events.parquet' ORDER BY user_id, 3"
-    ).fetchall()
-    per_user = defaultdict(list)
-    for uid, et, us, cents in evs:
-        per_user[uid].append((us, et, cents))
-    buckets = defaultdict(lambda: [0, set(), 0])
-    for uid, rows in per_user.items():
-        views = [us for us, et, _ in rows if et == "view"]
-        for us, et, cents in rows:
-            if et != "purchase":
-                continue
-            pv = sum(1 for v in views if us - _PIT_7D_US <= v <= us - 1)
-            b = "3+" if pv >= 3 else str(pv)
-            buckets[b][0] += 1
-            buckets[b][1].add(uid)
-            buckets[b][2] += cents
-    rows = {r["views_bucket"]: r for r in feat_point_in_time(spark, SF_SMOKE).collect()}
-    assert set(rows) == set(buckets)
-    for b, (n, users, total) in buckets.items():
-        r = rows[b]
-        assert (r["n_purchases"], r["n_users"], r["total_value_cents"]) == (
-            n,
-            len(users),
-            total,
-        )
-        assert r["avg_value_cents"] == total // n
-    assert len(buckets) > 1  # non-vacuous: multiple engagement buckets
-
-
 def test_weighted_median_matches_serial(spark):
     from etl_for_dumdums_spark.catalog.stats import agg_weighted_median
 
@@ -404,39 +282,6 @@ def test_decayed_popularity_matches_serial(spark):
         assert r["avg_weight_millionths"] == dec // n
     # decay must actually bite: avg weight strictly below the undecayed 1e6
     assert all(r["avg_weight_millionths"] < 1_000_000 for r in rows.values())
-
-
-def test_activity_bitmap_matches_serial(spark):
-    from datetime import date
-
-    from etl_for_dumdums_spark.catalog.behavior import (
-        _BITMAP_ANCHOR,
-        events_activity_bitmap,
-    )
-
-    anchor = date.fromisoformat(_BITMAP_ANCHOR)
-    evs = duckdb.sql(
-        f"SELECT DISTINCT user_id, CAST(ts AS DATE) FROM '{SF_SMOKE}/events.parquet'"
-    ).fetchall()
-    weekly = {}
-    for uid, d in evs:
-        di = (d - anchor).days
-        if di < 0:
-            continue
-        key = (uid, di // 7)
-        weekly[key] = weekly.get(key, 0) | (1 << (di % 7))
-    hist = {}
-    for bm in weekly.values():
-        k = bin(bm).count("1")
-        n, pats, mx = hist.get(k, (0, set(), 0))
-        pats = pats | {bm}
-        hist[k] = (n + 1, pats, max(mx, bm))
-    rows = {r["days_active"]: r for r in events_activity_bitmap(spark, SF_SMOKE).collect()}
-    assert set(rows) == set(hist)
-    for k, (n, pats, mx) in hist.items():
-        r = rows[k]
-        assert (r["n_user_weeks"], r["n_patterns"], r["max_pattern"]) == (n, len(pats), mx)
-    assert max(hist) >= 3  # non-vacuous: some multi-day-active weeks exist
 
 
 def test_multiprobe_recall_dominates_single_probe(spark):

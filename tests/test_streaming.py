@@ -261,7 +261,8 @@ def test_merge_stream_sink_exactly_once_state(spark, tmp_path):
 
 def test_session_event_stream_matches_batch(spark, tmp_path):
     """Streaming session_window must produce the identical per-session frame
-    as the batch gap rule events_session_native aggregates over.
+    as the batch session_window over the same events (the gap rule the
+    catalog's win_sessionize states with lag + running sum).
 
     The sink is APPEND mode (bounded state — complete mode would retain
     every session forever), so sessions only emit once the watermark passes

@@ -230,8 +230,8 @@ def main():
         """Close + rebuild the oracle connection, retrying with backoff:
         under transient box-wide memory pressure even duckdb.connect()/view
         creation can OOM, and an escaped exception there used to abort the
-        whole sweep (r5: events_sequence_pattern at 100x under a concurrent
-        pytest run killed the remaining ~120 queries)."""
+        whole sweep (r5: one 100x query under a concurrent pytest run
+        killed the remaining ~120 queries)."""
         if old is not None:
             try:
                 old.close()

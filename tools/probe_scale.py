@@ -22,8 +22,8 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 from etl_for_dumdums_spark.catalog import EXTRA_QUERIES, QUERIES, load_all  # noqa: E402
 from etl_for_dumdums_spark.session import get_spark  # noqa: E402
 
-# the r4/r5 1000x probe set: the 16 headline queries plus the heaviest
-# order-stat / behavioral consumers
+# the r4/r5 1000x probe set: 12 of the 16 headline queries plus the three
+# heaviest order-stat consumers
 DEFAULT_SET = [
     "agg_pricing_summary",
     "filter_multi_dim",
@@ -40,8 +40,6 @@ DEFAULT_SET = [
     "stats_ks_mannwhitney",
     "agg_gini_concentration",
     "agg_weighted_median",
-    "events_session_native",
-    "events_sequence_pattern",
 ]
 
 
