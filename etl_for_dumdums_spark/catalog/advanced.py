@@ -11,6 +11,7 @@ from __future__ import annotations
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from ..session import local_frame
 from . import ROUND_DP as DP
 from . import Tables, register
 from .sketches import _h_spark, _h_sql
@@ -384,12 +385,11 @@ def join_asof_nearest(spark, sf_dir):
 # NTILE decile profiling WITHOUT a global sort window: rank customers into
 # 10 account-balance deciles and profile each with exact integer-cent means.
 # A naive ntile() OVER (ORDER BY ...) funnels the whole table through ONE
-# task — the single-partition-window scale killer. Instead: repartitionByRange
-# on the (acctbal, custkey) total order, row_number within each range
-# partition, add the collected per-partition offsets (32 small ints — the
-# documented tiny-by-construction collect), and apply SQL ntile's exact
-# floor-division fill rule in closed form from the global rank. Result is
-# bit-identical to the oracle's ntile() at any scale, with no global sort.
+# task — the single-partition-window scale killer. Instead the global rank
+# comes from operators/ranked.ranged_prefix on the (acctbal, custkey) total
+# order, and SQL ntile's exact floor-division fill rule is applied in closed
+# form from it. Result is bit-identical to the oracle's ntile() at any
+# scale, with no global sort.
 # ---------------------------------------------------------------------------
 @register(
     "win_ntile_deciles",
@@ -410,45 +410,27 @@ def join_asof_nearest(spark, sf_dir):
     """,
 )
 def win_ntile_deciles(spark, sf_dir):
+    from ..operators.ranked import ranged_prefix
+
     t = Tables(spark, sf_dir)
-    nparts = 32
     base_df = t.customer.select(
         "c_custkey",
         "c_acctbal",
         "c_mktsegment",
         F.round(F.col("c_acctbal") * 100).cast("long").alias("cents"),
     )
-    ranged = (
-        base_df.repartitionByRange(nparts, "c_acctbal", "c_custkey")
-        .withColumn("pid", F.spark_partition_id())
-        .cache()
-    )
-    counts = {
-        r["pid"]: r["n"]
-        for r in ranged.groupBy("pid").agg(F.count("*").alias("n")).collect()
-    }
-    total = sum(counts.values())
-    offsets, acc = [], 0
-    for pid in sorted(counts):
-        offsets.append((pid, acc))
-        acc += counts[pid]
-    off_df = spark.createDataFrame(offsets, "pid int, off long")
-    wloc = W.partitionBy("pid").orderBy("c_acctbal", "c_custkey")
-    base_sz, rem = total // 10, total % 10
+    pref, totals = ranged_prefix(base_df, ["c_acctbal", "c_custkey"], [])
+    # ntile(10) fill rule: the first `rem` tiles hold base_sz + 1 rows
+    base_sz, rem = totals["_n"] // 10, totals["_n"] % 10
     pivot = rem * (base_sz + 1)
     if base_sz == 0:
-        decile_expr = "CAST(r AS INT)"
+        decile_expr = "CAST(_r AS INT)"
     else:
         decile_expr = (
-            f"CAST(CASE WHEN r <= {pivot} THEN (r - 1) DIV {base_sz + 1} + 1 "
-            f"ELSE {rem} + (r - 1 - {pivot}) DIV {base_sz} + 1 END AS INT)"
+            f"CAST(CASE WHEN _r <= {pivot} THEN (_r - 1) DIV {base_sz + 1} + 1 "
+            f"ELSE {rem} + (_r - 1 - {pivot}) DIV {base_sz} + 1 END AS INT)"
         )
-    ranked = (
-        ranged.withColumn("lr", F.row_number().over(wloc))
-        .join(F.broadcast(off_df), "pid")
-        .withColumn("r", F.col("off") + F.col("lr"))
-        .withColumn("decile", F.expr(decile_expr))
-    )
+    ranked = pref.withColumn("decile", F.expr(decile_expr))
     return (
         ranked.groupBy("decile")
         .agg(
@@ -505,7 +487,7 @@ def agg_quantile_counting(spark, sf_dir):
     li = t.lineitem.select("l_extendedprice")
     vals = exact_quantiles_cents(li, "l_extendedprice", _QUANTILE_QS)
     rows = [(q, round(v, DP)) for q, v in zip(_QUANTILE_QS, vals)]
-    return spark.createDataFrame(rows, "q double, quantile_price double").orderBy("q")
+    return local_frame(spark, rows, "q double, quantile_price double").orderBy("q")
 
 
 # ---------------------------------------------------------------------------

@@ -308,13 +308,13 @@ def _orderstat_percentiles(frame, col, specs):
     cents = F.round(F.col(col) * 100).cast("long")
     hist = frame.groupBy(cents.alias("c")).agg(F.count("*").alias("f"))
     # r9 follow-up: the cumulative runs range-partitioned (per-partition
-    # sums + broadcast offsets) instead of a single-partition window —
+    # sums + literal offsets) instead of a single-partition window —
     # domain-bounded is still one task at the ~10M-value cents bound.
     # ranged_prefix's exact grand total also IS n, so the old second
     # histogram evaluation (meta) collapses to Python-literal positions:
     # double(n-1) * p / floor / ceil are the identical IEEE ops the
     # in-plan expressions performed (Catalyst constant-folded them too).
-    pref, _tot = ranged_prefix(frame.sparkSession, hist, ["c"], ["f"])
+    pref, _tot = ranged_prefix(hist, ["c"], ["f"])
     cum = pref.select("c", "f", F.col("cum_f").alias("cum"))
     n = _tot["f"]
     tags = [tag for _, tag in specs]

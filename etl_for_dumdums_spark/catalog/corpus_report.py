@@ -144,10 +144,10 @@ def corpus_clean_report(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------------
-# Shard packing under the oracle gate: operators/packing.py's
+# Shard packing under the oracle gate: operators/corpus.py's
 # assign_token_shards replaces the single-task `sum() OVER (ORDER BY ...)`
-# with a range-repartition + per-partition offsets cumsum, claiming bit
-# equality with the serial rule. The DuckDB oracle STATES the serial rule
+# with operators/ranked.ranged_prefix's range-partitioned cumsum, claiming
+# bit equality with the serial rule. The DuckDB oracle STATES the serial rule
 # (one global ordered window), so a pass proves the distributed cumsum
 # exact — per shard, over every document. Integer token counts only.
 # ---------------------------------------------------------------------------
@@ -176,7 +176,7 @@ _PACK_BUDGET = 2_000  # tokens per shard at oracle SF (many shards → strong ch
     """,
 )
 def pack_token_shards(spark, sf_dir):
-    from ..operators.packing import assign_token_shards
+    from ..operators.corpus import assign_token_shards
 
     t = Tables(spark, sf_dir)
     toks = t.documents.select(

@@ -30,6 +30,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from ..session import local_frame
 from . import ROUND_DP as DP
 from . import Tables, register
 
@@ -795,7 +796,7 @@ def _cc_groups(documents):
     finally:
         for p in pins:
             p.unpersist(blocking=True)
-    return documents.sparkSession.createDataFrame(rows, stats.schema)
+    return local_frame(documents.sparkSession, rows, stats.schema)
 
 
 # ---------------------------------------------------------------------------

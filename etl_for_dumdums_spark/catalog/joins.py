@@ -13,6 +13,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from ..session import local_frame
 from . import ROUND_DP as DP
 from . import Tables, register
 
@@ -278,9 +279,10 @@ def join_cross_pattern(spark, sf_dir):
 )
 def join_inline_lookup(spark, sf_dir):
     t = Tables(spark, sf_dir)
-    meta = spark.createDataFrame(
+    meta = local_frame(
+        spark,
         [(0, "south", 1.0), (1, "north", 2.0), (2, "north", 1.5), (3, "north", 1.2), (4, "south", 0.8)],
-        ["r_regionkey", "hemisphere", "weight"],
+        "r_regionkey bigint, hemisphere string, weight double",
     )
     return (
         t.nation.join(F.broadcast(meta), t.nation.n_regionkey == meta.r_regionkey, "left")
@@ -851,7 +853,8 @@ def join_null_safe(spark, sf_dir):
         .otherwise(F.col("event_type"))
         .alias("k")
     )
-    lookup = spark.createDataFrame(
+    lookup = local_frame(
+        spark,
         [
             ("view", "engagement"),
             ("click", "engagement"),

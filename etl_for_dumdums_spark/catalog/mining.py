@@ -1,5 +1,5 @@
 """Corpus mining operators: span-level boilerplate dedup, sorted-neighborhood
-blocking, collocation mining, inverted-index build, and RFM segmentation.
+blocking, collocation mining, and inverted-index build.
 
 These close the remaining sub-document / blocking / retrieval gaps in the
 training-data suite:
@@ -21,13 +21,10 @@ training-data suite:
 * ``text_inverted_index`` — posting-list construction (term → df, cf, first-K
   doc ids) with a two-stage bounded min-K merge so no task ever buffers a hot
   term's full posting list.
-* ``customer_rfm_segments`` — recency/frequency/monetary quintile scoring,
-  reusing the range-partition + offset exact-ntile trick (no global sort
-  window) three times over the per-customer aggregate.
 
 Scale notes are on each operator. Reference repo analogs: the reference's
-dashboards segment users and mine top terms in pandas after SQL pulls
-(pages/*.py); here each is one declarative distributed plan.
+dashboards mine top terms in pandas after SQL pulls (pages/*.py); here each
+is one declarative distributed plan.
 """
 
 from __future__ import annotations
@@ -431,105 +428,4 @@ def text_inverted_index(spark, sf_dir):
     rn = F.row_number().over(W.orderBy(F.desc("cf"), "term")).cast("long")
     return top.withColumn("rn", rn).select("term", "df", "cf", "postings", "rn").orderBy(
         "rn"
-    )
-
-
-# ---------------------------------------------------------------------------
-# customer_rfm_segments: recency/frequency/monetary quintile segmentation of
-# customers from their orders — the classic CRM cut the reference's dashboards
-# do in pandas. Quintiles are SQL ntile(5) semantics, computed WITHOUT a
-# global sort window by the same range-partition + per-partition offsets +
-# closed-form fill rule as win_ntile_deciles (advanced.py) — applied three
-# times, once per metric. All monetary math is exact integer cents.
-# ---------------------------------------------------------------------------
-_RFM_CUTOFF = "1998-08-02"
-
-
-def _global_ntile(spark, df, n, order_cols, out_col):
-    """Exact SQL ntile(n) over ORDER BY order_cols with no global sort window:
-    repartitionByRange on the total order, local row_number, add collected
-    per-partition offsets (32 small ints — tiny by construction), then the
-    closed-form ntile fill rule. Bit-identical to ntile() at any scale."""
-    nparts = 32
-    ranged = (
-        df.repartitionByRange(nparts, *order_cols)
-        .withColumn("_pid", F.spark_partition_id())
-        .cache()
-    )
-    counts = {
-        r["_pid"]: r["n"]
-        for r in ranged.groupBy("_pid").agg(F.count("*").alias("n")).collect()
-    }
-    total = sum(counts.values())
-    offsets, acc = [], 0
-    for pid in sorted(counts):
-        offsets.append((pid, acc))
-        acc += counts[pid]
-    off_df = spark.createDataFrame(offsets, "_pid int, _off long")
-    wloc = W.partitionBy("_pid").orderBy(*order_cols)
-    base_sz, rem = total // n, total % n
-    pivot = rem * (base_sz + 1)
-    if base_sz == 0:
-        tile_expr = "CAST(_r AS INT)"
-    else:
-        tile_expr = (
-            f"CAST(CASE WHEN _r <= {pivot} THEN (_r - 1) DIV {base_sz + 1} + 1 "
-            f"ELSE {rem} + (_r - 1 - {pivot}) DIV {base_sz} + 1 END AS INT)"
-        )
-    out = (
-        ranged.withColumn("_lr", F.row_number().over(wloc))
-        .join(F.broadcast(off_df), "_pid")
-        .withColumn("_r", F.col("_off") + F.col("_lr"))
-        .withColumn(out_col, F.expr(tile_expr))
-        .drop("_pid", "_lr", "_off", "_r")
-    )
-    return out
-
-
-@register(
-    "customer_rfm_segments",
-    extra=True,
-    sql=f"""
-    WITH per_cust AS (
-      SELECT o_custkey,
-             date_diff('day', max(o_orderdate), DATE '{_RFM_CUTOFF}') AS recency_days,
-             count(*) AS n_orders,
-             CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS cents
-      FROM orders GROUP BY o_custkey),
-    scored AS (
-      SELECT *,
-             ntile(5) OVER (ORDER BY recency_days, o_custkey) AS r_score,
-             ntile(5) OVER (ORDER BY n_orders, o_custkey)     AS f_score,
-             ntile(5) OVER (ORDER BY cents, o_custkey)        AS m_score
-      FROM per_cust)
-    SELECT r_score, f_score, m_score,
-           count(*) AS n_customers,
-           round(sum(cents) / (count(*) * 100.0), {DP}) AS avg_monetary,
-           CAST(min(recency_days) AS BIGINT) AS min_recency,
-           CAST(max(recency_days) AS BIGINT) AS max_recency
-    FROM scored GROUP BY r_score, f_score, m_score
-    ORDER BY r_score, f_score, m_score
-    """,
-)
-def customer_rfm_segments(spark, sf_dir):
-    t = Tables(spark, sf_dir)
-    per_cust = t.orders.groupBy("o_custkey").agg(
-        F.datediff(F.lit(_RFM_CUTOFF).cast("date"), F.max("o_orderdate")).alias(
-            "recency_days"
-        ),
-        F.count("*").alias("n_orders"),
-        F.sum(F.round(F.col("o_totalprice") * 100).cast("long")).cast("long").alias("cents"),
-    )
-    scored = _global_ntile(spark, per_cust, 5, ["recency_days", "o_custkey"], "r_score")
-    scored = _global_ntile(spark, scored, 5, ["n_orders", "o_custkey"], "f_score")
-    scored = _global_ntile(spark, scored, 5, ["cents", "o_custkey"], "m_score")
-    return (
-        scored.groupBy("r_score", "f_score", "m_score")
-        .agg(
-            F.count("*").alias("n_customers"),
-            R(F.sum("cents") / (F.count("*") * 100.0)).alias("avg_monetary"),
-            F.min("recency_days").cast("long").alias("min_recency"),
-            F.max("recency_days").cast("long").alias("max_recency"),
-        )
-        .orderBy("r_score", "f_score", "m_score")
     )

@@ -27,6 +27,7 @@ from __future__ import annotations
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from ..session import local_frame
 from . import Tables, register
 from .sketches import _h_spark, _h_sql
 
@@ -71,9 +72,7 @@ def sample_stratified_hash(spark, sf_dir):
     """Deterministic stratified sample: membership is a pure function of
     doc_id, so re-runs and both engines select the identical rows."""
     t = Tables(spark, sf_dir)
-    rates = spark.createDataFrame(
-        list(_STRATA_RATES.items()), ["lang", "pct"]
-    )
+    rates = local_frame(spark, list(_STRATA_RATES.items()), "lang string, pct bigint")
     h = F.expr(_h_spark("concat('samp:', CAST(doc_id AS STRING))"))
     sampled = (
         t.documents.join(F.broadcast(rates), "lang", "left")
@@ -139,7 +138,7 @@ def mix_rebalance_langs(spark, sf_dir):
     """Training-mix rebalancer: exact integer budget math + deterministic
     hash-rank selection (see module docstring for the 100 TB execution)."""
     t = Tables(spark, sf_dir)
-    w = spark.createDataFrame(list(_MIX_WEIGHTS.items()), ["lang", "wt"])
+    w = local_frame(spark, list(_MIX_WEIGHTS.items()), "lang string, wt bigint")
     docs = t.documents.join(F.broadcast(w), "lang")
     counts = docs.groupBy("lang", "wt").agg(F.count("*").alias("n_before"))
     budget = counts.agg(

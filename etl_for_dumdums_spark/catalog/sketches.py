@@ -32,6 +32,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from ..session import local_frame
 from . import ROUND_DP as DP
 from . import Tables, register
 
@@ -426,7 +427,7 @@ def sketch_histogram_quantile(spark, sf_dir):
         "cum",
         F.sum("cnt").over(W.orderBy("bin").rowsBetween(W.unboundedPreceding, 0)),
     )
-    qs = spark.createDataFrame([(float(q),) for q in _HQ_QS], ["q"])
+    qs = local_frame(spark, [(float(q),) for q in _HQ_QS], "q double")
     sel = (
         qs.crossJoin(cum)
         .crossJoin(F.broadcast(b))
@@ -447,12 +448,12 @@ def sketch_histogram_quantile(spark, sf_dir):
     # lowerKey*(higher-pos) + higherKey*(pos-lower)), divided by 100 LAST
     # exactly like the original percentile("c", ...)/100.0. The cumulative
     # runs range-partitioned (operators/ranked.ranged_prefix: per-partition
-    # sums + broadcast offsets), not as a single-partition window — the
+    # sums + literal offsets), not as a single-partition window — the
     # histogram is cents-DOMAIN-bounded but that bound is ~10M distinct
     # values at full price range, one task too many at the 1000x replica.
     from ..operators.ranked import ranged_prefix
 
-    pref, _tot = ranged_prefix(spark, hist, ["c"], ["f"])
+    pref, _tot = ranged_prefix(hist, ["c"], ["f"])
     cumh = pref.select("c", "f", F.col("cum_f").alias("cum"))
     nm1 = (F.col("n") - 1).cast("double")
     meta = b.select(

@@ -616,7 +616,7 @@ def stats_ks_mannwhitney(spark, sf_dir):
         )
         .withColumn("cnt", (F.col("c1") + F.col("c2")).cast("long"))
     )
-    pref, totals = ranged_prefix(spark, v, ["cents"], ["c1", "c2", "cnt"])
+    pref, totals = ranged_prefix(v, ["cents"], ["c1", "c2", "cnt"])
     n1, n2 = totals["c1"], totals["c2"]
     # ONE aggregate pass: the KS max, the MWU sums, AND the argmax location
     # — a lexicographic-max struct over (dnum, -cents) picks min(cents)
@@ -714,7 +714,7 @@ def agg_gini_concentration(spark, sf_dir):
         .cast("long")
         .alias("cents")
     )
-    pref, totals = ranged_prefix(spark, rev, ["cents", "o_custkey"], ["cents"])
+    pref, totals = ranged_prefix(rev, ["cents", "o_custkey"], ["cents"])
     n, tt = totals["_n"], totals["cents"]
     thr10, thr1 = n - n // 10, n - n // 100
     out = pref.agg(
@@ -751,8 +751,8 @@ def agg_gini_concentration(spark, sf_dir):
 #
 # Scale design (100 TB): one scan -> distinct-cents hash aggregate with
 # summed weights, then operators/ranked.py's range-partition prefix sums (no
-# single-task sort window); each quantile is a one-row min() over the cached
-# frame. The counting-selection operator (operators/quantile.py) remains the
+# single-task sort window); the three quantiles are one-row mins over the
+# prefix-sum frame. The counting-selection operator (operators/quantile.py) remains the
 # constant-memory alternative when even the distinct-value frame is huge.
 # ---------------------------------------------------------------------------
 @register(
@@ -787,13 +787,13 @@ def agg_weighted_median(spark, sf_dir):
     v = t.lineitem.groupBy(
         F.round(F.col("l_extendedprice") * 100).cast("long").alias("cents")
     ).agg(F.sum(F.col("l_quantity").cast("long")).cast("long").alias("w"))
-    pref, totals = ranged_prefix(spark, v, ["cents"], ["w"])
+    pref, totals = ranged_prefix(v, ["cents"], ["w"])
     tw = totals["w"]
 
     # all three quantile picks in ONE aggregation pass over the prefix-sum
     # frame (min of a conditional projection == min over the filtered rows,
     # nulls ignored): the old per-pick filter+agg branches scanned the
-    # cached range-partitioned frame three times and crossJoined the
+    # range-partitioned frame three times and crossJoined the
     # 1-row results (r9 opt; identical values — same cross-multiplied
     # integer membership tests, same mins)
     def pick(num: int, den: int, alias: str):

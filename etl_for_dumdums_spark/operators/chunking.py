@@ -8,8 +8,8 @@ warehouse; an LLM-data pipeline needs context-window-sized pieces). Pure
 column expressions: tokenize once per document, explode only the chunk START
 positions (O(n_tokens / stride) rows per doc, not O(n_tokens)), then slice
 the cached token array per start. No UDFs, no shuffle — chunking is a map;
-the downstream `operators/packing.py` stage handles the (single) shuffle
-into token-budget shards.
+the downstream packing stage (operators/corpus.assign_token_shards) does
+the shuffles into token-budget shards.
 
 Semantics (fully deterministic, engine-exact):
   * tokens = whitespace split of the normalized text (lower, trim, collapse

@@ -150,16 +150,29 @@ def attrition_report(
     )
 
 
-def pack_cleaned_corpus(
-    cleaned: DataFrame, shard_tokens: int = 100_000, n_parts: int = 32
+def assign_token_shards(
+    df: DataFrame, id_col: str, token_col: str, shard_tokens: int
 ) -> DataFrame:
-    """Final pipeline stage: assign the cleaned corpus to contiguous
-    ~shard_tokens shards (operators/packing.py's distributed cumsum) —
-    the manifest a training job reads, ready for
-    ``write_partitioned(df, path, 'shard_id')``."""
-    from .packing import assign_token_shards
+    """Add a ``shard_id`` column: contiguous-by-id greedy packing where a
+    doc belongs to the shard its cumulative END position falls in (shard s
+    covers cumulative tokens (s*B, (s+1)*B]) — the sequence-packing /
+    shard-manifest step before writing training data. The cumulative sum is
+    operators/ranked.ranged_prefix's (no single-task sort window), so the
+    result equals the serial cumsum rule exactly, for any partitioning."""
+    from .ranked import ranged_prefix
 
-    return assign_token_shards(cleaned, "doc_id", "n_tokens", shard_tokens, n_parts)
+    pref, _ = ranged_prefix(df, [id_col], [token_col])
+    cum = f"cum_{token_col}"
+    return pref.withColumn(
+        "shard_id", ((F.col(cum) - 1) / shard_tokens).cast("long")
+    ).drop("_r", cum)
+
+
+def pack_cleaned_corpus(cleaned: DataFrame, shard_tokens: int = 100_000) -> DataFrame:
+    """Final pipeline stage: assign the cleaned corpus to contiguous
+    ~shard_tokens shards (``assign_token_shards``) — the manifest a
+    training job reads, ready for ``write_partitioned(df, path, 'shard_id')``."""
+    return assign_token_shards(cleaned, "doc_id", "n_tokens", shard_tokens)
 
 
 # one order key per chunk for the packing cumsum: supports ~2^20 chunks per
@@ -173,17 +186,14 @@ def chunk_and_pack_corpus(
     chunk_tokens: int = 32,
     stride: int = 24,
     shard_tokens: int = 100_000,
-    n_parts: int = 32,
 ) -> DataFrame:
     """Alternative output stage: chunk the cleaned corpus into overlapping
     token windows (operators/chunking.py) and pack the CHUNKS — not whole
     documents — into contiguous ~``shard_tokens`` shards. This is the
     manifest shape for context-window training where the chunk is the
     example; ``pack_cleaned_corpus`` remains the whole-document variant.
-    Chunking is a pure map; the single shuffle is packing's range
-    repartition."""
+    Chunking is a pure map; the shuffles are the packing cumsum's."""
     from .chunking import chunk_by_tokens
-    from .packing import assign_token_shards
 
     chunks = chunk_by_tokens(
         cleaned, chunk_tokens=chunk_tokens, stride=stride, keep_text=True
@@ -191,4 +201,4 @@ def chunk_and_pack_corpus(
         "chunk_key",
         F.col("doc_id") * _MAX_CHUNKS_PER_DOC + F.col("chunk_id"),
     )
-    return assign_token_shards(chunks, "chunk_key", "n_tok", shard_tokens, n_parts)
+    return assign_token_shards(chunks, "chunk_key", "n_tok", shard_tokens)

@@ -21,6 +21,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..session import local_frame
+
 _DOT = "aggregate(zip_with({a}, {b}, (x, y) -> x * y), CAST(0 AS BIGINT), (acc, x) -> acc + x)"
 _NORM = "aggregate(transform({v}, x -> x * x), CAST(0 AS BIGINT), (acc, x) -> acc + x)"
 # promote float32 components to DOUBLE before the ×1000 so quantization
@@ -220,8 +222,10 @@ def ivf_topk(
         # (query, probed bucket) pairs: rank centroids by exact integer L2
         # against each query vector; tiny (|queries| x k) cross join
         spark = embeddings.sparkSession
-        cent = spark.createDataFrame(
-            [(i, c) for i, c in enumerate(centroids)], ["cbucket", "cvec"]
+        cent = local_frame(
+            spark,
+            [(i, [float(x) for x in c]) for i, c in enumerate(centroids)],
+            "cbucket bigint, cvec array<double>",
         ).select(
             "cbucket",
             F.expr(_IVEC.format(c="cvec")).alias("cv"),

@@ -2,41 +2,48 @@
 
 A ``row_number() OVER (ORDER BY ...)`` (or a running ``SUM``) with no
 PARTITION BY funnels the entire table through ONE task — the
-single-partition-window scale killer. This module generalizes the trick
-win_ntile_deciles / customer_rfm_segments / pack_token_shards already use:
+single-partition-window scale killer. This is the engine's one copy of the
+range-offsets trick:
 
   1. ``repartitionByRange`` on the total order (Spark samples range bounds,
-     so partitions are balanced);
-  2. per-partition ``row_number`` / running ``SUM`` (each partition sorts
+     so partitions are balanced) and collect ONE row per non-empty range
+     partition: its min key, row count and column sums (at most
+     ``_NPARTS`` rows — the documented tiny-by-construction collect);
+  2. the min keys after the first become literal bounds, so a row's range
+     partition is an expression over the row itself (the number of bounds
+     ≤ its key) — range partitions are contiguous in the total order, so
+     this puts every row where its counts were collected;
+  3. per-partition ``row_number`` / running ``SUM`` (each partition sorts
      locally — parallel, spillable);
-  3. collect ONE tiny aggregate row per partition (``nparts`` rows — the
-     documented tiny-by-construction collect) and broadcast the exclusive
-     prefix offsets back;
-  4. global rank / prefix sum = local value + partition offset.
+  4. global rank / prefix sum = local value + the partition's exclusive
+     offset, read from a literal array.
 
 Bit-identical to the serial window at any scale. Callers must pass a total
 order (``order_cols`` must break all ties) or per-partition row numbering is
 nondeterministic.
 
-Consumers: stats_ks_mannwhitney (cumulative sample counts),
-agg_gini_concentration (rank-weighted revenue sums), and any future exact
-order-statistic operator.
+Consumers: aggregations._orderstat_percentiles (agg_global_summary),
+stats_ks_mannwhitney, agg_gini_concentration, agg_weighted_median,
+sketch_histogram_quantile, win_ntile_deciles (closed-form ntile) and
+operators/corpus.assign_token_shards (pack_token_shards).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+_NPARTS = 32
+
+
+def _long_at(values: list[int], idx: Column) -> Column:
+    lits = [F.lit(v).cast("long") for v in values or [0]]
+    return F.element_at(F.array(*lits), idx + 1)
+
 
 def ranged_prefix(
-    spark: SparkSession,
-    df: DataFrame,
-    order_cols: list[str],
-    sum_cols: list[str],
-    nparts: int = 32,
-    pins: list | None = None,
+    df: DataFrame, order_cols: list[str], sum_cols: list[str]
 ) -> tuple[DataFrame, dict[str, int]]:
     """Attach a global 1-based rank ``_r`` and, for each ``c`` in
     ``sum_cols``, an inclusive prefix sum ``cum_<c>`` over the total order
@@ -46,48 +53,45 @@ def ranged_prefix(
 
     ``sum_cols`` must be integer-typed; prefix sums are exact BIGINT.
 
-    Pinned-frame contract: the intermediate range-partitioned frame is
-    cached (consumed twice: the offset collect here, and the downstream
-    plan) and MUST stay pinned until the caller's terminal action — the
-    offsets were collected from ONE evaluation of the (sampled, therefore
-    nondeterministic) range partitioning, and an uncached re-evaluation
-    could re-draw the bounds and misalign the offsets. Release it after
-    the dependent action via either
-      * ``pins``: pass a list and the pinned DataFrame is appended for the
-        caller to ``.unpersist()`` when done (the library-caller path), or
-      * ``spark.catalog.clearCache()`` between queries (what bench.py and
-        tools/check_oracle.py do).
+    Contract: ``df`` must give the same rows each time it is evaluated (an
+    aggregate over files does). The offsets come from one job here and the
+    returned frame evaluates ``df`` again; nothing is cached.
     """
-    ranged = (
-        df.repartitionByRange(nparts, *order_cols)
-        .withColumn("_pid", F.spark_partition_id())
-        .cache()
-    )
-    if pins is not None:
-        pins.append(ranged)
-    aggs = [F.count("*").alias("_n")] + [
+    key = F.struct(*order_cols)
+    aggs = [F.min(key).alias("_lo"), F.count("*").alias("_n")] + [
         F.sum(c).cast("long").alias(f"_s_{c}") for c in sum_cols
     ]
-    part = {r["_pid"]: r for r in ranged.groupBy("_pid").agg(*aggs).collect()}
-    acc_n, acc = 0, {c: 0 for c in sum_cols}
-    offsets = []
-    for pid in sorted(part):
-        offsets.append(tuple([pid, acc_n] + [acc[c] for c in sum_cols]))
-        acc_n += part[pid]["_n"]
-        for c in sum_cols:
-            acc[c] += part[pid][f"_s_{c}"] or 0
-    schema = "_pid int, _off long" + "".join(f", _off_{c} long" for c in sum_cols)
-    off_df = spark.createDataFrame(offsets, schema)
+    parts = sorted(
+        df.repartitionByRange(_NPARTS, *order_cols)
+        .groupBy(F.spark_partition_id().alias("_pid"))
+        .agg(*aggs)
+        .collect(),
+        key=lambda r: r["_pid"],
+    )
+    types = {f.name: f.dataType for f in df.schema.fields}
+    pid = F.lit(0)
+    for p in parts[1:]:
+        bound = F.struct(
+            *[F.lit(v).cast(types[c]).alias(c) for c, v in zip(order_cols, p["_lo"])]
+        )
+        pid = pid + (bound <= key).cast("int")
+    # exclusive offsets per partition index; [0] stands in for an empty df
+    names = ["_n"] + [f"_s_{c}" for c in sum_cols]
+    acc = dict.fromkeys(names, 0)
+    offs: dict[str, list[int]] = {k: [] for k in names}
+    for p in parts:
+        for k in names:
+            offs[k].append(acc[k])
+            acc[k] += p[k] or 0
     wrn = W.partitionBy("_pid").orderBy(*order_cols)
     wcum = wrn.rowsBetween(W.unboundedPreceding, 0)
-    out = ranged.join(F.broadcast(off_df), "_pid").withColumn(
-        "_r", (F.col("_off") + F.row_number().over(wrn)).cast("long")
+    out = df.withColumn("_pid", pid).withColumn(
+        "_r", (_long_at(offs["_n"], F.col("_pid")) + F.row_number().over(wrn)).cast("long")
     )
     for c in sum_cols:
         out = out.withColumn(
             f"cum_{c}",
-            (F.col(f"_off_{c}") + F.sum(c).over(wcum)).cast("long"),
+            (_long_at(offs[f"_s_{c}"], F.col("_pid")) + F.sum(c).over(wcum)).cast("long"),
         )
-    drop = ["_pid", "_off"] + [f"_off_{c}" for c in sum_cols]
-    totals: dict[str, int] = {"_n": acc_n, **{c: int(acc[c]) for c in sum_cols}}
-    return out.drop(*drop), totals
+    totals = {"_n": acc["_n"], **{c: acc[f"_s_{c}"] for c in sum_cols}}
+    return out.drop("_pid"), totals

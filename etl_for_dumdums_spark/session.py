@@ -12,7 +12,8 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType, _parse_datatype_string
 
 
 def get_spark(app_name: str = "etl_for_dumdums_spark") -> SparkSession:
@@ -60,3 +61,19 @@ def get_spark(app_name: str = "etl_for_dumdums_spark") -> SparkSession:
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def local_frame(spark: SparkSession, rows: list, schema: str | StructType) -> DataFrame:
+    """A literal frame of ``rows`` (tuples in ``schema``'s column order),
+    planned as a local relation (``LocalTableScan``). ``createDataFrame`` of
+    a Python list plans as ``Scan ExistingRDD`` and feeds its rows through a
+    Python worker on every evaluation; an Arrow table is shipped once and
+    does neither, whatever the session's Arrow setting."""
+    import pyarrow as pa
+
+    if isinstance(schema, str):
+        schema = _parse_datatype_string(schema)
+    cols = list(zip(*rows)) if rows else [()] * len(schema.names)
+    table = pa.table({n: list(c) for n, c in zip(schema.names, cols)})
+    return spark.createDataFrame(table, schema)
+

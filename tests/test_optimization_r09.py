@@ -514,7 +514,7 @@ def test_ks_mannwhitney_one_pass_matches_two_pass(spark, sf):
         )
         .withColumn("cnt", (F.col("c1") + F.col("c2")).cast("long"))
     )
-    pref, totals = ranged_prefix(spark, v, ["cents"], ["c1", "c2", "cnt"])
+    pref, totals = ranged_prefix(v, ["cents"], ["c1", "c2", "cnt"])
     n1, n2 = totals["c1"], totals["c2"]
     # the pre-r9 two-pass argmax location
     mx = pref.agg(

@@ -2,8 +2,9 @@
 
   * stats_ks_mannwhitney / agg_gini_concentration / agg_weighted_median use
     the ranged-prefix helper: every data-sized Window partitions by _pid
-    (local row_number / local running sum); the total order comes from a
-    RangePartitioning exchange, never a single-task global sort window;
+    (local row_number / local running sum); _pid is the row's range
+    partition, counted against literal bounds that a range-partitioned job
+    collected, never a single-task global sort window;
   * embed_kmeans_lloyd assigns via hash aggregation (min_by), not windows.
 """
 
@@ -23,27 +24,35 @@ def _windows_are_pid_partitioned(plan: str):
         assert "_pid" in m.group(0), m.group(0)
 
 
+def _pid_counts_range_bounds(df):
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    assert re.search(r"<= struct\([^\n]* AS _pid#\d+", plan), plan
+
+
 def test_ks_mwu_windows_are_range_partition_local(spark):
     from etl_for_dumdums_spark.catalog.stats import stats_ks_mannwhitney
 
-    plan = _physical(stats_ks_mannwhitney(spark, SF_SMOKE))
-    assert "rangepartitioning" in plan.lower()
+    df = stats_ks_mannwhitney(spark, SF_SMOKE)
+    plan = _physical(df)
+    _pid_counts_range_bounds(df)
     _windows_are_pid_partitioned(plan)
 
 
 def test_gini_windows_are_range_partition_local(spark):
     from etl_for_dumdums_spark.catalog.stats import agg_gini_concentration
 
-    plan = _physical(agg_gini_concentration(spark, SF_SMOKE))
-    assert "rangepartitioning" in plan.lower()
+    df = agg_gini_concentration(spark, SF_SMOKE)
+    plan = _physical(df)
+    _pid_counts_range_bounds(df)
     _windows_are_pid_partitioned(plan)
 
 
 def test_weighted_median_windows_are_range_partition_local(spark):
     from etl_for_dumdums_spark.catalog.stats import agg_weighted_median
 
-    plan = _physical(agg_weighted_median(spark, SF_SMOKE))
-    assert "rangepartitioning" in plan.lower()
+    df = agg_weighted_median(spark, SF_SMOKE)
+    plan = _physical(df)
+    _pid_counts_range_bounds(df)
     _windows_are_pid_partitioned(plan)
 
 

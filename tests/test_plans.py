@@ -278,3 +278,21 @@ def test_ivf_assignment_is_projection_and_probe_join_broadcasts_queries(spark):
     assert "BroadcastHashJoin" in plan and "BuildLeft" in plan
     # map-side top-k prune before the rank window's exchange
     assert "WindowGroupLimit" in plan and "Partial" in plan
+
+
+def test_no_query_plans_a_python_rdd_scan(spark):
+    """Literal frames are local relations: no registered query's executed
+    plan scans an RDD of Python rows (``Scan ExistingRDD``), which would
+    feed its rows through a Python worker on every evaluation."""
+    from etl_for_dumdums_spark.catalog import EXTRA_QUERIES, SAMPLED_QUERIES
+
+    tiers = {"driver": QUERIES, "extra": EXTRA_QUERIES, "sampled": SAMPLED_QUERIES}
+    offenders = []
+    try:
+        for tier, queries in tiers.items():
+            for name, fn in sorted(queries.items()):
+                if "ExistingRDD" in _plan(fn(spark, SF_SMOKE)):
+                    offenders.append(f"{tier}:{name}")
+    finally:
+        spark.catalog.clearCache()  # storage the queries' own caches hold
+    assert not offenders, offenders

@@ -1,5 +1,5 @@
 """Tests for the session-8 mining wave: span-level dedup, sorted-neighborhood
-blocking, word PMI, inverted index, and RFM segmentation.
+blocking, word PMI, and inverted index.
 
 Each operator is pinned against an independent serial-Python reimplementation
 of its stated rule (not against the DuckDB oracle, which check_oracle already
@@ -165,46 +165,6 @@ def test_inverted_index_matches_serial(spark):
         assert r["df"] == len(postings[t])
         assert r["cf"] == cf[t]
         assert r["postings"] == ",".join(str(d) for d in sorted(postings[t])[:_IDX_P])
-
-
-def test_rfm_equals_native_ntile_window(spark):
-    """The range-partition + offsets quintile scoring must group customers
-    exactly as Spark's own ntile(5) window over the identical order."""
-    from pyspark.sql import functions as F
-
-    from etl_for_dumdums_spark.catalog.mining import _RFM_CUTOFF, customer_rfm_segments
-
-    per_cust = (
-        spark.read.parquet(f"{SF_SMOKE}/orders.parquet")
-        .groupBy("o_custkey")
-        .agg(
-            F.datediff(F.lit(_RFM_CUTOFF).cast("date"), F.max("o_orderdate")).alias(
-                "recency_days"
-            ),
-            F.count("*").alias("n_orders"),
-            F.sum(F.round(F.col("o_totalprice") * 100).cast("long"))
-            .cast("long")
-            .alias("cents"),
-        )
-    )
-    per_cust.createOrReplaceTempView("rfm_base")
-    twin = spark.sql(
-        """
-        SELECT r_score, f_score, m_score, count(*) AS n_customers,
-               round(sum(cents) / (count(*) * CAST(100.0 AS DOUBLE)), 4) AS avg_monetary,
-               CAST(min(recency_days) AS BIGINT) AS min_recency,
-               CAST(max(recency_days) AS BIGINT) AS max_recency
-        FROM (SELECT *,
-                ntile(5) OVER (ORDER BY recency_days, o_custkey) AS r_score,
-                ntile(5) OVER (ORDER BY n_orders, o_custkey)     AS f_score,
-                ntile(5) OVER (ORDER BY cents, o_custkey)        AS m_score
-              FROM rfm_base)
-        GROUP BY r_score, f_score, m_score
-        ORDER BY r_score, f_score, m_score
-        """
-    ).collect()
-    got = customer_rfm_segments(spark, SF_SMOKE).collect()
-    assert [tuple(r) for r in got] == [tuple(r) for r in twin]
 
 
 def test_snb_window_is_block_partitioned(spark):

@@ -115,23 +115,6 @@ def test_cusum_matches_serial(spark):
     assert row["regime"] == ("below_mean" if best_ns < 0 else "above_mean")
 
 
-def test_ranged_prefix_matches_serial_window(spark):
-    """The shared rank/prefix helper must be bit-identical to the serial rule
-    for an adversarial partition count (more partitions than rows included)."""
-    from etl_for_dumdums_spark.operators.ranked import ranged_prefix
-
-    rows = [(i % 7, i, (i * 37) % 100) for i in range(50)]
-    df = spark.createDataFrame(rows, "k long, i long, x long")
-    out, totals = ranged_prefix(spark, df, ["k", "i"], ["x"], nparts=16)
-    got = {(r["k"], r["i"]): (r["_r"], r["cum_x"]) for r in out.collect()}
-    srt = sorted(rows, key=lambda r: (r[0], r[1]))
-    cum = 0
-    for rank, (k, i, x) in enumerate(srt, start=1):
-        cum += x
-        assert got[(k, i)] == (rank, cum)
-    assert totals["_n"] == 50 and totals["x"] == sum(r[2] for r in rows)
-
-
 def test_weighted_median_matches_serial(spark):
     from etl_for_dumdums_spark.catalog.stats import agg_weighted_median
 

@@ -327,8 +327,8 @@ def main():
         else:
             print(f"FAIL {name}: " + " | ".join(msgs))
             n_fail += 1
-        # drop caches the query pinned (ranged_prefix's range-partitioned
-        # frame, LSH candidate sets, …): a full-catalog sweep would
+        # drop caches the query pinned (sketch_histogram_quantile's
+        # histogram, LSH candidate sets, …): a full-catalog sweep would
         # otherwise accumulate dozens of cached RDDs and lean on LRU
         # eviction under memory pressure (r3 advice finding #4)
         if not os.environ.get("SPARK_GRAFT_STOP_SPARK_BEFORE_ORACLE"):
