@@ -11,8 +11,9 @@ range-offsets trick:
      ``_NPARTS`` rows — the documented tiny-by-construction collect);
   2. the min keys after the first become literal bounds, so a row's range
      partition is an expression over the row itself (the number of bounds
-     ≤ its key) — range partitions are contiguous in the total order, so
-     this puts every row where its counts were collected;
+     ≤ its key, found by binary search) — range partitions are contiguous
+     in the total order, so this puts every row where its counts were
+     collected;
   3. per-partition ``row_number`` / running ``SUM`` (each partition sorts
      locally — parallel, spillable);
   4. global rank / prefix sum = local value + the partition's exclusive
@@ -42,6 +43,20 @@ def _long_at(values: list[int], idx: Column) -> Column:
     return F.element_at(F.array(*lits), idx + 1)
 
 
+def _range_index(key: Column, bounds: list[Column]) -> Column:
+    """The number of ``bounds`` (ascending) that are <= ``key``, found by
+    binary search: log2(len(bounds)) struct comparisons per row instead of
+    one per bound."""
+
+    def search(lo: int, hi: int) -> Column:  # the answer lies in [lo, hi]
+        if lo == hi:
+            return F.lit(lo)
+        mid = (lo + hi + 1) // 2
+        return F.when(bounds[mid - 1] <= key, search(mid, hi)).otherwise(search(lo, mid - 1))
+
+    return search(0, len(bounds))
+
+
 def ranged_prefix(
     df: DataFrame, order_cols: list[str], sum_cols: list[str]
 ) -> tuple[DataFrame, dict[str, int]]:
@@ -69,12 +84,10 @@ def ranged_prefix(
         key=lambda r: r["_pid"],
     )
     types = {f.name: f.dataType for f in df.schema.fields}
-    pid = F.lit(0)
-    for p in parts[1:]:
-        bound = F.struct(
-            *[F.lit(v).cast(types[c]).alias(c) for c, v in zip(order_cols, p["_lo"])]
-        )
-        pid = pid + (bound <= key).cast("int")
+    bounds = [
+        F.struct(*[F.lit(v).cast(types[c]).alias(c) for c, v in zip(order_cols, p["_lo"])])
+        for p in parts[1:]
+    ]
     # exclusive offsets per partition index; [0] stands in for an empty df
     names = ["_n"] + [f"_s_{c}" for c in sum_cols]
     acc = dict.fromkeys(names, 0)
@@ -85,7 +98,7 @@ def ranged_prefix(
             acc[k] += p[k] or 0
     wrn = W.partitionBy("_pid").orderBy(*order_cols)
     wcum = wrn.rowsBetween(W.unboundedPreceding, 0)
-    out = df.withColumn("_pid", pid).withColumn(
+    out = df.withColumn("_pid", _range_index(key, bounds)).withColumn(
         "_r", (_long_at(offs["_n"], F.col("_pid")) + F.row_number().over(wrn)).cast("long")
     )
     for c in sum_cols:
